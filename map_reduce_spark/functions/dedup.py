@@ -532,7 +532,8 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pairs query recomputed the 64 vote aggregates from raw text
     (the r1 bench showed the duplicated cost). A fingerprint table is
     an index: built once, queried many times — persisting it is the
-    batch analogue of writing the index out.
+    batch analogue of writing the index out. No SQL oracle is possible:
+    Spark-internal xxhash64 isn't reproducible in DuckDB.
     """
     docs = load_spread(spark, sf_dir, "documents")
     # hash hoisted to its own projection so it's computed once per
@@ -559,22 +560,6 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit(0).cast("long"))
         fingerprint = bit if fingerprint is None else fingerprint.bitwiseOR(bit)
     return voted.select("doc_id", fingerprint.alias("simhash"))
-
-
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash fingerprint per document (bitwise token majority).
-
-    Each token hashes to 64 bits (xxhash64); each bit votes +1/-1
-    weighted by token frequency; the sign vector is the fingerprint.
-    Decomposable (64 sums) -> one map-side-combined shuffle on doc_id.
-
-    Not separately registered: ``dedup_simhash_pairs`` drives the same
-    fingerprint builder through the driver gate, and pytest verifies
-    the fingerprints directly (hamming-near pairs vs exact Jaccard
-    ground truth). No SQL oracle is possible either way —
-    Spark-internal xxhash64 isn't reproducible in DuckDB.
-    """
-    return simhash_fingerprints(spark, sf_dir).orderBy("doc_id")
 
 
 SIMHASH_HAMMING_MAX = 6

@@ -25,8 +25,8 @@ it"):
   zero-Exchange co-bucketed sum, so maintenance never rewrites the
   vocabulary, and the hot list is derived fresh each probe.
 
-Per-batch cost decomposition (the design claim the ladder measures,
-tools/ingest_ladder.py):
+Per-batch cost decomposition (the design claim the ladder measured,
+INGEST_LADDER_r09.json):
 
 - NETWORK: batch-proportional. Probe joins are one-sided — the batch
   side shuffles into the index's bucket layout; the bucketed sides

@@ -1006,20 +1006,6 @@ def sample_frames(media: DataFrame, every_ms: int = 5000) -> DataFrame:
     return media.filter(media.kind == "video").mapInPandas(batches, FRAMES_SCHEMA)
 
 
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregation — never touches payload bytes, so the
-    scan prunes the binary column entirely (check ReadSchema)."""
-    return (
-        media.groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.avg("width").alias("avg_width"),
-            F.avg("duration_ms").alias("avg_duration_ms"),
-        )
-        .orderBy("kind")
-    )
-
-
 @register("media_feature_stats", oracle_sql=None)
 def media_feature_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-class multimodal query: synthetic media table ->

@@ -24,8 +24,7 @@ State:
   ingest (the with_norm hoist), so steady-state probes never touch
   float32 payloads or recompute norms.
 
-Per-batch cost decomposition (measured by tools/sim_ingest_ladder.py,
-SIM_INGEST_LADDER_r11.json):
+Per-batch cost decomposition (measured in SIM_INGEST_LADDER_r12.json):
 
 - PROBE: batch's probe vectors are assigned to their n_probe nearest
   cells against the frozen centroids (map-only, centroids folded in

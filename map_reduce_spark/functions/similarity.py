@@ -69,14 +69,6 @@ def _dbl_array_sql(values: list[float]) -> str:
     return "array(" + ", ".join(f"{float(x)!r}D" for x in values) + ")"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity via zip_with + aggregate (sequential fold,
-    same evaluation order as the DuckDB oracle's list functions)."""
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot(a, b) / (na * nb)
-
-
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
@@ -101,7 +93,8 @@ def dot_nc(a: str, b: str) -> Column:
 
 def _sqnorm_sql(col: str) -> str:
     """SQL spelling of the L2 norm fold over a named array column —
-    same op order as the ``cosine``/``with_norm`` lambdas."""
+    a sequential fold, the same evaluation order as the DuckDB oracle's
+    list functions."""
     return f"sqrt(aggregate(`{col}`, 0.0D, (acc, v) -> acc + v * v))"
 
 
@@ -110,8 +103,8 @@ def with_norm(df: DataFrame, vec_col: str, dv_col: str, norm_col: str) -> DataFr
 
     Every pairwise-cosine operator hoists norms through this BEFORE the
     pair join: norms cost O(n) once instead of O(pairs) inside the
-    join, leaving one dot product as the only per-pair work. Same
-    float-op order as cosine(), so scores are bit-identical."""
+    join, leaving one dot product as the only per-pair work. Every
+    path uses the same ``_sqnorm_sql`` fold, so scores are bit-identical."""
     df = df.withColumn(dv_col, _dvec(vec_col))
     # F.expr spelling of the same fold — see dot_nc (r12 driver-side
     # round-trip economy; bit-identical expression tree).

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map_reduce_spark.operators.text_rel import doc_toks, tokens_col
+from map_reduce_spark.operators.text_rel import doc_toks
 from map_reduce_spark.plans.transient import ordered_result, transient_persist
 from map_reduce_spark.registry import register
 from map_reduce_spark.sources import load_spread, load_table, session_cached
@@ -110,8 +110,8 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fuses the r1 queries ``doc_langid`` / ``doc_token_stats`` /
     ``doc_quality_score`` into one registered query (the component
-    expressions are unchanged; ``langid_pred_col``/``doc_langid``
-    below keep the standalone surface). Fusing is the scale-correct
+    expressions are unchanged; ``langid_pred_col`` below is the
+    language-ID expression). Fusing is the scale-correct
     shape: a 100 TB curation pass computes every cheap per-doc signal
     in a single narrow projection over the ingest scan — one pass,
     zero shuffles — instead of re-reading the corpus once per signal.
@@ -162,17 +162,6 @@ def langid_pred_col() -> Column:
         .when(c["de"] >= c["fr"], "de")
         .otherwise("fr")
     )
-
-
-def doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone language-ID projection (fused into ``doc_profile``
-    for the registered/driver-checked surface; kept for direct use)."""
-    docs = doc_toks(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        langid_pred_col().alias("pred_lang"),
-        *[_hits(lang).alias(f"{lang}_hits") for lang in LANG_ORDER],
-    ).orderBy("doc_id")
 
 
 @register(

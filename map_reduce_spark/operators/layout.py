@@ -54,12 +54,6 @@ def _quantize_sql(col: str, mn: str, mx: str, intdiv: str) -> str:
     return f"((({col} - {mn}) * {(1 << ZBITS) - 1}) {intdiv} {span})"
 
 
-def zorder_value_spark(xq: str, yq: str) -> F.Column:
-    return F.expr(
-        _interleave_sql(xq, yq, lambda e, n: f"shiftleft({e}, {n})")
-    )
-
-
 def _zorder_oracle() -> str:
     q = "SELECT l_partkey, l_suppkey,\n"
     qx = _quantize_sql("l_partkey", "(SELECT min(l_partkey) FROM lineitem)",

@@ -290,34 +290,6 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def join_semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join (EXISTS): customers that have at least one order.
-
-    Scale: semi-join needs only the distinct o_custkey set from the
-    probe side — Spark builds/broadcasts the keys, never materializes
-    matched rows.
-    """
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("c_mktsegment")
-    )
-
-
-def join_anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join (NOT EXISTS): customers with no orders at all."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .select("c_custkey", "c_name", "c_mktsegment")
-        .orderBy("c_custkey")
-    )
-
-
 @register(
     "join_outer_order_fill",
     oracle_sql="""
@@ -374,22 +346,6 @@ def agg_rollup_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows",
         )
         .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def agg_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over order status x priority (all 4 grouping sets)."""
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"), F.round(F.sum("o_totalprice"), 2).alias("total_price"))
-        .select(
-            F.coalesce("o_orderstatus", F.lit("<ALL>")).alias("o_orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("<ALL>")).alias("o_orderpriority"),
-            "n_orders",
-            "total_price",
-        )
-        .orderBy("o_orderstatus", "o_orderpriority")
     )
 
 
@@ -468,25 +424,6 @@ def topk_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("o_totalprice"), "o_orderkey")
         .limit(15)
-    )
-
-
-def scalar_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar string expression coverage (upper/length/substr/concat/replace).
-
-    All JVM-side whole-stage-codegen expressions — no UDFs.
-    """
-    cust = _t(spark, sf_dir, "customer")
-    return (
-        cust.select(
-            "c_custkey",
-            F.upper("c_name").alias("name_upper"),
-            F.length("c_name").alias("name_len"),
-            F.substring("c_name", 1, 8).alias("name_prefix"),
-            F.concat_ws(":", "c_mktsegment", F.col("c_nationkey").cast("string")).alias("seg_nation"),
-            F.replace(F.lower("c_mktsegment"), F.lit("a"), F.lit("_")).alias("seg_mangled"),
-        )
-        .orderBy("c_custkey")
     )
 
 
@@ -727,25 +664,4 @@ def agg_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("_mx", 2).alias("max_price"),
         )
         .transform(ordered_result, "l_returnflag")
-    )
-
-
-def agg_conditional_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot via conditional aggregation (the scale-safe pivot form).
-
-    Explicit CASE-per-bucket keeps the pivot decomposable and avoids
-    ``.pivot()``'s distinct-value discovery pass over 100 TB.
-    """
-    li = _t(spark, sf_dir, "lineitem")
-    qty_if = lambda status: F.sum(  # noqa: E731
-        F.when(F.col("l_linestatus") == status, F.col("l_quantity")).otherwise(F.lit(0.0))
-    )
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(qty_if("O"), 2).alias("qty_open"),
-            F.round(qty_if("F"), 2).alias("qty_filled"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .orderBy("l_returnflag")
     )

@@ -291,26 +291,6 @@ def agg_mode_and_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def window_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percent_rank / cume_dist / first_value over supplier revenue."""
-    li = load_table(spark, sf_dir, "lineitem")
-    rev = li.groupBy(F.col("l_suppkey").alias("s_suppkey")).agg(
-        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("supp_rev")
-    )
-    w_asc = W.orderBy("supp_rev", "s_suppkey")
-    w_desc = W.orderBy(F.desc("supp_rev"), F.asc("s_suppkey"))
-    return (
-        rev.select(
-            "s_suppkey",
-            F.round("supp_rev", 2).alias("supp_rev"),
-            F.round(F.percent_rank().over(w_asc), 6).alias("pct_rank"),
-            F.round(F.cume_dist().over(w_asc), 6).alias("cume"),
-            F.first_value("s_suppkey").over(w_desc).alias("top_supp"),
-        )
-        .orderBy("s_suppkey")
-    )
-
-
 @register(
     "null_handling_acctbal",
     oracle_sql="""

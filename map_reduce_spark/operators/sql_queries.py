@@ -24,23 +24,6 @@ def _sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     return spark.sql(query)
 
 
-def sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (neither pure rollup nor cube)."""
-    return _sql(
-        spark,
-        sf_dir,
-        """
-        SELECT coalesce(l_returnflag, '<ALL>') AS l_returnflag,
-               coalesce(l_linestatus, '<ALL>') AS l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               count(*) AS n_rows
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        ORDER BY l_returnflag, l_linestatus
-        """,
-    )
-
-
 @register(
     "sql_cte_top_customers",
     oracle_sql="""
@@ -107,22 +90,6 @@ def sql_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT 1 FROM lineitem
             WHERE l_partkey = p_partkey AND l_discount > 0.09)
         ORDER BY p_partkey
-        """,
-    )
-
-
-def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar subquery in a predicate (broadcast single-row join)."""
-    return _sql(
-        spark,
-        sf_dir,
-        """
-        SELECT o_orderkey, round(o_totalprice, 2) AS o_totalprice,
-               o_orderpriority
-        FROM orders
-        WHERE o_totalprice > 1.9 * (SELECT avg(o_totalprice) FROM orders)
-        ORDER BY o_totalprice DESC, o_orderkey
-        LIMIT 25
         """,
     )
 

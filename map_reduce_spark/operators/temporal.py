@@ -200,9 +200,9 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_props_from_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed JSON parsing: from_json with an explicit schema (vs the
-    per-path get_json_object in events_json_props). One parse per row
-    regardless of how many fields are read — the scale-correct form.
+    """Typed JSON parsing: from_json with an explicit schema (vs a
+    per-path get_json_object). One parse per row regardless of how
+    many fields are read — the scale-correct form.
     """
     ev = load_table(spark, sf_dir, "events")
     parsed = ev.withColumn("p", F.from_json("props", "k LONG"))

@@ -27,10 +27,6 @@ def count_broadcast_joins(df: DataFrame) -> int:
     return physical_plan(df).count("BroadcastHashJoin")
 
 
-def count_shuffles(df: DataFrame) -> int:
-    return physical_plan(df).count("Exchange")
-
-
 def reads_columns(df: DataFrame, table_hint: str | None = None) -> list[str]:
     """Columns actually read from scans (column-pruning check).
 

@@ -35,7 +35,6 @@ only changes small-corpus plans, where it restores AQE's freedom.
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -130,15 +129,6 @@ def merge_when_big_bytes(
 
 
 def _apply(df: DataFrame, spark: SparkSession, est: float) -> DataFrame:
-    # A/B toggle for the r12 pricing study (SF_HINT_AB artifacts):
-    # "unconditional" reproduces the r11 always-hint policy,
-    # "never" disables the hint entirely (measurement only — NOT a
-    # production mode; it reintroduces the OOM class at scale).
-    mode = os.environ.get("MRS_MERGE_HINT_MODE", "gated")
-    if mode == "unconditional":
-        return df.hint("merge")
-    if mode == "never":
-        return df
     if est > broadcast_threshold_bytes(spark):
         return df.hint("merge")
     return df

@@ -78,11 +78,8 @@ def get_spark(
         # KB each), so the ceiling is bounded by ~100-200 MB on the
         # 16 GB driver heap. A production long-running session
         # (Thrift server / serving loop) raises this for exactly the
-        # same reason; env-overridable for smaller hosts.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        # same reason.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

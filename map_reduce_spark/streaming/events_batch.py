@@ -115,31 +115,6 @@ def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON extraction from the props column + bucketed aggregation.
-
-    get_json_object is JVM-side (Jackson); for a fixed schema at scale
-    prefer from_json with an explicit StructType once per pipeline.
-
-    Not separately registered: ``events_props_from_json`` (the
-    from_json/StructType variant in operators/temporal.py) carries the
-    JSON-function surface through the driver gate.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        ev.select(k.alias("k_val"), (k % 10).alias("k_bucket"), "value")
-        .groupBy("k_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.avg("value"), 4).alias("avg_value"),
-            F.min("k_val").alias("min_k"),
-            F.max("k_val").alias("max_k"),
-        )
-        .orderBy("k_bucket")
-    )
-
-
 @register(
     "events_type_funnel",
     oracle_sql="""

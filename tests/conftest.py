@@ -5,7 +5,10 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the package, and tools/ for the tests of tools/make_sf1.py and
+# tools/check_oracle.compare
+sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 from map_reduce_spark.session import get_spark
 

@@ -1,49 +1,19 @@
-"""Smoke coverage for un-registered builder functions.
+"""Smoke coverage for the un-registered reference twins.
 
-Round 2 consolidated near-duplicate registry entries into their
-strongest representative (see registry._CHECK_FIRST); the retired
-builders remain part of the module surface. This test keeps every one
-of them runnable — a builder that silently breaks is dead code, which
-is worse than either re-registering or deleting it.
+These builders are not in the registry; other tests compare registered
+queries against them, so each must keep running on its own.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from map_reduce_spark.functions.dedup import dedup_embedding_cosine, dedup_simhash
-from map_reduce_spark.functions.text import doc_langid
-from map_reduce_spark.operators.relational import (
-    agg_cube_orders,
-    agg_conditional_pivot,
-    join_anti_customers_without_orders,
-    join_semi_customers_with_orders,
-    scalar_string_functions,
-)
-from map_reduce_spark.operators.relational2 import window_percent_rank_cume
-from map_reduce_spark.operators.sql_queries import (
-    sql_grouping_sets,
-    sql_scalar_subquery,
-)
-from map_reduce_spark.streaming.events_batch import (
-    events_json_props,
-    events_tumbling_1h,
-)
+from map_reduce_spark.functions.dedup import dedup_embedding_cosine
+from map_reduce_spark.streaming.events_batch import events_tumbling_1h
 
 # builder -> minimum expected row count at sf0.001
 UNREGISTERED = [
-    (join_semi_customers_with_orders, 1),
-    (join_anti_customers_without_orders, 0),
-    (agg_cube_orders, 4),
-    (agg_conditional_pivot, 1),
-    (scalar_string_functions, 100),
-    (window_percent_rank_cume, 10),
-    (sql_grouping_sets, 3),
-    (sql_scalar_subquery, 5),
-    (events_json_props, 1),
     (events_tumbling_1h, 1),
-    (doc_langid, 100),
-    (dedup_simhash, 100),
     (dedup_embedding_cosine, 1),
 ]
 

@@ -11,9 +11,9 @@ from map_reduce_spark.functions.dedup import (
     JACCARD_THRESHOLD,
     dedup_minhash_lsh,
     dedup_ngram_jaccard_pairs,
-    dedup_simhash,
     dedup_simhash_pairs,
     shingles_col,
+    simhash_fingerprints,
 )
 from pyspark.sql import functions as F
 
@@ -83,8 +83,10 @@ def test_minhash_jaccard_values_match_exact(spark, sf_dir):
 
 
 def test_simhash_deterministic(spark, sf_dir):
-    a = {r.doc_id: r.simhash for r in dedup_simhash(spark, sf_dir).collect()}
-    b = {r.doc_id: r.simhash for r in dedup_simhash(spark, sf_dir).collect()}
+    # __wrapped__: two independent builds, not one session-cached frame
+    build = simhash_fingerprints.__wrapped__
+    a = {r.doc_id: r.simhash for r in build(spark, sf_dir).collect()}
+    b = {r.doc_id: r.simhash for r in build(spark, sf_dir).collect()}
     assert a == b
     assert len(a) > 0
 

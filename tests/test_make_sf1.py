@@ -10,11 +10,7 @@ replica 27 collided with replica 1).
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo/tools")
-
-from make_sf1 import mutate_text  # noqa: E402
+from make_sf1 import mutate_text
 
 TEXT = "the quick brown fox jumps over the lazy dog again and again"
 

@@ -16,7 +16,6 @@ from map_reduce_spark.functions.multimodal import (
     encode_bmp,
     encode_wav,
     extract_features,
-    media_stats,
     resize_images,
     sample_frames,
     synthetic_media,
@@ -344,12 +343,6 @@ def test_png_features_match_equivalent_bmp():
     f_png = MediaDecoder.features(encode_png(px), "image")
     f_bmp = MediaDecoder.features(encode_bmp(px), "image")
     assert np.array_equal(f_png, f_bmp)
-
-
-def test_media_stats_metadata_only(spark):
-    media = synthetic_media(spark, n=30)
-    rows = {r.kind: r.n_items for r in media_stats(media).collect()}
-    assert rows == {"image": 10, "audio": 10, "video": 10}
 
 
 def test_resize_bounds_dimensions_and_prunes_payload(spark):

@@ -5,8 +5,8 @@ assertions — the scale properties, not just the answers.
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
+from check_oracle import compare
 
 from map_reduce_spark.plans.explain import (
     count_broadcast_joins,
@@ -24,27 +24,12 @@ SPOT_CHECK = [
 ]
 
 
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    if len(df):
-        df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df.reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", SPOT_CHECK)
 def test_oracle_spot_check(spark, duck, sf_dir, name):
     spec = load_all()[name]
-    got = canon(spec.builder(spark, sf_dir).toPandas())
-    want = canon(duck.execute(spec.oracle_sql).df())
-    assert sorted(got.columns) == sorted(want.columns)
-    assert len(got) == len(want)
-    for col in got.columns:
-        g, w = got[col], want[col]
-        if g.dtype != w.dtype:
-            g, w = g.astype("float64"), w.astype("float64")
-        assert (
-            (g.values == w.values) | (pd.isna(g).values & pd.isna(w).values)
-        ).all(), f"{name}.{col} mismatch"
+    got = spec.builder(spark, sf_dir).toPandas()
+    want = duck.execute(spec.oracle_sql).df()
+    assert compare(name, got, want) == []
 
 
 def test_every_query_has_doc_and_runs(spark, sf_dir):

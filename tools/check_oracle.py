@@ -14,13 +14,14 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from map_reduce_spark.plans.transient import release_transient  # noqa: E402
 from map_reduce_spark.registry import load_all  # noqa: E402
