@@ -6,9 +6,10 @@ applied at worker.go:39-44). Reproducing it exactly lets the compat
 layer match the reference's *per-partition* file layout, not just the
 global multiset observable.
 
-Pure Python on purpose: it is used as an RDD partitioner function
-(driver-serialized, executed per record JVM->Python only on the
-compat path — the native engine never routes through it).
+Pure Python on purpose: it is the partitioner of the compat job's
+``groupByKey`` (driver-serialized, executed once per distinct key per
+map task, after the map-side list combine — the native engine never
+routes through it).
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ def ihash(key: str) -> int:
 
 
 def make_partitioner(n_reduce: int):
-    """Partitioner fn for RDD.partitionBy — key -> reduce bucket."""
+    """Partitioner fn for RDD.groupByKey — key -> reduce bucket."""
 
     def part(key: str) -> int:
         return ihash(key) % n_reduce

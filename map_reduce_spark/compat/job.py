@@ -3,14 +3,22 @@
 Semantics reproduced (SURVEY.md §2.1 operator table):
 
 - E1 whole-file scan: one record ``(filename, contents)`` per input
-  file (worker.go:78-86) -> ``sc.wholeTextFiles``.
+  file (worker.go:78-86) -> ``sc.wholeTextFiles`` with
+  ``minPartitions=defaultParallelism``, so the map stage runs on
+  every core rather than the default 2 tasks.
 - E2 map: ``map_fn(filename, contents) -> [(key, value)]``
   (worker.go:87) -> ``flatMap``.
 - E3 hash partition: FNV-32a & 0x7fffffff mod n_reduce
-  (worker.go:32-44) -> RDD ``partitionBy`` with the exact hash.
-- E6 per-partition ascending byte-wise key sort (worker.go:117).
-- E7 sort-based group + ``reduce_fn(key, [values]) -> value`` called
-  once per distinct key with ALL values (worker.go:121-137).
+  (worker.go:32-44) -> ``groupByKey`` with the exact hash as its
+  partitioner. Values are first collected into per-key lists
+  map-side (PySpark's list combiner, spilling under
+  ``spark.python.worker.memory``), so the hash runs once per distinct
+  key per map task and one record per key crosses the shuffle.
+- E6 per-partition ascending byte-wise key sort (worker.go:117) ->
+  sort of the partition's distinct keys.
+- E7 ``reduce_fn(key, [values]) -> value`` called once per distinct
+  key with ALL values (worker.go:121-137); ``reduce_fn`` never runs
+  map-side, so it sees the same value multiset as in the reference.
 - E8 text sink ``"<key> <value>\\n"`` per line, one file
   ``mr-out-<r>`` per reduce partition (worker.go:118-138).
 
@@ -21,11 +29,12 @@ Spark's DAG scheduler, task retry, and output committer; nothing to
 build (SURVEY.md §4.1).
 
 Scale note: ``reduce_fn`` receives the *complete* value list for a
-key, exactly like the reference — which makes the compat path a
-``groupByKey`` with unbounded per-key state. That is faithful but
-anti-scale; the native engine (operators/, functions/) uses
-decomposable aggregates instead. The compat layer is for running
-existing reference workloads unchanged.
+key, exactly like the reference, so the compat path holds unbounded
+per-key state. The map-side list combine cuts the shuffle's record
+count, not that state: a key's value list is as long as its number of
+emitted pairs. That is faithful but anti-scale; the native engine
+(operators/, functions/) uses decomposable aggregates instead. The
+compat layer is for running existing reference workloads unchanged.
 """
 
 from __future__ import annotations
@@ -33,19 +42,21 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Callable, Iterable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from operator import itemgetter
 
 from pyspark.sql import SparkSession
 
-from map_reduce_spark.compat.fnv import ihash, make_partitioner
+from map_reduce_spark.compat.fnv import make_partitioner
 
 MapFn = Callable[[str, str], list[tuple[str, str]]]
 ReduceFn = Callable[[str, list[str]], str]
 
 
 def _sort_group_reduce(reduce_fn: ReduceFn):
-    """Per-partition: sort by key, group contiguous runs, reduce once
-    per distinct key — the exact loop of worker.go:117-137."""
+    """Sort by key, group contiguous runs, reduce once per distinct
+    key — the exact loop of worker.go:117-137. The body of
+    ``run_sequential()``; ``run()`` groups through the shuffle."""
 
     def run(records: Iterable[tuple[str, str]]) -> Iterable[str]:
         kva = sorted(records, key=lambda kv: kv[0])
@@ -57,6 +68,17 @@ def _sort_group_reduce(reduce_fn: ReduceFn):
             values = [kv[1] for kv in kva[i:j]]
             yield f"{kva[i][0]} {reduce_fn(kva[i][0], values)}"
             i = j
+
+    return run
+
+
+def _sorted_reduce(reduce_fn: ReduceFn):
+    """Per reduce partition of ``(key, values)`` groups: ascending key
+    order, one ``reduce_fn`` call per distinct key."""
+
+    def run(groups: Iterable[tuple[str, Iterable[str]]]) -> Iterable[str]:
+        for key, values in sorted(groups, key=itemgetter(0)):
+            yield f"{key} {reduce_fn(key, list(values))}"
 
     return run
 
@@ -94,11 +116,12 @@ class MapReduceJob:
         tmp_dir = os.path.join(out_dir, "_mr_tmp")
         shutil.rmtree(tmp_dir, ignore_errors=True)
         os.makedirs(out_dir, exist_ok=True)
+        sc = spark.sparkContext
         (
-            spark.sparkContext.wholeTextFiles(self._input_glob())
+            sc.wholeTextFiles(self._input_glob(), minPartitions=sc.defaultParallelism)
             .flatMap(lambda fc: map_fn(os.path.basename(fc[0]), fc[1]))
-            .partitionBy(n_reduce, make_partitioner(n_reduce))
-            .mapPartitions(_sort_group_reduce(reduce_fn))
+            .groupByKey(n_reduce, make_partitioner(n_reduce))
+            .mapPartitions(_sorted_reduce(reduce_fn))
             .saveAsTextFile(tmp_dir)
         )
         all_lines: list[str] = []
@@ -109,8 +132,9 @@ class MapReduceJob:
                 os.replace(part, dest)
             else:  # empty partition still gets an (empty) output file
                 open(dest, "w").close()
-            with open(dest, encoding="utf-8") as f:
-                all_lines.extend(line.rstrip("\n") for line in f if line.strip())
+            # every "%v %v\n" line, blank-looking or holding a "\r" too
+            with open(dest, encoding="utf-8", newline="\n") as f:
+                all_lines.extend(line.removesuffix("\n") for line in f)
         shutil.rmtree(tmp_dir, ignore_errors=True)
         return all_lines
 

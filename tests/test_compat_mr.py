@@ -78,7 +78,7 @@ def test_output_file_layout(spark, corpus, tmp_path):
         spark, str(out)
     )
     files = sorted(os.listdir(out))
-    assert files == [f"mr-out-{r}" for r in range(10)][: len(files)] or len(files) == 10
+    assert files == [f"mr-out-{r}" for r in range(10)]
     for r in range(10):
         lines = (out / f"mr-out-{r}").read_text().splitlines()
         keys = [line.split(" ")[0] for line in lines]
@@ -237,10 +237,39 @@ def test_exactly_once_map_execution(spark, corpus, tmp_path):
     assert acc.value == 6  # one map invocation per input file
 
 
-def test_parallelism_probe(spark, corpus, tmp_path):
-    """mtiming/rtiming analogue: the job actually runs with >1
-    concurrent task slot (SURVEY.md §5.3.4)."""
-    assert spark.sparkContext.defaultParallelism >= 2
+def test_parallelism_probe(spark, tmp_path):
+    """mtiming analogue (test-mr.sh:147-174): with 2x as many equal-size
+    input files as task slots, the map stage runs on every slot — the
+    output names at least defaultParallelism distinct map tasks."""
+    from pyspark import TaskContext
+
+    slots = spark.sparkContext.defaultParallelism
+    for i in range(2 * slots):
+        (tmp_path / f"in-{i}.txt").write_text("x " * 100, encoding="utf-8")
+
+    def task_map(filename: str, contents: str):
+        return [(f"task-{TaskContext.get().partitionId()}", "1")]
+
+    lines = MapReduceJob(
+        f"{tmp_path}/in-*.txt", task_map, lambda k, vs: str(len(vs))
+    ).run(spark, str(tmp_path / "out"))
+    tasks = {line.split(" ")[0] for line in lines}
+    assert len(tasks) >= slots, f"map stage ran as {len(tasks)} tasks, {slots} slots"
+
+
+def test_output_keeps_blank_and_cr_lines(spark, tmp_path):
+    """run() returns every "%v %v\\n" line run_sequential() does: an
+    empty key and value give the line " ", and a "\\r" inside a value
+    does not split its line."""
+    (tmp_path / "in.txt").write_text("abc", encoding="utf-8")
+    cases = {
+        "empty": (lambda fn, c: [("", "")], [" "]),
+        "cr": (lambda fn, c: [("a", "x\ry"), ("b", "z")], ["a x\ry", "b z"]),
+    }
+    for name, (map_fn, want) in cases.items():
+        job = MapReduceJob(f"{tmp_path}/in.txt", map_fn, lambda k, vs: vs[0], n_reduce=3)
+        assert sorted_output(job.run_sequential()) == want
+        assert sorted_output(job.run(spark, str(tmp_path / name))) == want
 
 
 # ---------------------------------------------------------------------------
