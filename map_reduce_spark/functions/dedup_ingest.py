@@ -8,8 +8,9 @@ probes them with the micro-batch. Its r8 batch-share ladder
 — which is exactly why a production ingest loop does not rebuild: it
 MAINTAINS the two indexes as persistent artifacts and pays only the
 batch's delta each round. This module is that shape (r8 verdict
-item 5), built on the repo's bucketed-layout machinery
-(sources/bucketed.py):
+item 5); its table lifecycle — bucketed appends, tombstones,
+compaction and the verdict log — is ``sources/bucketed.BucketedState``,
+shared with the ANN ingest index (sim_ingest.py):
 
 State (managed bucketed parquet tables — the Spark spelling of "the
 index lives pre-partitioned by probe key, so probes never shuffle
@@ -66,6 +67,7 @@ from map_reduce_spark.functions.dedup import (
 from map_reduce_spark.operators.text_rel import tokens_col
 from map_reduce_spark.registry import register
 from map_reduce_spark.sources import load_spread, session_cached
+from map_reduce_spark.sources.bucketed import BucketedState
 
 
 def _doc_sh(docs: DataFrame) -> DataFrame:
@@ -177,34 +179,22 @@ def incremental_verdicts(existing: DataFrame, batch: DataFrame) -> DataFrame:
     return _verdicts(batch.select("doc_id"), exact, best)
 
 
-class DedupIngestIndex:
+class DedupIngestIndex(BucketedState):
     """Handle to the maintained fingerprint + shingle index.
 
     ``bootstrap`` pays the one-time corpus indexing (the cost the
     self-contained query pays EVERY batch); ``ingest`` probes with a
     micro-batch, returns its verdict frame, and appends the batch's
-    delta to the index — the steady-state loop.
+    delta to the index — the steady-state loop. The table lifecycle
+    (drop, tombstones, compaction rewrite, verdict log) is
+    ``BucketedState``'s.
     """
 
     def __init__(self, spark: SparkSession, name: str, n_buckets: int = 8):
-        self.spark = spark
-        self.n_buckets = n_buckets
-        self.post_t = f"{name}_post"
-        self.fp_t = f"{name}_fp"
-        self.dfp_t = f"{name}_dfp"
-        self.tomb_t = f"{name}_tomb"
-        self.verd_t = f"{name}_verdicts"
-        self._seq = 0
-
-    # -- state writes -----------------------------------------------------
-    def _write(self, df: DataFrame, table: str, key: str, mode: str) -> None:
-        (
-            df.write.format("parquet")
-            .mode(mode)
-            .bucketBy(self.n_buckets, key)
-            .sortBy(key)
-            .saveAsTable(table)
-        )
+        super().__init__(spark, name, "doc_id", "verdicts", n_buckets)
+        self.post_t = self._table("post")
+        self.fp_t = self._table("fp")
+        self.dfp_t = self._table("dfp")
 
     def _append_delta(self, batch: DataFrame, mode: str) -> None:
         sh = _doc_sh(batch)
@@ -218,23 +208,9 @@ class DedupIngestIndex:
         )
 
     def bootstrap(self, corpus: DataFrame) -> "DedupIngestIndex":
-        """Index the initial corpus (overwrites any prior state —
-        including orphaned warehouse directories a crashed previous
-        session's tables left behind, which a fresh catalog no longer
-        tracks but saveAsTable still trips over)."""
-        import shutil
-        from urllib.parse import urlparse
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        for t in (self.post_t, self.fp_t, self.dfp_t, self.tomb_t, self.verd_t):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-            loc = urlparse(f"{warehouse}/{t}").path
-            shutil.rmtree(loc, ignore_errors=True)
-        self._seq = 0
+        """Index the initial corpus (drops any prior state first)."""
+        self._reset()
         self._append_delta(corpus, "overwrite")
-        self.spark.createDataFrame([], "doc_id long").write.format(
-            "parquet"
-        ).mode("overwrite").saveAsTable(self.tomb_t)
         return self
 
     def delete(self, ids: DataFrame) -> None:
@@ -244,8 +220,15 @@ class DedupIngestIndex:
 
         Logical deletion in two appends, no corpus-sized rewrite:
 
-        1. NEGATIVE df partials: the deleted docs' postings (read
-           from the bucketed postings table itself — a takedown
+        1. TOMBSTONES: ids append to ``<name>_tomb``; every probe
+           read of the fingerprint and postings tables excludes
+           tombstoned docs via a broadcast anti-join (the tombstone
+           set is takedown-sized — operator-bounded, not
+           corpus-proportional; ``compact`` bounds it over time).
+           Already-tombstoned ids are skipped, so re-deleting a doc
+           cannot subtract its df mass twice.
+        2. NEGATIVE df partials: the newly deleted docs' postings
+           (read from the bucketed postings table itself — a takedown
            carries ids, not text; the semi-join probes with a
            broadcast of the delete batch, so the index side scans in
            bucket layout, zero Exchange) are aggregated per shingle
@@ -254,27 +237,12 @@ class DedupIngestIndex:
            prices the post-delete corpus exactly, so a shingle whose
            hotness was due to deleted boilerplate can drop back
            under the cap with no vocabulary rewrite.
-        2. TOMBSTONES: ids append to ``<name>_tomb``; every probe
-           read of the fingerprint and postings tables excludes
-           tombstoned docs via a broadcast anti-join (the tombstone
-           set is takedown-sized — operator-bounded, not
-           corpus-proportional; ``compact`` bounds it over time).
 
         Physical removal is ``compact``'s job — the
         Delta/Iceberg-style separation of logical delete (cheap,
         immediate) from storage reclamation (batched, off the
         serving path)."""
-        # idempotence guard: re-deleting an already-tombstoned doc
-        # must not subtract its df mass twice. localCheckpoint pins
-        # the filtered id set BEFORE the tombstone append below
-        # (whose sink is a table this plan reads) and keeps the neg
-        # aggregation's broadcast side stable across both writes.
-        ids = (
-            ids.select("doc_id")
-            .join(self.spark.table(self.tomb_t), "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        ids.write.format("parquet").mode("append").saveAsTable(self.tomb_t)
+        ids = self._tombstone(ids)
         neg = (
             self.spark.table(self.post_t)
             .join(F.broadcast(ids), "doc_id", "left_semi")
@@ -287,64 +255,42 @@ class DedupIngestIndex:
         """Physically reclaim deleted rows and per-epoch small files:
         rewrite each bucketed state table minus tombstoned docs (df
         partials re-aggregate to one row per shingle), then truncate
-        the tombstone list. The rewrite is EXCHANGE-FREE — each table
-        reads in its own bucket layout and writes back under the same
-        ``bucketBy``, so no shuffle at any size — and lands via
-        write-temp / drop / rename (Spark cannot overwrite a table
-        from a plan that reads it). N append epochs leave N files per
+        the tombstone list. Each rewrite reads in its own bucket
+        layout and writes back in the same bucket layout, so no
+        shuffle at any size. N append epochs leave N files per
         bucket and probe plans degrade with file count
         (COMPACTION_LADDER_r12.json measures the decay and the
         post-compact recovery); a real deployment runs this on the
         maintenance cadence, not per batch."""
-        def rewrite(df: DataFrame, table: str, key: str) -> None:
-            tmp = f"{table}_compacting"
-            self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-            self._write(df, tmp, key, "overwrite")
-            self.spark.sql(f"DROP TABLE {table}")
-            self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-
-        tomb = F.broadcast(self.spark.table(self.tomb_t))
-        rewrite(
-            self.spark.table(self.post_t).join(tomb, "doc_id", "left_anti"),
-            self.post_t,
-            "sh",
-        )
-        rewrite(
-            self.spark.table(self.fp_t).join(tomb, "doc_id", "left_anti"),
-            self.fp_t,
-            "f",
-        )
+        self._rewrite(self._live(self.post_t), self.post_t, "sh")
+        self._rewrite(self._live(self.fp_t), self.fp_t, "f")
         # df partials recompute FROM the just-compacted postings (a
         # fresh read AFTER the rename — the pre-rewrite plan's file
         # listing is gone), not by summing the old partials: one
         # bucket-local count per shingle, and any partial-write drift
         # a crash between delete()'s two appends could leave behind
         # heals here instead of persisting.
-        rewrite(
+        self._rewrite(
             self.spark.table(self.post_t)
             .groupBy("sh")
             .agg(F.count(F.lit(1)).alias("cnt")),
             self.dfp_t,
             "sh",
         )
-        self.spark.createDataFrame([], "doc_id long").write.format(
-            "parquet"
-        ).mode("overwrite").saveAsTable(self.tomb_t)
+        self._clear_tombstones()
 
     # -- the ingest loop ---------------------------------------------------
     def probe(self, batch: DataFrame) -> DataFrame:
         """Verdicts for ``batch`` against the CURRENT index, without
         maintenance — one lazy plan over the bucketed tables."""
         # Tombstone exclusion (r12): deleted docs stay physically
-        # present until compact(), so every index read drops them via
-        # a broadcast anti-join — the tombstone set is takedown-sized
-        # by contract. The df partials need no filter: delete()
+        # present until compact(), so the postings and fingerprint
+        # reads drop them. The df partials need no filter: delete()
         # appended the deleted docs' mass as NEGATIVE partials, so
         # the co-bucketed sum below already prices the live corpus.
-        tomb = F.broadcast(self.spark.table(self.tomb_t))
-        post = self.spark.table(self.post_t).join(tomb, "doc_id", "left_anti")
+        post = self._live(self.post_t)
         dfp = self.spark.table(self.dfp_t)
-        fp_e = self.spark.table(self.fp_t).join(tomb, "doc_id", "left_anti")
+        fp_e = self._live(self.fp_t)
         # Current df = zero-Exchange co-bucketed sum of the partials;
         # the hot list is heavy-tail-sized, broadcast into the three
         # anti joins below.
@@ -407,22 +353,9 @@ class DedupIngestIndex:
         against an index that now contains the batch itself (every
         doc its own exact_dup — caught by the multi-batch
         differential test)."""
-        seq = self._seq
-        self._seq += 1
-        (
-            self.probe(batch)
-            .withColumn("batch_seq", F.lit(seq))
-            .write.format("parquet")
-            .mode("append")
-            .saveAsTable(self.verd_t)
-        )
+        seq = self._log(self.probe(batch))
         self._append_delta(batch, "append")
-        return (
-            self.spark.table(self.verd_t)
-            .filter(F.col("batch_seq") == seq)
-            .drop("batch_seq")
-            .orderBy("doc_id")
-        )
+        return self._read_log(seq, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -557,7 +490,7 @@ def _ingest_epoch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
     return (
-        spark.table(idx.verd_t)
+        spark.table(idx.log_t)
         .select("batch_seq", "doc_id", "verdict", "match_doc", "jaccard")
         .orderBy("batch_seq", "doc_id")
     )

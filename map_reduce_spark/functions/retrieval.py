@@ -30,10 +30,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from map_reduce_spark.functions.prep import CHUNK_STEP, CHUNK_TOKENS
-from map_reduce_spark.operators.text_rel import doc_toks, tokens_col
+from map_reduce_spark.operators.text_rel import doc_toks
+from map_reduce_spark.plans.deferred import deferred
 from map_reduce_spark.plans.transient import ordered_result
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import load_spread, parquet_num_rows, session_cached
+from map_reduce_spark.sources import parquet_num_rows, session_cached
 
 RETRIEVAL_MAX_DF = 0.9  # drop tokens present in > this fraction of chunks
 RETRIEVAL_TOP_K = 5
@@ -267,7 +268,7 @@ def rag_chunk_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complexity is the inverted-index invariant sum over tokens of
     (probe postings x min(corpus postings, RETRIEVAL_MAX_POSTINGS)) —
     the candidate side is impact-pruned per token (r10; see
-    RETRIEVAL_MAX_POSTINGS / chunk_tfidf_cands), so per-token join
+    RETRIEVAL_MAX_POSTINGS / _prune_postings), so per-token join
     fan-out is HARD-bounded. On real corpora (10^4+ vocabularies,
     Zipf postings) the prune rarely binds and the cost is the
     standard Lucene shape — grows with posting mass, linear in corpus
@@ -354,100 +355,102 @@ def chunk_tfidf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@session_cached
-def chunk_tfidf_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CANDIDATE-side postings: the normalized index pruned to the top
-    ``RETRIEVAL_MAX_POSTINGS`` postings per token by per-token impact
-    order — (tf DESC, chunk_uid), a pure-integer key equal to the
-    weight order since idf is constant within a token (Anh & Moffat
-    impact-sorted index pruning; see RETRIEVAL_MAX_POSTINGS for the
-    scale argument — this bound is what turns the degenerate-
-    vocabulary fixture's quadratic join into a linear one, r9 verdict
-    item 2). Probe vectors do NOT read this frame — they keep their
-    full postings, so every probe still emits its top-k.
+def _prune_postings(
+    spark: SparkSession, index: DataFrame, weight: str, *order
+) -> DataFrame:
+    """CANDIDATE-side postings (chunk_uid, token, cw) of either index:
+    ``index`` pruned to the top ``RETRIEVAL_MAX_POSTINGS`` postings
+    per token by the per-token impact ``order`` — an all-integer key
+    equal to (or a proxy for) the weight order, so both engines select
+    bit-identical posting sets (Anh & Moffat impact-sorted index
+    pruning; see RETRIEVAL_MAX_POSTINGS for the scale argument — this
+    bound is what turns the degenerate-vocabulary fixture's quadratic
+    join into a linear one, r9 verdict item 2). Probe vectors do NOT
+    read this frame — they keep their full postings, so every probe
+    still emits its top-k.
 
-    Built once per (session, corpus) like the base index; the window
-    is one sort per token group over the already-cached index, once.
-    On a realistic wide vocabulary df_t < the cap for nearly every
-    token and this frame is the index unchanged.
+    Built once per (session, corpus) by the session-cached ``*_cands``
+    builders; the window is one sort per token group over the
+    already-cached index, once. On a realistic wide vocabulary
+    df_t < the cap for nearly every token and this frame is the index
+    unchanged.
     """
-    w = chunk_tfidf_index(spark, sf_dir)
-    pr = F.row_number().over(
-        W.partitionBy("token").orderBy(F.desc("tf"), F.asc("chunk_uid"))
-    )
+    pr = F.row_number().over(W.partitionBy("token").orderBy(*order))
     return (
-        w.withColumn("_pr", pr)
+        index.withColumn("_pr", pr)
         .filter(F.col("_pr") <= RETRIEVAL_MAX_POSTINGS)
         # chunk_uid layout for the same map-side-combine reason as the
         # base index (the scores aggregate groups by cand chunk);
         # explicit count for the same cache-coalesce reason (r12 —
         # see chunk_tfidf_index)
         .repartition(spark.sparkContext.defaultParallelism, "chunk_uid")
-        .select("chunk_uid", "token", "wn")
+        .select("chunk_uid", "token", F.col(weight).alias("cw"))
+    )
+
+
+def _probe_postings(index: DataFrame, probe_doc_mod: int, weight: str) -> DataFrame:
+    """Probe postings (probe_uid, p_token, pw): the full vectors of the
+    chunks of every ``probe_doc_mod``-th document. The registered
+    modulus is extracted once per (session, corpus) by the
+    session-cached ``*_probes`` builders: the extraction is a full
+    scan of the cached index (corpus-sized, linear), so repeating it
+    per search query charged every steady-state search a corpus-sized
+    scan for a probe-sized result (r10, measured at sf10). Custom
+    moduli (the scale studies) extract inline and skip that cache."""
+    return index.filter(
+        (F.expr(f"chunk_uid DIV {CHUNKS_PER_DOC_CAP}") % probe_doc_mod) == 0
+    ).select(
+        F.col("chunk_uid").alias("probe_uid"),
+        F.col("token").alias("p_token"),
+        F.col(weight).alias("pw"),
     )
 
 
 @session_cached
+def chunk_tfidf_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TF-IDF candidate postings, pruned by (tf DESC, chunk_uid) —
+    within a token w = tf * idf with idf constant, so the integer tf
+    order IS the weight order (see ``_prune_postings``)."""
+    index = chunk_tfidf_index(spark, sf_dir)
+    return _prune_postings(spark, index, "wn", F.desc("tf"), F.asc("chunk_uid"))
+
+
+@session_cached
 def chunk_tfidf_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe postings for the REGISTERED modulus (PROBE_DOC_MOD),
-    extracted once per (session, corpus): the extraction is a full
-    scan of the cached index (corpus-sized, linear), so repeating it
-    per search query charged every steady-state search a corpus-sized
-    scan for a probe-sized result (r10, measured at sf10). Custom
-    moduli (the scale studies) extract inline and skip this cache."""
-    w = chunk_tfidf_index(spark, sf_dir)
-    return w.filter(
-        (F.expr(f"chunk_uid DIV {CHUNKS_PER_DOC_CAP}") % PROBE_DOC_MOD) == 0
-    ).select(
-        F.col("chunk_uid").alias("probe_uid"),
-        F.col("token").alias("p_token"),
-        F.col("wn").alias("pw"),
-    )
+    """Registered-modulus TF-IDF probe postings (see ``_probe_postings``)."""
+    return _probe_postings(chunk_tfidf_index(spark, sf_dir), PROBE_DOC_MOD, "wn")
 
 
-# Every search core (tfidf / bm25) emits this exact shape; the RRF
-# fusion swaps score -> rrf_score. Declared so the deferred large-
-# probe regimes can serve schema walks without materializing; pinned
-# equal to the lazy-branch schema by
+# Every search (tfidf / bm25) emits this exact shape; the RRF fusion
+# swaps score -> rrf_score. Declared so the deferred large-probe
+# regimes can serve schema walks without materializing; pinned equal
+# to the lazy-branch schema by
 # tests/test_retrieval.py::test_large_probe_regime_is_deferred.
 _SEARCH_SCHEMA = "probe_uid bigint, cand_uid bigint, score double, rank bigint"
 _RRF_SCHEMA = "probe_uid bigint, cand_uid bigint, rrf_score double, rank bigint"
 
 
-def _deferred_search(spark: SparkSession, thunk, schema: str = _SEARCH_SCHEMA):
-    from map_reduce_spark.plans.deferred import deferred
-
-    return deferred(spark, schema, thunk)
-
-
-def _tfidf_search(
-    spark: SparkSession, sf_dir: str, probe_doc_mod: int, ordered: bool = True
+def _search(
+    spark: SparkSession,
+    sf_dir: str,
+    probe_doc_mod: int,
+    cands: DataFrame,
+    probes: DataFrame,
+    ordered: bool,
 ) -> DataFrame:
-    """Parameterized core of ``rag_chunk_tfidf_search``: probe chunks
-    are those of every ``probe_doc_mod``-th document. The registered
-    entry pins PROBE_DOC_MOD; the Zipf scale study passes a modulus
-    proportional to the corpus so the PROBE COUNT stays fixed across
-    scale points — the realistic retrieval regime (queries/sec does
-    not grow with the index) under which the Lucene-shape linear-in-
-    posting-mass claim is measurable at all.
+    """The inverted-index search both families share: candidate
+    postings (chunk_uid, token, cw) joined on token to probe postings
+    (probe_uid, p_token, pw), scored sum(pw * cw) per (probe, cand)
+    pair and ranked top-k per probe. The families differ only in the
+    per-posting weights they hand in.
 
-    FP note: the cosine is the sum of normalized-weight products,
-    while the oracle computes raw-product-sum / (norm x norm) — the
-    same real number via a different float order, so both sides round
-    to 6 dp BEFORE the rank (the repo's round-then-tiebreak
-    convention) and the top-k and emitted scores agree exactly.
+    Both engines rank on the score ROUNDED to 6 dp with a cand_uid
+    tiebreak: planted duplicate chunks give mathematically equal
+    scores whose raw float sums can order-flip across engines (and
+    the TF-IDF oracle computes raw-product-sum / (norm x norm), the
+    same real number via a different float order), so rounding first
+    makes the tiebreak decide identically everywhere.
     """
-    cands = chunk_tfidf_cands(spark, sf_dir)
-    if probe_doc_mod == PROBE_DOC_MOD:
-        probes = chunk_tfidf_probes(spark, sf_dir)
-    else:
-        probes = chunk_tfidf_index(spark, sf_dir).filter(
-            (F.expr(f"chunk_uid DIV {CHUNKS_PER_DOC_CAP}") % probe_doc_mod) == 0
-        ).select(
-            F.col("chunk_uid").alias("probe_uid"),
-            F.col("token").alias("p_token"),
-            F.col("wn").alias("pw"),
-        )
     # BROADCAST the probe side and stream the corpus index (the
     # sim_knn_bruteforce pattern): the join's output parallelism then
     # follows the corpus partitioning. The naive orientation lets AQE
@@ -458,43 +461,24 @@ def _tfidf_search(
     # (chunks of every PROBE_DOC_MOD-th doc), so the broadcast is a
     # fixture-scale optimization (r6 ADVICE): past
     # PROBE_BROADCAST_MAX_DOCS probe documents the plan switches to a
-    # plain token-hash shuffle join — no driver/broadcast pressure,
-    # parallelism from the token partitioning on both sides. Sizing
-    # is a parquet-footer metadata read, so the builder stays lazy.
+    # count-sized large-probe regime. Sizing is a parquet-footer
+    # metadata read, so the builder stays lazy.
     n_probe_docs = -(-parquet_num_rows(f"{sf_dir}/documents.parquet") // probe_doc_mod)
 
     def finish(joined: DataFrame) -> DataFrame:
         scores = (
             joined.filter(F.col("probe_uid") != F.col("chunk_uid"))
             .groupBy("probe_uid", F.col("chunk_uid").alias("cand_uid"))
-            .agg(F.sum(F.col("pw") * F.col("wn")).alias("num"))
+            .agg(F.round(F.sum(F.col("pw") * F.col("cw")), 6).alias("score"))
         )
-        ranked = (
-            scores.withColumn(
-                # rank on the ROUNDED score: planted duplicate chunks
-                # give mathematically equal scores whose raw float sums
-                # can order-flip across engines; rounding first makes
-                # the cand_uid tiebreak decide identically everywhere.
-                # The normalized index makes num the cosine itself — no
-                # norm joins on the pair stream (see chunk_tfidf_index).
-                "cos_raw",
-                F.round(F.col("num"), 6),
-            )
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    W.partitionBy("probe_uid").orderBy(
-                        F.desc("cos_raw"), F.asc("cand_uid")
-                    )
-                ),
-            )
-            .filter(F.col("rank") <= RETRIEVAL_TOP_K)
-        )
+        ranked = scores.withColumn(
+            "rank",
+            F.row_number().over(
+                W.partitionBy("probe_uid").orderBy(F.desc("score"), F.asc("cand_uid"))
+            ),
+        ).filter(F.col("rank") <= RETRIEVAL_TOP_K)
         out = ranked.select(
-            "probe_uid",
-            "cand_uid",
-            F.col("cos_raw").alias("score"),
-            F.col("rank").cast("long").alias("rank"),
+            "probe_uid", "cand_uid", "score", F.col("rank").cast("long").alias("rank")
         )
         # ``ordered=False`` (the RRF fusion subquery): skip both the
         # output sort (EliminateSorts would drop it under the fusion
@@ -507,19 +491,15 @@ def _tfidf_search(
         return ordered_result(out, "probe_uid", "rank")
 
     # corpus side = the impact-pruned candidate postings (probe
-    # vectors above stay full) — the bounded inverted-index join,
-    # see RETRIEVAL_MAX_POSTINGS. Join orientation is three-regime
-    # (see CANDS_BROADCAST_MAX_ROWS): small probe load -> broadcast
+    # vectors stay full) — the bounded inverted-index join, see
+    # RETRIEVAL_MAX_POSTINGS. Join orientation is three-regime (see
+    # CANDS_BROADCAST_MAX_ROWS): small probe load -> broadcast
     # probes; big probe load + cap-collapsed candidates -> broadcast
     # candidates (probe-partitioned pair stream, exchange-free agg +
     # window); both sides big -> token-hash shuffle join.
     if n_probe_docs <= PROBE_BROADCAST_MAX_DOCS:
-        # the probe-load gate is a parquet-footer metadata read, so
-        # this branch — the registered-fixture regime — stays a fully
-        # lazy Catalyst plan.
-        return finish(
-            cands.join(F.broadcast(probes), cands.token == probes.p_token)
-        )
+        # the registered-fixture regime stays a fully lazy Catalyst plan
+        return finish(cands.join(F.broadcast(probes), cands.token == probes.p_token))
 
     # Large-probe regimes size themselves from real counts (which also
     # force the session-cached index build), so the decision is
@@ -540,7 +520,27 @@ def _tfidf_search(
             joined = cands.join(probes, cands.token == probes.p_token)
         return finish(joined)
 
-    return _deferred_search(spark, build_large)
+    return deferred(spark, _SEARCH_SCHEMA, build_large)
+
+
+def _tfidf_search(
+    spark: SparkSession, sf_dir: str, probe_doc_mod: int, ordered: bool = True
+) -> DataFrame:
+    """Parameterized core of ``rag_chunk_tfidf_search``: probe chunks
+    are those of every ``probe_doc_mod``-th document. The registered
+    entry pins PROBE_DOC_MOD; the Zipf scale study passes a modulus
+    proportional to the corpus so the PROBE COUNT stays fixed across
+    scale points — the realistic retrieval regime (queries/sec does
+    not grow with the index) under which the Lucene-shape linear-in-
+    posting-mass claim is measurable at all. The normalized index
+    makes the score the cosine itself — no norm joins on the pair
+    stream (see chunk_tfidf_index)."""
+    if probe_doc_mod == PROBE_DOC_MOD:
+        probes = chunk_tfidf_probes(spark, sf_dir)
+    else:
+        probes = _probe_postings(chunk_tfidf_index(spark, sf_dir), probe_doc_mod, "wn")
+    cands = chunk_tfidf_cands(spark, sf_dir)
+    return _search(spark, sf_dir, probe_doc_mod, cands, probes, ordered)
 
 
 # --- BM25 ------------------------------------------------------------
@@ -679,27 +679,14 @@ def chunk_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @session_cached
 def chunk_bm25_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CANDIDATE-side BM25 postings: the impact index pruned to the
-    top ``RETRIEVAL_MAX_POSTINGS`` postings per token, ordered by the
-    all-integer proxy (tf DESC, dl ASC, chunk_uid) — bm rises with tf
-    and falls with dl, and an integer key keeps the selected posting
-    set bit-identical in both engines (ordering by the float ``bm``
-    itself risks last-ulp tie flips against the oracle, whose avgdl
-    aggregation order differs). Same pruning contract and scale
-    argument as ``chunk_tfidf_cands``; probe vectors stay full."""
-    bm = chunk_bm25_index(spark, sf_dir)
-    pr = F.row_number().over(
-        W.partitionBy("token").orderBy(
-            F.desc("tf"), F.asc("dl"), F.asc("chunk_uid")
-        )
-    )
-    return (
-        bm.withColumn("_pr", pr)
-        .filter(F.col("_pr") <= RETRIEVAL_MAX_POSTINGS)
-        # explicit count (r12 — see chunk_tfidf_index)
-        .repartition(spark.sparkContext.defaultParallelism, "chunk_uid")
-        .select("chunk_uid", "token", "bm")
-    )
+    """BM25 candidate postings, pruned by the all-integer proxy
+    (tf DESC, dl ASC, chunk_uid) — bm rises with tf and falls with
+    dl, and ordering by the float ``bm`` itself risks last-ulp tie
+    flips against the oracle, whose avgdl aggregation order differs
+    (see ``_prune_postings``)."""
+    index = chunk_bm25_index(spark, sf_dir)
+    order = (F.desc("tf"), F.asc("dl"), F.asc("chunk_uid"))
+    return _prune_postings(spark, index, "bm", *order)
 
 
 @register("rag_bm25_search", oracle_sql=_BM25_SQL)
@@ -712,29 +699,21 @@ def rag_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     precomputed from the impact index, so the per-pair work is one
     multiply + sum.
 
-    Scale: identical join/partition shape to the TF-IDF search (the
-    Zipf-study linear-in-posting-mass argument transfers verbatim —
-    both plans differ only in the per-posting weight expression); the
-    probe side broadcasts under PROBE_BROADCAST_MAX_DOCS and falls
-    back to the token-hash shuffle join past it. Both engines rank on
-    the ROUNDED score with a cand_uid tiebreak (round-then-rank
-    convention, see _tfidf_search FP note).
+    Scale: the TF-IDF search's own ``_search`` core (the Zipf-study
+    linear-in-posting-mass argument transfers verbatim — the two
+    families differ only in the per-posting weights they hand in):
+    the probe side broadcasts under PROBE_BROADCAST_MAX_DOCS and
+    switches to the count-sized large-probe regimes past it, and both
+    engines rank on the ROUNDED score with a cand_uid tiebreak.
     """
     return _bm25_search(spark, sf_dir, PROBE_DOC_MOD)
 
 
 @session_cached
 def chunk_bm25_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered-modulus probe postings for BM25 — same once-per-
-    session extraction rationale as ``chunk_tfidf_probes``."""
-    bm = chunk_bm25_index(spark, sf_dir)
-    return bm.filter(
-        (F.expr(f"chunk_uid DIV {CHUNKS_PER_DOC_CAP}") % PROBE_DOC_MOD) == 0
-    ).select(
-        F.col("chunk_uid").alias("probe_uid"),
-        F.col("token").alias("p_token"),
-        F.col("tf").alias("tf_q"),
-    )
+    """Registered-modulus BM25 probe postings, weighted by the integer
+    probe-side tf (see ``_probe_postings``)."""
+    return _probe_postings(chunk_bm25_index(spark, sf_dir), PROBE_DOC_MOD, "tf")
 
 
 def _bm25_search(
@@ -744,69 +723,12 @@ def _bm25_search(
     of every ``probe_doc_mod``-th document) — the knob the Zipf scale
     study turns to hold the probe COUNT fixed across corpus sizes,
     exactly as for ``_tfidf_search``."""
-    cands = chunk_bm25_cands(spark, sf_dir)
     if probe_doc_mod == PROBE_DOC_MOD:
         probes = chunk_bm25_probes(spark, sf_dir)
     else:
-        probes = chunk_bm25_index(spark, sf_dir).filter(
-            (F.expr(f"chunk_uid DIV {CHUNKS_PER_DOC_CAP}") % probe_doc_mod) == 0
-        ).select(
-            F.col("chunk_uid").alias("probe_uid"),
-            F.col("token").alias("p_token"),
-            F.col("tf").alias("tf_q"),
-        )
-    n_probe_docs = -(
-        -parquet_num_rows(f"{sf_dir}/documents.parquet") // probe_doc_mod
-    )
-
-    def finish(joined: DataFrame) -> DataFrame:
-        scores = (
-            joined.filter(F.col("probe_uid") != F.col("chunk_uid"))
-            .groupBy("probe_uid", F.col("chunk_uid").alias("cand_uid"))
-            .agg(F.sum(F.col("tf_q") * F.col("bm")).alias("s"))
-        )
-        ranked = (
-            scores.withColumn("score", F.round(F.col("s"), 6))
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    W.partitionBy("probe_uid").orderBy(
-                        F.desc("score"), F.asc("cand_uid")
-                    )
-                ),
-            )
-            .filter(F.col("rank") <= RETRIEVAL_TOP_K)
-        )
-        out = ranked.select(
-            "probe_uid", "cand_uid", "score", F.col("rank").cast("long").alias("rank")
-        )
-        if not ordered:  # RRF subquery — see _tfidf_search's finish
-            return out
-        return ordered_result(out, "probe_uid", "rank")
-
-    # corpus side = impact-pruned candidates; probe vectors full.
-    # Same three-regime join orientation as _tfidf_search (see
-    # CANDS_BROADCAST_MAX_ROWS); same deferred-decision contract for
-    # the count-sized large-probe regimes (r10 ADVICE).
-    if n_probe_docs <= PROBE_BROADCAST_MAX_DOCS:
-        return finish(
-            cands.join(F.broadcast(probes), cands.token == probes.p_token)
-        )
-
-    def build_large() -> DataFrame:
-        if cands.count() <= CANDS_BROADCAST_MAX_ROWS:
-            n_part = max(
-                32,
-                -(-probes.count() * RETRIEVAL_MAX_POSTINGS // PAIRS_PER_AGG_PARTITION),
-            )
-            joined = probes.repartition(n_part, "probe_uid").join(
-                F.broadcast(cands), cands.token == probes.p_token
-            )
-        else:
-            joined = cands.join(probes, cands.token == probes.p_token)
-        return finish(joined)
-
-    return _deferred_search(spark, build_large)
+        probes = _probe_postings(chunk_bm25_index(spark, sf_dir), probe_doc_mod, "tf")
+    cands = chunk_bm25_cands(spark, sf_dir)
+    return _search(spark, sf_dir, probe_doc_mod, cands, probes, ordered)
 
 
 # --- Hybrid rank fusion ----------------------------------------------
@@ -917,7 +839,7 @@ def rag_rrf_fusion_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is the fusion.
         return build()
     # large-probe regime: the base searches are deferred (count-sized
-    # regime decisions, see _tfidf_search) and touching them with
+    # regime decisions, see _search) and touching them with
     # .select() would materialize those counts at build time — wrap
     # the whole fusion in the same deferred contract instead.
-    return _deferred_search(spark, build, schema=_RRF_SCHEMA)
+    return deferred(spark, _RRF_SCHEMA, build)

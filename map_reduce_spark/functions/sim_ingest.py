@@ -8,8 +8,9 @@ before probing. A 100 TB pipeline serving embeddings does neither —
 it trains the quantizer ONCE on a bootstrap corpus, persists the
 cell-assigned vectors as a partitioned index table, and then runs a
 continuous loop of "search the new batch against the index as of now,
-then fold the batch into its cells". This module is that loop, built
-on the same managed-bucketed-table machinery as
+then fold the batch into its cells". This module is that loop; its
+table lifecycle (bucketed appends, tombstones, compaction, the
+result log) is ``sources/bucketed.BucketedState``, shared with
 ``dedup_ingest.DedupIngestIndex``:
 
 State:
@@ -57,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from map_reduce_spark.functions.dedup_ingest import _DELETE_AFTER_BATCH, _EPOCH_MODS
 from map_reduce_spark.functions.similarity import (
     KMEANS_ITERS,
     N_CELLS,
@@ -68,6 +70,7 @@ from map_reduce_spark.functions.similarity import (
 )
 from map_reduce_spark.registry import register
 from map_reduce_spark.sources import load_spread, session_cached
+from map_reduce_spark.sources.bucketed import BucketedState
 
 # Probe selection inside each ingest batch: vec_id = 8j + r within a
 # mod-8 epoch residue class, probe iff j % SIM_INGEST_PROBE_STRIDE ==
@@ -122,20 +125,17 @@ def train_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> list[list[float]]
     return centroids
 
 
-class SimIngestIndex:
+class SimIngestIndex(BucketedState):
     """Handle to a maintained IVF index: frozen centroids + a bucketed
     cell-assignment table. ``bootstrap`` pays the one-time training
     and initial assignment; ``ingest`` searches a vector batch against
-    the index as of now and folds the batch into its cells."""
+    the index as of now and folds the batch into its cells. The table
+    lifecycle is ``BucketedState``'s, as for the dedup ingest index."""
 
     def __init__(self, spark: SparkSession, name: str, n_buckets: int = 8):
-        self.spark = spark
-        self.n_buckets = n_buckets
-        self.cells_t = f"{name}_cells"
-        self.tomb_t = f"{name}_tomb"
-        self.res_t = f"{name}_results"
+        super().__init__(spark, name, "vec_id", "results", n_buckets)
+        self.cells_t = self._table("cells")
         self.centroids: list[list[float]] | None = None
-        self._seq = 0
 
     def _assign(self, emb: DataFrame, n: int, out: str) -> DataFrame:
         return _with_nearest_cells(
@@ -148,77 +148,37 @@ class SimIngestIndex:
         )
 
     def _append_cells(self, batch: DataFrame, mode: str) -> None:
-        (
-            self._assign(batch, 1, "cells")
-            .select("vec_id", "dv", "norm", F.col("cells")[0].alias("cell"))
-            .write.format("parquet")
-            .mode(mode)
-            .bucketBy(self.n_buckets, "cell")
-            .sortBy("cell")
-            .saveAsTable(self.cells_t)
+        cells = self._assign(batch, 1, "cells").select(
+            "vec_id", "dv", "norm", F.col("cells")[0].alias("cell")
         )
+        self._write(cells, self.cells_t, "cell", mode)
 
     def bootstrap(self, corpus: DataFrame) -> "SimIngestIndex":
         """Train the quantizer on ``corpus`` (frozen thereafter) and
-        write its cell assignments — dropping any prior state,
-        including orphaned warehouse directories (the dedup-ingest
-        crash-recovery discipline)."""
-        import shutil
-        from urllib.parse import urlparse
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        for t in (self.cells_t, self.tomb_t, self.res_t):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(urlparse(f"{warehouse}/{t}").path, ignore_errors=True)
-        self._seq = 0
+        write its cell assignments, dropping any prior state first."""
+        self._reset()
         self.centroids = train_centroids(corpus)
         self._append_cells(corpus, "overwrite")
-        self.spark.createDataFrame([], "vec_id long").write.format(
-            "parquet"
-        ).mode("overwrite").saveAsTable(self.tomb_t)
         return self
 
     def delete(self, ids: DataFrame) -> None:
         """Retract vectors from the index (r11 verdict item 5 — the
         ANN twin of DedupIngestIndex.delete): a takedown carries ids
-        only, so deletion is a tombstone append; every probe excludes
-        tombstoned vectors via a broadcast anti-join (the tombstone
-        set is takedown-sized by contract), and ``compact`` reclaims
+        only, so deletion is an idempotent tombstone append; every
+        probe excludes tombstoned vectors, and ``compact`` reclaims
         the cell rows physically. The frozen quantizer is untouched —
         deletion changes cell OCCUPANCY, not cell geometry, exactly
         as in FAISS/Milvus IVF deletes."""
-        (
-            ids.select("vec_id")
-            .join(self.spark.table(self.tomb_t), "vec_id", "left_anti")
-            .localCheckpoint(eager=True)
-            .write.format("parquet")
-            .mode("append")
-            .saveAsTable(self.tomb_t)
-        )
+        self._tombstone(ids)
 
     def compact(self) -> None:
         """Physically drop tombstoned cell rows and per-epoch small
-        files: one exchange-free rewrite (bucket-layout read ->
-        same-``bucketBy`` write via write-temp / drop / rename), then
-        truncate the tombstones. Off the serving path — probes are
-        correct before and after; compaction only restores file-count
-        and scan-size floors (COMPACTION_LADDER_r12.json)."""
-        tmp = f"{self.cells_t}_compacting"
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        (
-            self.spark.table(self.cells_t)
-            .join(F.broadcast(self.spark.table(self.tomb_t)), "vec_id", "left_anti")
-            .write.format("parquet")
-            .mode("overwrite")
-            .bucketBy(self.n_buckets, "cell")
-            .sortBy("cell")
-            .saveAsTable(tmp)
-        )
-        self.spark.sql(f"DROP TABLE {self.cells_t}")
-        self.spark.sql(f"ALTER TABLE {tmp} RENAME TO {self.cells_t}")
-        self.spark.createDataFrame([], "vec_id long").write.format(
-            "parquet"
-        ).mode("overwrite").saveAsTable(self.tomb_t)
+        files: one exchange-free rewrite, then truncate the
+        tombstones. Off the serving path — probes are correct before
+        and after; compaction only restores file-count and scan-size
+        floors (COMPACTION_LADDER_r12.json)."""
+        self._rewrite(self._live(self.cells_t), self.cells_t, "cell")
+        self._clear_tombstones()
 
     def probe(self, probes: DataFrame, n_probe: int = N_PROBE) -> DataFrame:
         """Top-k over the CURRENT index for each (vec_id, embedding)
@@ -226,17 +186,10 @@ class SimIngestIndex:
         bucketed cell table. Probe vectors are broadcast (query loads
         are batch-sized); the index side reads in bucket layout and
         never shuffles."""
-        index = (
-            self.spark.table(self.cells_t)
-            # tombstone exclusion (r12): deleted vectors stay physical
-            # until compact(); the anti-join side is takedown-sized
-            # and broadcast, so the index scan stays shuffle-free
-            .join(
-                F.broadcast(self.spark.table(self.tomb_t)),
-                "vec_id",
-                "left_anti",
-            )
-            .select(F.col("vec_id").alias("neighbor_id"), "dv", "norm", "cell")
+        # tombstone exclusion (r12): deleted vectors stay physical
+        # until compact(); the index scan stays shuffle-free
+        index = self._live(self.cells_t).select(
+            F.col("vec_id").alias("neighbor_id"), "dv", "norm", "cell"
         )
         p = self._assign(probes, n_probe, "cells").select(
             F.col("vec_id").alias("probe_id"),
@@ -278,22 +231,9 @@ class SimIngestIndex:
         table append invalidates dependent caches — a post-append
         action would recompute the search against an index containing
         the batch itself; the dedup-ingest ordering discipline)."""
-        seq = self._seq
-        self._seq += 1
-        (
-            self.probe(probes, n_probe)
-            .withColumn("batch_seq", F.lit(seq).cast("long"))
-            .write.format("parquet")
-            .mode("append")
-            .saveAsTable(self.res_t)
-        )
+        seq = self._log(self.probe(probes, n_probe))
         self._append_cells(batch, "append")
-        return (
-            self.spark.table(self.res_t)
-            .filter(F.col("batch_seq") == seq)
-            .drop("batch_seq")
-            .orderBy("probe_id", "rank")
-        )
+        return self._read_log(seq, "probe_id", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -305,7 +245,7 @@ class SimIngestIndex:
 #
 # Epoch schedule over the embeddings fixture, by vec_id % 8 (disjoint,
 # deterministic, fixture-independent — the dedup_ingest_epochs
-# schedule verbatim):
+# schedule verbatim; _EPOCH_MODS is imported from there):
 #   bootstrap corpus : vec_id % 8 NOT IN (1, 3, 5)   (~5/8 of vectors)
 #   batch 0          : vec_id % 8 = 1
 #   batch 1          : vec_id % 8 = 3
@@ -314,9 +254,8 @@ class SimIngestIndex:
 # plus all earlier batches — so batch 1's probes can retrieve batch
 # 0's vectors) and then folded in: the maintained-state semantics a
 # single lazy plan cannot express.
-_EPOCH_MODS = (1, 3, 5)
-# Retraction epoch (r12, r11 verdict item 5 — mirrors
-# dedup_ingest's schedule): after batch 0 folds in, vectors with
+# Retraction epoch (r12, r11 verdict item 5 — dedup_ingest's
+# _DELETE_AFTER_BATCH): after batch 0 folds in, vectors with
 # vec_id % 16 == 2 (a bootstrap slice — residue 2 mod 8 is never a
 # batch residue) are taken down; batches 1 and 2 search the index
 # minus the deleted vectors. The pytest full-probe differential
@@ -324,7 +263,6 @@ _EPOCH_MODS = (1, 3, 5)
 # (insert - delete) corpus, so the tombstone exclusion is certified
 # at n_probe = N_CELLS exactly like the append path.
 _DELETE_MOD16 = 2
-_DELETE_AFTER_BATCH = 0
 
 
 def _epoch_frames(
@@ -368,7 +306,7 @@ def run_ingest_epochs(
                 )
             )
     return (
-        spark.table(idx.res_t)
+        spark.table(idx.log_t)
         .select("batch_seq", "probe_id", "neighbor_id", "score", "rank")
         .orderBy("batch_seq", "probe_id", "rank")
     )

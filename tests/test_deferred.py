@@ -80,22 +80,26 @@ def test_all_builders_run_zero_jobs_at_build(spark, sf_dir):
         assert not df.is_materialized, name
 
 
-@pytest.mark.parametrize(
-    "name",
-    # one cheap representative per family keeps the suite fast; the
-    # oracle gate materializes every entry anyway
-    ["streaming_tumbling_type_counts", "sim_knn_ivf", "dedup_duplicate_clusters"],
-)
-def test_declared_schema_matches_materialized(spark, sf_dir, name):
+def test_every_deferred_schema_matches_materialized(spark, sf_dir):
+    """Every deferred entry — discovered from the registry, as in
+    test_all_builders_run_zero_jobs_at_build — declares exactly the
+    column names and dtypes its materialized result has. All
+    mismatches are reported at once."""
     specs = load_all()
-    df = specs[name].builder(spark, sf_dir)
-    declared = list(df.dtypes)
-    declared_cols = list(df.columns)
-    n = df.count()  # first action: materializes
-    assert n >= 0
-    assert df.is_materialized
-    assert list(df.dtypes) == declared, name
-    assert list(df.columns) == declared_cols, name
+    built = {n: s.builder(spark, sf_dir) for n, s in specs.items()}
+    deferred_names = sorted(
+        n for n, df in built.items() if isinstance(df, DeferredDataFrame)
+    )
+    mismatches = []
+    for name in deferred_names:
+        df = built[name]
+        declared = list(df.dtypes)
+        declared_cols = list(df.columns)
+        assert df.count() >= 0  # first action: materializes
+        assert df.is_materialized, name
+        if list(df.dtypes) != declared or list(df.columns) != declared_cols:
+            mismatches.append((name, declared, list(df.dtypes)))
+    assert not mismatches, mismatches
 
 
 def test_thunk_runs_once_and_delegates():

@@ -180,23 +180,25 @@ def test_cands_broadcast_regime_agg_and_topk_are_exchange_free(
     kept the sf10 aggregate out of 6.5 GB of spilled hash state.
     Pinned by asserting no ENSURE_REQUIREMENTS hash exchange mentions
     the aggregate keys (the only hash exchange allowed is the
-    explicit REPARTITION_BY_NUM of the tiny probe side)."""
+    explicit REPARTITION_BY_NUM of the tiny probe side). Checked for
+    both the TF-IDF and the BM25 search."""
     import re
 
     import map_reduce_spark.functions.retrieval as R
     from map_reduce_spark.plans.explain import physical_plan
 
     monkeypatch.setattr(R, "PROBE_BROADCAST_MAX_DOCS", 0)
-    plan = physical_plan(R._tfidf_search(spark, sf_dir, R.PROBE_DOC_MOD))
-    bad = [
-        line
-        for line in plan.splitlines()
-        if "Exchange hashpartitioning" in line
-        and "ENSURE_REQUIREMENTS" in line
-        and re.search(r"probe_uid#\d+L?, (chunk_uid|cand_uid)", line)
-    ]
-    assert not bad, f"score aggregate re-shuffled the pair stream: {bad}"
-    assert "BroadcastHashJoin" in plan  # cands side broadcast
+    for search in (R._tfidf_search, R._bm25_search):
+        plan = physical_plan(search(spark, sf_dir, R.PROBE_DOC_MOD))
+        bad = [
+            line
+            for line in plan.splitlines()
+            if "Exchange hashpartitioning" in line
+            and "ENSURE_REQUIREMENTS" in line
+            and re.search(r"probe_uid#\d+L?, (chunk_uid|cand_uid)", line)
+        ]
+        assert not bad, f"{search.__name__} re-shuffled the pair stream: {bad}"
+        assert "BroadcastHashJoin" in plan  # cands side broadcast
 
 
 # --- r11: postings-cap recall differential + deferred large-probe ----
@@ -274,26 +276,28 @@ def test_large_probe_regime_is_deferred(spark, sf_dir, monkeypatch):
     DeferredDataFrame that serves the declared schema without
     materializing, the declared schema equals the lazy branch's, and
     the materialized rows equal the lazy branch's (the regime choice
-    changes the plan, never the result)."""
+    changes the plan, never the result). Both search families (TF-IDF
+    and BM25) and their RRF fusion are checked."""
     import map_reduce_spark.functions.retrieval as R
     from map_reduce_spark.plans.deferred import DeferredDataFrame
 
-    lazy = R._tfidf_search(spark, sf_dir, R.PROBE_DOC_MOD)
-    assert not isinstance(lazy, DeferredDataFrame)  # fixture regime
-    lazy_rows = [tuple(r) for r in lazy.collect()]
+    searches = (R._tfidf_search, R._bm25_search)
+    lazy = {s: s(spark, sf_dir, R.PROBE_DOC_MOD) for s in searches}
+    assert not any(isinstance(df, DeferredDataFrame) for df in lazy.values())
+    lazy_rows = {s: [tuple(r) for r in df.collect()] for s, df in lazy.items()}
 
     monkeypatch.setattr(R, "PROBE_BROADCAST_MAX_DOCS", 0)
-    for builder, ref_schema in [
-        (lambda: R._tfidf_search(spark, sf_dir, R.PROBE_DOC_MOD), lazy.dtypes),
-        (lambda: R.rag_rrf_fusion_search(spark, sf_dir), None),
-    ]:
+    builders = [
+        (lambda s=s: s(spark, sf_dir, R.PROBE_DOC_MOD), s) for s in searches
+    ] + [(lambda: R.rag_rrf_fusion_search(spark, sf_dir), None)]
+    for builder, ref in builders:
         got = builder()
         assert isinstance(got, DeferredDataFrame)
         declared = list(got.dtypes)  # cheap introspection, pre-thunk
         assert not got.is_materialized
-        if ref_schema is not None:
-            assert declared == list(ref_schema)  # dtypes, house pin
-            assert [tuple(r) for r in got.collect()] == lazy_rows
+        if ref is not None:
+            assert declared == list(lazy[ref].dtypes)  # dtypes, house pin
+            assert [tuple(r) for r in got.collect()] == lazy_rows[ref]
         else:
             got.collect()  # materializes; declared dtypes must hold
         assert list(got.dtypes) == declared
