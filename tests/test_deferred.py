@@ -80,6 +80,24 @@ def test_all_builders_run_zero_jobs_at_build(spark, sf_dir):
         assert not df.is_materialized, name
 
 
+@pytest.mark.parametrize(
+    "name",
+    # one cheap representative per family, each checked on its own;
+    # test_every_deferred_schema_matches_materialized covers the rest
+    ["streaming_tumbling_type_counts", "sim_knn_ivf", "dedup_duplicate_clusters"],
+)
+def test_declared_schema_matches_materialized(spark, sf_dir, name):
+    specs = load_all()
+    df = specs[name].builder(spark, sf_dir)
+    declared = list(df.dtypes)
+    declared_cols = list(df.columns)
+    n = df.count()  # first action: materializes
+    assert n >= 0
+    assert df.is_materialized
+    assert list(df.dtypes) == declared, name
+    assert list(df.columns) == declared_cols, name
+
+
 def test_every_deferred_schema_matches_materialized(spark, sf_dir):
     """Every deferred entry — discovered from the registry, as in
     test_all_builders_run_zero_jobs_at_build — declares exactly the
