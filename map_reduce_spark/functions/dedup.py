@@ -681,11 +681,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction and the SAME oracle SQL, but candidate pairs come from a
     banded sketch equi-join instead of the quadratic theta join.
     """
-    from map_reduce_spark.functions.similarity import dot_nc, with_norm
+    from map_reduce_spark.functions.similarity import dot_nc, embeddings
 
-    emb = with_norm(
-        load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm"
-    )
+    emb = embeddings(spark, sf_dir)
     a = emb.select(
         F.col("vec_id").alias("ia"), F.col("dv").alias("dva"), F.col("norm").alias("na")
     )
@@ -1334,7 +1332,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _GEMM_MIN_BLOCK = 256  # don't split finer (per-task overhead dominates)
-_GEMM_MAX_BLOCK = 8192  # payload cap: 8192 x 64 float64 ~ 4 MB per block
 
 
 @register("dedup_embedding_lsh", oracle_sql=_EMBEDDING_DUP_SQL)
@@ -1370,6 +1367,12 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
+    from map_reduce_spark.functions.similarity import (
+        GEMM_MAX_BLOCK,
+        make_unit_rows,
+        vector_blocks,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings")
     # Driver-side sizing scalar from the parquet footer(s) (row count
     # metadata, not a Spark job) — keeps this builder lazy like the
@@ -1378,14 +1381,10 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = parquet_num_rows(f"{sf_dir}/embeddings.parquet")
     par = spark.sparkContext.defaultParallelism
     nb_par = math.isqrt(8 * par) + 1  # enough pairs to fill the cluster
-    nb_mem = -(-n // _GEMM_MAX_BLOCK)  # payload cap
+    nb_mem = -(-n // GEMM_MAX_BLOCK)  # payload cap
     nb_min = max(1, -(-n // _GEMM_MIN_BLOCK))  # don't under-fill blocks
     nb = min(nb_min, max(nb_par, nb_mem))
-    blocks = (
-        emb.select((F.col("vec_id") % nb).alias("blk"), "vec_id", "embedding")
-        .groupBy("blk")
-        .agg(F.collect_list(F.struct("vec_id", "embedding")).alias("items"))
-    )
+    blocks = vector_blocks(emb, F.col("vec_id") % nb, "blk", "items")
     block_pairs = (
         spark.range(nb * nb)
         .select(
@@ -1402,6 +1401,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         blocks.select(F.col("blk").alias("bb"), F.col("items").alias("items_b")), "bb"
     )
 
+    unit_rows = make_unit_rows()
+
     def gemm(batches):
         import numpy as np
 
@@ -1410,12 +1411,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             for ba, bb, items_a, items_b in zip(
                 pdf["ba"], pdf["bb"], pdf["items_a"], pdf["items_b"]
             ):
-                ids_a = np.array([r["vec_id"] for r in items_a], dtype=np.int64)
-                ids_b = np.array([r["vec_id"] for r in items_b], dtype=np.int64)
-                A = np.stack([r["embedding"] for r in items_a]).astype(np.float64)
-                B = np.stack([r["embedding"] for r in items_b]).astype(np.float64)
-                A /= np.linalg.norm(A, axis=1, keepdims=True)
-                B /= np.linalg.norm(B, axis=1, keepdims=True)
+                ids_a, A = unit_rows(items_a)
+                ids_b, B = unit_rows(items_b)
                 C = A @ B.T
                 # Emit each unordered pair once, smaller id first. A
                 # same-block tile holds {x,y} at BOTH (x,y) and (y,x),

@@ -41,10 +41,10 @@ from map_reduce_spark.functions.clustering import (
     kmeans_assign,
     lloyd_kmeans,
 )
-from map_reduce_spark.functions.similarity import with_norm
+from map_reduce_spark.functions.similarity import embeddings
 from map_reduce_spark.plans.transient import transient_persist
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import load_spread, parquet_num_rows
+from map_reduce_spark.sources import parquet_num_rows
 
 SEMDEDUP_TAU = 0.93
 # The paper's scale knob: K grows with the corpus so cluster sizes —
@@ -218,12 +218,7 @@ def dedup_semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_spark.plans.deferred import deferred
 
     def build() -> DataFrame:
-        emb = with_norm(
-            load_spread(spark, sf_dir, "embeddings"),
-            "embedding",
-            "dv",
-            "norm",
-        )
+        emb = embeddings(spark, sf_dir)
         n = parquet_num_rows(f"{sf_dir}/embeddings.parquet")
         k = max(KM_K, -(-n // SEMDEDUP_TARGET_CLUSTER))
         # telemetry dict wired so the skew-guard WARNING fires in

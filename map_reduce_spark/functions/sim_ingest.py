@@ -16,14 +16,19 @@ result log) is ``sources/bucketed.BucketedState``, shared with
 State:
 
 - driver-side model: the centroid table (N_CELLS x 64 doubles — tiny
-  by construction; the coarse quantizer is FROZEN at bootstrap, which
-  is the production semantic: FAISS/Milvus-style IVF indexes assign
-  new vectors to existing cells and treat quantizer retraining as a
-  rebuild event, not maintenance).
+  by construction), trained by ``similarity.train_centroids``, the
+  same trainer ``sim_knn_ivf`` memoizes per session. The quantizer
+  is FROZEN at bootstrap, which is the production semantic:
+  FAISS/Milvus-style IVF indexes assign new vectors to existing cells
+  and treat quantizer retraining as a rebuild event, not maintenance.
 - ``<name>_cells`` (vec_id, dv, norm, cell), bucketed by cell — the
   cell-assigned corpus vectors. dv/norm are precomputed once at
   ingest (the with_norm hoist), so steady-state probes never touch
   float32 payloads or recompute norms.
+
+Search is the shared kNN pipeline of similarity.py: the index's cells
+are the candidate generator, and ``similarity.exact_topk`` ranks the
+pairs.
 
 Per-batch cost decomposition (measured in SIM_INGEST_LADDER_r12.json):
 
@@ -56,16 +61,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from map_reduce_spark.functions.dedup_ingest import _DELETE_AFTER_BATCH, _EPOCH_MODS
 from map_reduce_spark.functions.similarity import (
-    KMEANS_ITERS,
-    N_CELLS,
     N_PROBE,
-    TOP_K,
     _with_nearest_cells,
-    dot_nc,
+    corpus_side,
+    exact_topk,
+    probe_side,
+    train_centroids,
     with_norm,
 )
 from map_reduce_spark.registry import register
@@ -88,41 +92,6 @@ SIM_INGEST_PROBE_STRIDE = 25
 # batch searches its first 250 scheduled probes — fixed query load,
 # the regime the ladder's sf1 rung measures.
 SIM_INGEST_MAX_PROBES_PER_BATCH = 250
-
-
-def train_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> list[list[float]]:
-    """K-means coarse quantizer over an arbitrary (vec_id, embedding)
-    frame — the bootstrap-corpus generalization of
-    ``similarity.ivf_centroids`` (same seeding, same iteration count,
-    same cosine assignment), returning the driver-side model. The
-    collect()s are model-sized (n_cells x dim doubles and one
-    (cell, pos) mean table per iteration), the sanctioned bounded
-    class."""
-    emb = with_norm(emb, "embedding", "dv", "norm")
-    init = (
-        emb.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
-    )
-    centroids = [[float(x) for x in r.embedding] for r in init]
-    if len(centroids) != n_cells:
-        raise ValueError(
-            f"bootstrap corpus has only {len(centroids)} vectors; "
-            f"need >= {n_cells} to seed the IVF quantizer"
-        )
-    for _ in range(KMEANS_ITERS):
-        assigned = _with_nearest_cells(
-            emb, "dv", "norm", centroids, 1, "cells"
-        ).withColumn("cell", F.col("cells")[0])
-        rows = (
-            assigned.select("cell", F.posexplode("dv").alias("pos", "v"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("v").alias("m"))
-            .collect()
-        )
-        new = {r.cell: centroids[r.cell][:] for r in rows}
-        for r in rows:
-            new[r.cell][r.pos] = float(r.m)
-        centroids = [new.get(i, centroids[i]) for i in range(n_cells)]
-    return centroids
 
 
 class SimIngestIndex(BucketedState):
@@ -188,38 +157,14 @@ class SimIngestIndex(BucketedState):
         never shuffles."""
         # tombstone exclusion (r12): deleted vectors stay physical
         # until compact(); the index scan stays shuffle-free
-        index = self._live(self.cells_t).select(
-            F.col("vec_id").alias("neighbor_id"), "dv", "norm", "cell"
+        index = corpus_side(self._live(self.cells_t), "cell")
+        p = probe_side(
+            self._assign(probes, n_probe, "cells"), F.explode("cells").alias("cell")
         )
-        p = self._assign(probes, n_probe, "cells").select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("dv").alias("probe_dv"),
-            F.col("norm").alias("probe_norm"),
-            F.explode("cells").alias("cell"),
-        )
-        cand = index.join(F.broadcast(p), ["cell"]).filter(
+        pairs = index.join(F.broadcast(p), ["cell"]).filter(
             F.col("neighbor_id") != F.col("probe_id")
         )
-        # same fold order as sim_knn_bruteforce -> bit-identical scores
-        scored = cand.withColumn(
-            "score_raw",
-            dot_nc("probe_dv", "dv")
-            / (F.col("probe_norm") * F.col("norm")),
-        ).drop("dv", "probe_dv")
-        w = W.partitionBy("probe_id").orderBy(
-            F.desc("score_raw"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select(
-                "probe_id",
-                "neighbor_id",
-                F.round("score_raw", 6).alias("score"),
-                "rank",
-            )
-            .orderBy("probe_id", "rank")
-        )
+        return exact_topk(pairs).orderBy("probe_id", "rank")
 
     def ingest(
         self, batch: DataFrame, probes: DataFrame, n_probe: int = N_PROBE

@@ -1,22 +1,36 @@
-"""Similarity search over the ``embeddings`` table (array<float>[64]).
+"""Vector search over the ``embeddings`` table (array<float>[64]).
 
-- brute-force cosine top-k   — the exact baseline (broadcast probes,
-                               single pass over the corpus, per-probe
-                               top-k via window)
-- random-hyperplane LSH ANN  — the scale path: 64-bit sign sketches,
-                               banded multi-probe bucket equi-join,
-                               hamming prefilter, exact rerank of
-                               candidates only
-- per-label centroids        — dimension-wise aggregation via
-                               posexplode (mergeable at any scale)
+Every kNN entry is one candidate generator in front of one shared
+exact tail (probe -> candidates -> exact rank):
 
-All vector math is built-in higher-order array functions
-(zip_with / aggregate) in whole-stage codegen — no Python UDFs.
+- ``sim_knn_bruteforce`` — every (probe, corpus) pair: a broadcast
+  cross join
+- ``sim_knn_lsh``        — sign-sketch band equi-join + hamming
+  prefilter
+- ``sim_knn_ivf``        — k-means coarse cells, equi-join on cell
+- ``sim_knn_pq`` / ``sim_knn_ivfpq`` / ``sim_knn_sq8`` — an
+  approximate score (PQ lookup tables, IVF cells + PQ, 8-bit scalar
+  codes) shortlists candidates per probe
+- ``sim_ingest.SimIngestIndex.probe`` — IVF cells of a maintained
+  index table
 
-Scale notes: brute-force is O(n_probes * n_corpus) with the probe set
-broadcast — correct approach up to ~thousands of probes; beyond that
-the LSH/IVF path bounds candidates per probe. Embeddings stay 64-d
-float; cast to double only inside the dot product.
+Probes are ``vec_id % PROBE_MOD == 0``. ``probe_side``/``corpus_side``
+give every generator the same column names, and ``exact_topk`` scores
+the pairs with one cosine fold (bit-identical across entries) and
+keeps the per-probe top-k through one ``row_number`` window
+(``top_per_probe``). The quantized entries reach it through
+``_rerank_exact``.
+
+The other entries: ``sim_range_search`` (exact radius search as
+blocked-GEMM tiles, sharing ``vector_blocks``/``make_unit_rows`` with
+``dedup.dedup_embedding_lsh``), ``sim_centroids_by_label`` and
+``sim_pairwise_label_affinity``.
+
+Pair scores are built-in higher-order array functions
+(``zip_with``/``aggregate``). Dense numpy work runs in pandas UDFs:
+the LSH sketch, the PQ training/encode/lookup passes and the GEMM
+tiles. Embeddings stay 64-d float; they are cast to double only for
+the math.
 """
 
 from __future__ import annotations
@@ -111,6 +125,106 @@ def with_norm(df: DataFrame, vec_col: str, dv_col: str, norm_col: str) -> DataFr
     return df.withColumn(norm_col, F.expr(_sqnorm_sql(dv_col)))
 
 
+# ---------------------------------------------------------------------------
+# The shared kNN pipeline: probe and corpus shapes, one exact top-k tail
+# ---------------------------------------------------------------------------
+
+
+def embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The spread corpus with ``dv`` and ``norm`` hoisted (``with_norm``)."""
+    return with_norm(
+        load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm"
+    )
+
+
+def is_probe() -> Column:
+    """The probe set: 1% of the corpus, by id."""
+    return F.col("vec_id") % PROBE_MOD == 0
+
+
+def probe_side(vecs: DataFrame, *extra) -> DataFrame:
+    """``(vec_id, dv, norm)`` rows as the probe side of a pair join."""
+    return vecs.select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("dv").alias("probe_dv"),
+        F.col("norm").alias("probe_norm"),
+        *extra,
+    )
+
+
+def corpus_side(vecs: DataFrame, *extra) -> DataFrame:
+    """``(vec_id, dv, norm)`` rows as the neighbor side of a pair join."""
+    return vecs.select(F.col("vec_id").alias("neighbor_id"), "dv", "norm", *extra)
+
+
+def cosine() -> Column:
+    """Cosine of a probe/neighbor pair. Norms are hoisted per vector,
+    so the only per-pair work is one dot product, and every entry
+    folds it in the same order: scores are bit-identical across
+    entries and equal to the oracle's at 6 dp."""
+    return dot_nc("probe_dv", "dv") / (F.col("probe_norm") * F.col("norm"))
+
+
+def top_per_probe(df: DataFrame, score: str, n: int) -> DataFrame:
+    """The ``n`` best rows per probe by ``score`` (ties to the smaller
+    neighbor id), ranked 1..n in column ``rank``."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("probe_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= n)
+
+
+def exact_topk(pairs: DataFrame) -> DataFrame:
+    """Exact cosine top-``TOP_K`` over candidate pairs carrying the
+    ``probe_side`` and ``corpus_side`` columns; unordered
+    ``(probe_id, neighbor_id, score, rank)``."""
+    scored = pairs.withColumn("score_raw", cosine())
+    return top_per_probe(scored, "score_raw", TOP_K).select(
+        "probe_id", "neighbor_id", F.round("score_raw", 6).alias("score"), "rank"
+    )
+
+
+def _n_probes(n_corpus: int) -> int:
+    """Probe count of a corpus with ids 0..n_corpus-1."""
+    return -(-n_corpus // PROBE_MOD)
+
+
+# GEMM payload cap: 8192 x 64 float64 ~ 4 MB per block
+GEMM_MAX_BLOCK = 8192
+
+
+def vector_blocks(
+    emb: DataFrame, block_expr: Column, key: str, items: str
+) -> DataFrame:
+    """Deal ``(vec_id, embedding)`` rows into blocks: one row per block
+    id ``key``, its vectors packed into the list column ``items`` — the
+    payload of one side of a blocked-GEMM tile."""
+    return (
+        emb.select(block_expr.alias(key), "vec_id", "embedding")
+        .groupBy(key)
+        .agg(F.collect_list(F.struct("vec_id", "embedding")).alias(items))
+    )
+
+
+def make_unit_rows():
+    """Build ``unit_rows(items)``: a packed ``vector_blocks`` block as
+    ``(ids, float64 matrix of L2-normalized rows)``.
+
+    A factory, like ``vector_udfs.make_sign_sketch_udf``: the nested
+    function pickles by value into the GEMM tile closures, so executors
+    need numpy but not an import of this package."""
+
+    def unit_rows(items):
+        import numpy as np
+
+        ids = np.array([r["vec_id"] for r in items], dtype=np.int64)
+        m = np.stack([r["embedding"] for r in items]).astype(np.float64)
+        m /= np.linalg.norm(m, axis=1, keepdims=True)
+        return ids, m
+
+    return unit_rows
+
+
 @register(
     "sim_knn_bruteforce",
     oracle_sql=f"""
@@ -135,40 +249,15 @@ def sim_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is scanned once, never shuffled for the join; the only
     shuffle is the per-probe top-k window on probe_id.
     """
-    emb = with_norm(
-        load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm"
+    emb = embeddings(spark, sf_dir)
+    pairs = corpus_side(emb).join(
+        F.broadcast(probe_side(emb.filter(is_probe()))),
+        F.col("neighbor_id") != F.col("probe_id"),
     )
-    probes = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("dv").alias("probe_dv"),
-        F.col("norm").alias("probe_norm"),
-    )
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"), "dv", "norm")
-    scored = (
-        corpus.join(F.broadcast(probes), F.col("neighbor_id") != F.col("probe_id"))
-        .withColumn(
-            "score_raw",
-            dot_nc("probe_dv", "dv") / (F.col("probe_norm") * F.col("norm")),
-        )
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("probe_id").orderBy(F.desc("score_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round("score_raw", 6).alias("score"),
-            "rank",
-        )
-        .transform(ordered_result, "probe_id", "rank")
-    )
+    return exact_topk(pairs).transform(ordered_result, "probe_id", "rank")
 
 
 RANGE_TAU = 0.3  # radius for the range (all-neighbors-within) search
-_RANGE_MAX_BLOCK = 8192  # GEMM payload cap: 8192 x 64 float64 ~ 4 MB
 
 
 @register(
@@ -217,37 +306,29 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not a Spark job, so the builder stays lazy; handles single-file
     # and multi-part directory layouts alike (r6 ADVICE).
     n = parquet_num_rows(f"{sf_dir}/embeddings.parquet")
-    n_probes = max(1, n // PROBE_MOD)
-    nb_c = max(1, -(-n // _RANGE_MAX_BLOCK))
-    nb_p = max(1, -(-n_probes // _RANGE_MAX_BLOCK))
+    nb_c = max(1, -(-n // GEMM_MAX_BLOCK))
+    nb_p = max(1, -(-_n_probes(n) // GEMM_MAX_BLOCK))
 
     emb = load_spread(spark, sf_dir, "embeddings")
-    corpus_blocks = (
-        emb.select((F.col("vec_id") % nb_c).alias("cb"), "vec_id", "embedding")
-        .groupBy("cb")
-        .agg(F.collect_list(F.struct("vec_id", "embedding")).alias("items_c"))
-    )
-    probe_blocks = (
-        emb.filter(F.col("vec_id") % PROBE_MOD == 0)
-        # Deal by the probe INDEX (vec_id DIV PROBE_MOD), not vec_id:
-        # probe ids are all multiples of PROBE_MOD, so `vec_id % nb_p`
-        # only hits multiples of gcd(PROBE_MOD, nb_p) — an even nb_p
-        # would pile every probe into a fraction of the blocks and
-        # break the payload cap. The index is sequential, so its mod
-        # deal is uniform for any nb_p.
-        .select(
-            (F.expr(f"vec_id DIV {PROBE_MOD}") % nb_p).alias("pb"),
-            "vec_id",
-            "embedding",
-        )
-        .groupBy("pb")
-        .agg(F.collect_list(F.struct("vec_id", "embedding")).alias("items_p"))
+    corpus_blocks = vector_blocks(emb, F.col("vec_id") % nb_c, "cb", "items_c")
+    # Deal by the probe INDEX (vec_id DIV PROBE_MOD), not vec_id:
+    # probe ids are all multiples of PROBE_MOD, so `vec_id % nb_p`
+    # only hits multiples of gcd(PROBE_MOD, nb_p) — an even nb_p
+    # would pile every probe into a fraction of the blocks and
+    # break the payload cap. The index is sequential, so its mod
+    # deal is uniform for any nb_p.
+    probe_blocks = vector_blocks(
+        emb.filter(is_probe()),
+        F.expr(f"vec_id DIV {PROBE_MOD}") % nb_p,
+        "pb",
+        "items_p",
     )
     grid = spark.range(nb_p * nb_c).select(
         (F.col("id") % nb_p).alias("pb"),
         F.expr(f"id DIV {nb_p}").alias("cb"),
     )
     tiles = grid.join(probe_blocks, "pb").join(corpus_blocks, "cb")
+    unit_rows = make_unit_rows()
 
     def gemm(batches):
         import numpy as np
@@ -255,12 +336,8 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             out_p, out_n, out_s = [], [], []
             for items_p, items_c in zip(pdf["items_p"], pdf["items_c"]):
-                ids_p = np.array([r["vec_id"] for r in items_p], dtype=np.int64)
-                ids_c = np.array([r["vec_id"] for r in items_c], dtype=np.int64)
-                P = np.stack([r["embedding"] for r in items_p]).astype(np.float64)
-                C = np.stack([r["embedding"] for r in items_c]).astype(np.float64)
-                P /= np.linalg.norm(P, axis=1, keepdims=True)
-                C /= np.linalg.norm(C, axis=1, keepdims=True)
+                ids_p, P = unit_rows(items_p)
+                ids_c, C = unit_rows(items_c)
                 # Mask on the RAW score and emit it raw; Spark's
                 # F.round (HALF_UP, matching DuckDB round()) happens at
                 # the end — np.round is half-even and would disagree
@@ -382,10 +459,7 @@ def sketched_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-session analogue of writing the index table to parquet (which
     is what a 10^9-vector deployment would do — the build is one
     narrow pass, the index is ~24 bytes/vector + ids)."""
-    emb = with_norm(
-        load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm"
-    )
-    return emb.withColumn("sketch", _sketch("dv"))
+    return embeddings(spark, sf_dir).withColumn("sketch", _sketch("dv"))
 
 
 @register("sim_knn_lsh", oracle_sql=None)
@@ -425,12 +499,7 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells decouple per-probe work from corpus size.
     """
     sk = sketched_embeddings(spark, sf_dir)
-    probes = sk.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("dv").alias("probe_dv"),
-        F.col("norm").alias("probe_norm"),
-        F.col("sketch").alias("probe_sketch"),
-    )
+    probes = probe_side(sk.filter(is_probe()), F.col("sketch").alias("probe_sketch"))
     # Band rows carry the 8-byte full sketch alongside the ids so the
     # hamming prefilter can run MAP-SIDE on the band join's output —
     # before the distinct and before any vector payload is joined.
@@ -465,27 +534,10 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Rejoin vector payloads by id: the band index never duplicates
     # the 64-d vectors x bands, only ids + an 8-byte sketch.
-    corpus = sk.select(F.col("vec_id").alias("neighbor_id"), "dv", "norm")
-    scored = (
-        cand.join(corpus, "neighbor_id")
-        .join(F.broadcast(probes), "probe_id")
-        .withColumn(
-            "score_raw",
-            dot_nc("probe_dv", "dv")
-            / (F.col("probe_norm") * F.col("norm")),
-        )
+    pairs = cand.join(corpus_side(sk), "neighbor_id").join(
+        F.broadcast(probes), "probe_id"
     )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("probe_id").orderBy(F.desc("score_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "probe_id", "neighbor_id", F.round("score_raw", 6).alias("score"), "rank"
-        )
-        .transform(ordered_result, "probe_id", "rank")
-    )
+    return exact_topk(pairs).transform(ordered_result, "probe_id", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -782,31 +834,28 @@ def _model_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return (spark.sparkContext.applicationId, sf_dir)
 
 
-def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    """Train the coarse quantizer: K-means over the corpus, cosine
-    assignment, dimension-wise mean recompute.
+def train_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> list[list[float]]:
+    """Train the coarse quantizer over a ``(vec_id, embedding)`` frame:
+    K-means with cosine assignment and a dimension-wise mean
+    recompute, ``KMEANS_ITERS`` rounds.
 
-    The centroid table (N_CELLS x DIM doubles) is the one structure
+    The centroid table (n_cells x dim doubles) is the one structure
     IVF *requires* on the driver — it is tiny by construction (the
     whole point of a coarse quantizer), so collect() here is the
     standard pattern, not a scale bug: each iteration is one
     distributed assign (map-only, centroids broadcast as literals)
-    plus one decomposable avg shuffle. Init = first N_CELLS vectors
+    plus one decomposable avg shuffle. Init = first n_cells vectors
     (deterministic; k-means++ would sharpen cells but adds passes).
     """
-    key = _model_key(spark, sf_dir)
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
-    emb = with_norm(
-        load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm"
-    )
-    # Seed from the first N_CELLS rows by vec_id order — robust to
-    # offset/sparse id spaces (filter(vec_id < N_CELLS) is not).
-    init = emb.select("vec_id", "embedding").orderBy("vec_id").limit(N_CELLS).collect()
+    emb = with_norm(emb, "embedding", "dv", "norm")
+    # Seed from the first n_cells rows by vec_id order — robust to
+    # offset/sparse id spaces (filter(vec_id < n_cells) is not).
+    init = emb.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
     centroids = [[float(x) for x in r.embedding] for r in init]
-    if len(centroids) != N_CELLS:
+    if len(centroids) != n_cells:
         raise ValueError(
-            f"corpus has only {len(centroids)} vectors; need >= {N_CELLS} to seed IVF"
+            f"corpus has only {len(centroids)} vectors; "
+            f"need >= {n_cells} to seed the IVF quantizer"
         )
     for _ in range(KMEANS_ITERS):
         assigned = _with_nearest_cells(
@@ -821,9 +870,17 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
         new = {r.cell: centroids[r.cell][:] for r in rows}
         for r in rows:
             new[r.cell][r.pos] = float(r.m)
-        centroids = [new.get(i, centroids[i]) for i in range(N_CELLS)]
-    _CENTROID_CACHE[key] = centroids
+        centroids = [new.get(i, centroids[i]) for i in range(n_cells)]
     return centroids
+
+
+def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    """The corpus's coarse quantizer, trained once per (session,
+    corpus) by ``train_centroids``."""
+    key = _model_key(spark, sf_dir)
+    if key not in _CENTROID_CACHE:
+        _CENTROID_CACHE[key] = train_centroids(load_spread(spark, sf_dir, "embeddings"))
+    return _CENTROID_CACHE[key]
 
 
 def knn_ivf(
@@ -839,44 +896,19 @@ def knn_ivf(
     exact brute force (the recall=1 invariant the tests pin).
     """
     centroids = ivf_centroids(spark, sf_dir)
-    emb = with_norm(
-        load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm"
-    )
-    corpus = _with_nearest_cells(emb, "dv", "norm", centroids, 1, "cells").select(
-        F.col("vec_id").alias("neighbor_id"),
-        "dv",
-        "norm",
+    emb = embeddings(spark, sf_dir)
+    corpus = corpus_side(
+        _with_nearest_cells(emb, "dv", "norm", centroids, 1, "cells"),
         F.col("cells")[0].alias("cell"),
     )
-    probes = _with_nearest_cells(
-        emb.filter(F.col("vec_id") % PROBE_MOD == 0), "dv", "norm", centroids, n_probe, "cells"
-    ).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("dv").alias("probe_dv"),
-        F.col("norm").alias("probe_norm"),
+    probes = probe_side(
+        _with_nearest_cells(emb.filter(is_probe()), "dv", "norm", centroids, n_probe, "cells"),
         F.explode("cells").alias("cell"),
     )
-    cand = corpus.join(
-        F.broadcast(probes), ["cell"]
-    ).filter(F.col("neighbor_id") != F.col("probe_id"))
-    from pyspark.sql import Window as W
-
-    # Norms were hoisted once per vector (with_norm) — the per-pair
-    # work is a single 64-term dot product, same float-op order as
-    # sim_knn_bruteforce so scores (and hence ranks) are bit-identical.
-    scored = cand.withColumn(
-        "score_raw",
-        dot_nc("probe_dv", "dv") / (F.col("probe_norm") * F.col("norm")),
-    ).drop("dv", "probe_dv")
-    w = W.partitionBy("probe_id").orderBy(F.desc("score_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "probe_id", "neighbor_id", F.round("score_raw", 6).alias("score"), "rank"
-        )
-        .transform(ordered_result, "probe_id", "rank")
+    pairs = corpus.join(F.broadcast(probes), ["cell"]).filter(
+        F.col("neighbor_id") != F.col("probe_id")
     )
+    return exact_topk(pairs).transform(ordered_result, "probe_id", "rank")
 
 
 # Shared result schema of every registered kNN entry — also the
@@ -1059,11 +1091,9 @@ def _pq_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured: 32 tasks x ~0.2 s run, <0.5 s total CPU). One einsum
     # batch handles thousands of probes; partition count derives from
     # the footer row count (metadata read), not a local constant.
-    n_probes = -(-parquet_num_rows(f"{sf_dir}/embeddings.parquet") // PROBE_MOD)
-    probes = (
-        emb.filter(F.col("vec_id") % PROBE_MOD == 0)
-        .select("vec_id", "dv")
-        .coalesce(max(1, -(-n_probes // 4096)))
+    n_probes = _n_probes(parquet_num_rows(f"{sf_dir}/embeddings.parquet"))
+    probes = emb.filter(is_probe()).select("vec_id", "dv").coalesce(
+        max(1, -(-n_probes // 4096))
     )
 
     def luts(it):
@@ -1104,50 +1134,24 @@ def _adc_dot() -> Column:
     )
 
 
-def _adc_shortlist_exact_rerank(
-    spark: SparkSession, sf_dir: str, adc: DataFrame, rerank: int
+def _rerank_exact(
+    spark: SparkSession, sf_dir: str, approx: DataFrame, score: str, depth: int
 ) -> DataFrame:
-    """Shared tail of the PQ family: keep the top ``rerank`` ADC
-    candidates per probe, re-fetch their raw vectors by equi-join on
-    vec_id (only probes x rerank rows ever touch a full vector), exact
-    cosine with brute-force's float-op order, final top-k.
+    """Shared tail of the quantized entries (PQ, IVF-PQ, SQ8): keep the
+    top ``depth`` candidates per probe by the approximate ``score``,
+    re-fetch their raw vectors by equi-join on vec_id (only probes x
+    depth rows ever touch a full vector), then ``exact_topk``.
 
-    ``adc`` must carry (probe_id, neighbor_id, adc).
+    ``approx`` must carry (probe_id, neighbor_id, <score>).
     """
-    from pyspark.sql import Window as W
-
-    emb = with_norm(load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm")
-    wa = W.partitionBy("probe_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = adc.withColumn("_ar", F.row_number().over(wa)).filter(F.col("_ar") <= rerank)
-    exact = (
-        cand.join(
-            emb.select(F.col("vec_id").alias("neighbor_id"), "dv", "norm"),
-            "neighbor_id",
-        )
-        .join(
-            F.broadcast(
-                emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-                    F.col("vec_id").alias("probe_id"),
-                    F.col("dv").alias("probe_dv"),
-                    F.col("norm").alias("probe_norm"),
-                )
-            ),
-            "probe_id",
-        )
-        .withColumn(
-            "score_raw",
-            dot_nc("probe_dv", "dv") / (F.col("probe_norm") * F.col("norm")),
-        )
+    emb = embeddings(spark, sf_dir)
+    pairs = (
+        top_per_probe(approx, score, depth)
+        .select("probe_id", "neighbor_id")
+        .join(corpus_side(emb), "neighbor_id")
+        .join(F.broadcast(probe_side(emb.filter(is_probe()))), "probe_id")
     )
-    we = W.partitionBy("probe_id").orderBy(F.desc("score_raw"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "probe_id", "neighbor_id", F.round("score_raw", 6).alias("score"), "rank"
-        )
-        .transform(ordered_result, "probe_id", "rank")
-    )
+    return exact_topk(pairs).transform(ordered_result, "probe_id", "rank")
 
 
 def knn_pq(spark: SparkSession, sf_dir: str, rerank: int = PQ_RERANK) -> DataFrame:
@@ -1176,7 +1180,7 @@ def knn_pq(spark: SparkSession, sf_dir: str, rerank: int = PQ_RERANK) -> DataFra
         .withColumn("adc", _adc_dot() / (F.col("probe_norm") * F.col("c_norm")))
         .select("probe_id", "neighbor_id", "adc")
     )
-    return _adc_shortlist_exact_rerank(spark, sf_dir, adc, rerank)
+    return _rerank_exact(spark, sf_dir, adc, "adc", rerank)
 
 
 @register("sim_knn_pq", oracle_sql=None)
@@ -1227,7 +1231,7 @@ def knn_ivfpq(
     to exact brute force (pinned by the tests).
     """
     centroids = ivf_centroids(spark, sf_dir)
-    emb = with_norm(load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm")
+    emb = embeddings(spark, sf_dir)
     corpus = (
         _with_nearest_cells(emb.select("vec_id", "dv", "norm"), "dv", "norm", centroids, 1, "cells")
         .select(F.col("vec_id").alias("v_id"), F.col("cells")[0].alias("cell"))
@@ -1235,12 +1239,7 @@ def knn_ivfpq(
         .select(F.col("v_id").alias("neighbor_id"), "cell", "codes", F.col("norm").alias("c_norm"))
     )
     probe_cells = _with_nearest_cells(
-        emb.filter(F.col("vec_id") % PROBE_MOD == 0),
-        "dv",
-        "norm",
-        centroids,
-        n_probe,
-        "cells",
+        emb.filter(is_probe()), "dv", "norm", centroids, n_probe, "cells"
     ).select(F.col("vec_id").alias("probe_id"), F.explode("cells").alias("cell"))
     probes = _pq_probes(spark, sf_dir).join(probe_cells, "probe_id")
     adc = (
@@ -1249,7 +1248,7 @@ def knn_ivfpq(
         .withColumn("adc", _adc_dot() / (F.col("probe_norm") * F.col("c_norm")))
         .select("probe_id", "neighbor_id", "adc")
     )
-    return _adc_shortlist_exact_rerank(spark, sf_dir, adc, rerank)
+    return _rerank_exact(spark, sf_dir, adc, "adc", rerank)
 
 
 @register("sim_knn_ivfpq", oracle_sql=None)
@@ -1338,66 +1337,24 @@ def knn_sq8(spark: SparkSession, sf_dir: str, rerank: int = SQ_RERANK) -> DataFr
     exchanges are the two per-probe top-k windows and the
     neighbor-side exact-vector equi-join for the shortlist.
     """
-    from pyspark.sql import Window as W
-
-    emb = with_norm(load_spread(spark, sf_dir, "embeddings"), "embedding", "dv", "norm")
-    params = sq8_params(emb)
-    coded = emb.crossJoin(F.broadcast(params)).select(
-        "vec_id", "dv", "norm", _sq_quantize("dv").alias("code"), "mins", "spans"
-    )
-    recon = coded.select(
-        "vec_id", _sq_reconstruct("code").alias("rv")
-    ).withColumn(
-        "rnorm",
-        F.expr(_sqnorm_sql("rv")),
-    )
-    probes = recon.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("rv").alias("p_rv"),
-        F.col("rnorm").alias("p_rnorm"),
+    emb = embeddings(spark, sf_dir)
+    # Dequantized vectors under the exact path's names, so one
+    # ``cosine()`` scores both passes.
+    recon = (
+        emb.crossJoin(F.broadcast(sq8_params(emb)))
+        .select("vec_id", _sq_quantize("dv").alias("code"), "mins", "spans")
+        .select("vec_id", _sq_reconstruct("code").alias("dv"))
+        .withColumn("norm", F.expr(_sqnorm_sql("dv")))
     )
     approx = (
-        recon.select(F.col("vec_id").alias("neighbor_id"), "rv", "rnorm")
-        .join(F.broadcast(probes), F.col("neighbor_id") != F.col("probe_id"))
-        .withColumn(
-            "approx",
-            dot_nc("p_rv", "rv") / (F.col("p_rnorm") * F.col("rnorm")),
+        corpus_side(recon)
+        .join(
+            F.broadcast(probe_side(recon.filter(is_probe()))),
+            F.col("neighbor_id") != F.col("probe_id"),
         )
-        .select("probe_id", "neighbor_id", "approx")
+        .select("probe_id", "neighbor_id", cosine().alias("approx"))
     )
-    w_short = W.partitionBy("probe_id").orderBy(F.desc("approx"), F.asc("neighbor_id"))
-    shortlist = approx.withColumn("srank", F.row_number().over(w_short)).filter(
-        F.col("srank") <= rerank
-    )
-    # Exact re-rank: true vectors re-join the shortlist only.
-    true_vecs = emb.select(F.col("vec_id").alias("neighbor_id"), "dv", "norm")
-    p_true = emb.filter(F.col("vec_id") % PROBE_MOD == 0).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("dv").alias("p_dv"),
-        F.col("norm").alias("p_norm"),
-    )
-    exact = (
-        shortlist.join(true_vecs, "neighbor_id")
-        .join(F.broadcast(p_true), "probe_id")
-        .withColumn(
-            "score_raw",
-            dot_nc("p_dv", "dv") / (F.col("p_norm") * F.col("norm")),
-        )
-    )
-    w_final = W.partitionBy("probe_id").orderBy(
-        F.desc("score_raw"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "probe_id",
-            "neighbor_id",
-            F.round("score_raw", 6).alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .transform(ordered_result, "probe_id", "rank")
-    )
+    return _rerank_exact(spark, sf_dir, approx, "approx", rerank)
 
 
 @register("sim_knn_sq8", oracle_sql=None)

@@ -7,7 +7,7 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # the package, and tools/ for the tests of tools/make_sf1.py and
-# tools/check_oracle.compare
+# tools/check_oracle (compare, duck_views)
 sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 from map_reduce_spark.session import get_spark
@@ -47,10 +47,8 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def duck():
     import duckdb
+    from check_oracle import duck_views
 
     con = duckdb.connect()
-    from map_reduce_spark.sources import TABLES
-
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMOKE}/{t}.parquet'")
+    duck_views(con, SF_SMOKE)
     return con

@@ -1,4 +1,5 @@
-"""Guards on the scale-up generator's text mutation (tools/make_sf1.py).
+"""Guards on the scale-up generator (tools/make_sf1.py): its text
+mutation, and the DuckDB views the oracle tools build over its output.
 
 The sf-N study data is only honest if cross-replica token overlap is
 LOW for every replica pair: a suffix collision between two replicas
@@ -72,3 +73,42 @@ def test_sf1_replica_outputs_unchanged():
     mutated = [w for w in mutate_text(TEXT, 5).split() if w not in TEXT.split()]
     assert all(len(w) - len(w.rstrip("abcdefghijklmnopqrstuvwxyz")) >= 0 for w in mutated)
     assert all(w[-2] == "q" for w in mutated)
+
+
+def test_duck_views_rebuild_epoch_ns_events(tmp_path, monkeypatch, sf_dir):
+    """make_sf1 writes events.ts as epoch-ns BIGINT; the oracle tools'
+    DuckDB views must expose it as the fixture's TIMESTAMP values, so
+    the events oracles run unchanged on generated data."""
+    import duckdb
+
+    import make_sf1
+    from check_oracle import compare, duck_views
+    from map_reduce_spark.registry import load_all
+    from map_reduce_spark.sources import TABLES
+
+    monkeypatch.setattr(make_sf1, "SRC", sf_dir)
+    make_sf1.scale_relational(duckdb.connect(), str(tmp_path), 1)
+    for t in TABLES:
+        if not (tmp_path / f"{t}.parquet").exists():
+            (tmp_path / f"{t}.parquet").symlink_to(f"{sf_dir}/{t}.parquet")
+    raw = duckdb.connect().execute(
+        f"SELECT typeof(ts) FROM '{tmp_path}/events.parquet' LIMIT 1"
+    )
+    assert raw.fetchone() == ("BIGINT",)
+
+    gen, ref = duckdb.connect(), duckdb.connect()
+    duck_views(gen, str(tmp_path))
+    duck_views(ref, sf_dir)
+    assert gen.execute("SELECT typeof(ts) FROM events LIMIT 1").fetchone() == ("TIMESTAMP",)
+    (n_events,) = ref.execute("SELECT count(*) FROM events").fetchone()
+    (n_same,) = gen.execute(
+        f"""SELECT count(*) FROM events g
+            JOIN '{sf_dir}/events.parquet' f USING (event_id)
+            WHERE g.ts = f.ts"""
+    ).fetchone()
+    assert n_same == n_events > 0
+
+    queries = load_all()
+    for name in ("events_sliding_1h_30m", "events_hypertable_rollup"):
+        sql = queries[name].oracle_sql
+        assert compare(name, gen.execute(sql).df(), ref.execute(sql).df()) == []

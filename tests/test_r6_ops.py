@@ -164,7 +164,7 @@ def test_range_search_probe_blocks_stay_balanced(spark, tmp_path, monkeypatch):
     sf_dir = str(tmp_path)
     pdf.to_parquet(f"{sf_dir}/embeddings.parquet")
 
-    monkeypatch.setattr(S, "_RANGE_MAX_BLOCK", 4)
+    monkeypatch.setattr(S, "GEMM_MAX_BLOCK", 4)
     df = S.sim_range_search(spark, sf_dir)
     rows = df.collect()
 

@@ -16,9 +16,12 @@ Notes:
 - DuckDB side runs every registered oracle_sql; queries without an
   oracle (sketch/approx ops) have no DuckDB twin and are excluded
   from the ratio (same exclusion the driver's baseline uses).
-- The generated sf1 events table stores ts as epoch-ns BIGINT (the
-  same int64 the engine's loader reads); the DuckDB views rebuild a
-  timestamp from it so the oracle SQL is unchanged.
+- The DuckDB views are ``check_oracle.duck_views``: the generated
+  sf1 events table stores ts as epoch-ns BIGINT (the same int64 the
+  engine's loader reads), and the views rebuild a timestamp from it
+  so the oracle SQL is unchanged.
+- Each Spark query time is ``bench.execute``: noop write, then
+  ``release_transient``, timed together as in ``bench.py``.
 """
 
 from __future__ import annotations
@@ -33,10 +36,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from map_reduce_spark.plans.transient import release_transient
+from bench import execute
+from check_oracle import duck_views
 from map_reduce_spark.registry import load_all
 from map_reduce_spark.session import get_spark
-from map_reduce_spark.sources import TABLES
 
 
 LLM_PREFIXES = ("dedup_", "sim_", "doc_", "media_")
@@ -51,28 +54,6 @@ def family(name: str) -> str:
     """'llm' (dedup/similarity/doc/media — the scale-design family) or
     'relational' (everything else — the fixed-floor-bound family)."""
     return "llm" if name.startswith(LLM_PREFIXES) else "relational"
-
-
-def duck_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> None:
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if t == "events":
-            # ts may be TIMESTAMP(NANOS) (fixture) or epoch-ns BIGINT
-            # (generated sf1); normalize to TIMESTAMP for the oracles.
-            (typ,) = [
-                c[1]
-                for c in con.execute(f"DESCRIBE SELECT * FROM '{path}'").fetchall()
-                if c[0] == "ts"
-            ]
-            if typ == "BIGINT":
-                con.execute(
-                    f"""CREATE VIEW events AS
-                        SELECT event_id, make_timestamp(ts // 1000) AS ts,
-                               user_id, event_type, value, props
-                        FROM '{path}'"""
-                )
-                continue
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
 
 def main() -> int:
@@ -114,17 +95,13 @@ def main() -> int:
     spark_times: dict[str, float] = {}
     if not args.skip_spark:
         spark = get_spark("bench-compare")
-        warm = specs["q6_forecast_revenue"].builder(spark, args.sf_dir)
-        warm.write.format("noop").mode("overwrite").save()
+        execute(specs["q6_forecast_revenue"].builder(spark, args.sf_dir))
         for _ in range(args.iterations):
             for name in names:
                 t0 = time.perf_counter()
-                specs[name].builder(spark, args.sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                execute(specs[name].builder(spark, args.sf_dir))
                 dt = round(time.perf_counter() - t0, 3)
                 spark_times[name] = min(spark_times.get(name, dt), dt)
-                release_transient()
                 print(f"spark {name}: {spark_times[name]}s", flush=True)
 
     result: dict = {"sf_dir": args.sf_dir}

@@ -79,6 +79,32 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
+def duck_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> None:
+    """One DuckDB view per fixture table, as the oracle SQL expects.
+
+    ``events.ts`` is TIMESTAMP(NANOS) in the fixtures but epoch-ns
+    BIGINT in ``tools/make_sf1.py`` output (the int64 the engine's
+    loader reads); the view rebuilds a TIMESTAMP from it so the oracle
+    SQL is unchanged."""
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if t == "events":
+            (typ,) = [
+                c[1]
+                for c in con.execute(f"DESCRIBE SELECT * FROM '{path}'").fetchall()
+                if c[0] == "ts"
+            ]
+            if typ == "BIGINT":
+                con.execute(
+                    f"""CREATE VIEW events AS
+                        SELECT event_id, make_timestamp(ts // 1000) AS ts,
+                               user_id, event_type, value, props
+                        FROM '{path}'"""
+                )
+                continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -110,8 +136,7 @@ def main() -> int:
         spark = get_spark("oracle-check")
     con = duckdb.connect()
     con.execute("SET temp_directory='/tmp/duckdb_spill'")  # keep spills out of the repo
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
+    duck_views(con, args.sf_dir)
 
     n_pass = n_fail = n_noracle = 0
     for name in names:
