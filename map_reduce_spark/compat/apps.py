@@ -11,18 +11,32 @@ listener assertions instead of data-plane code.
 from __future__ import annotations
 
 import itertools
+import re
+
+# runs of word characters that are neither digits nor "_": a superset of
+# the letters (every str.isalpha character is one), so each maximal
+# letter run lies inside one candidate run
+_CANDIDATE_RUNS = re.compile(r"[^\W\d_]+")
 
 
 def _words(text: str) -> list[str]:
     """Maximal runs of Unicode letters — strings.FieldsFunc(contents,
     not unicode.IsLetter) (/root/reference/src/mrapps/wc.go:24-31).
     Python str.isalpha matches Go unicode.IsLetter on the L* categories.
+    A candidate run that is all letters is one token; the rare one that
+    is not (e.g. "½", "Ⅻ", "²") is split character by character.
     """
-    return [
-        "".join(group)
-        for is_alpha, group in itertools.groupby(text, key=str.isalpha)
-        if is_alpha
-    ]
+    words = []
+    for run in _CANDIDATE_RUNS.findall(text):
+        if run.isalpha():
+            words.append(run)
+        else:
+            words.extend(
+                "".join(group)
+                for is_alpha, group in itertools.groupby(run, key=str.isalpha)
+                if is_alpha
+            )
+    return words
 
 
 # --- wc (A1, /root/reference/src/mrapps/wc.go:22-43) ----------------------

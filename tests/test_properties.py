@@ -88,6 +88,15 @@ def test_words_round_trips_space_joined_tokens(tokens: list[str]) -> None:
     assert _words(" ".join(tokens)) == tokens
 
 
+def test_words_splits_candidate_runs_that_are_not_all_letters() -> None:
+    """"½", "Ⅻ" and "²" are word characters, neither digits nor "_", but
+    not letters; they must split a run exactly as the per-character
+    groupby does."""
+    text = "ab½cd Ⅻx²y"
+    reference = ["".join(g) for alpha, g in itertools.groupby(text, key=str.isalpha) if alpha]
+    assert _words(text) == reference == ["ab", "cd", "x", "y"]
+
+
 # ---------------------------------------------------------------------------
 # Sign-sketch bit-pack kernel (ANN / embedding-LSH hot path)
 # ---------------------------------------------------------------------------
