@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_spark.operators.text_rel import doc_toks, tokens_col
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import load_spread
+from map_reduce_spark.sources import load_spread, session_memo
 
 BPE_N_MERGES = 64
 # Hard bound on the trainer's input: top word types by (count DESC,
@@ -116,21 +116,14 @@ def encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
-# Trained merge tables keyed by (applicationId, corpus dir), like the
-# IVF/PQ codebook caches (similarity.py). Plain dict, not
-# ``session_cached``: the cached value is a tuple, not a persistable
-# DataFrame.
-_MERGE_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+# ``session_memo``, not ``session_cached``: the trained merge table is
+# a tuple, not a persistable DataFrame.
+@session_memo
 def bpe_merge_list(spark: SparkSession, sf_dir: str) -> tuple[tuple[str, str], ...]:
     """Train (once per session+corpus) and return the merge table as a
     plain tuple — small enough to live in closures (BPE_N_MERGES
     entries). The corpus-sized work is the one tokenize+count scan;
     the collect is bounded by BPE_MAX_WORD_TYPES."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MERGE_CACHE:
-        return _MERGE_CACHE[key]
     wc = (
         doc_toks(spark, sf_dir).select(F.explode("toks").alias("word"))
         .groupBy("word")
@@ -139,9 +132,7 @@ def bpe_merge_list(spark: SparkSession, sf_dir: str) -> tuple[tuple[str, str], .
         .limit(BPE_MAX_WORD_TYPES)
         .collect()
     )
-    merges = tuple(train_merges([(r.word, r.cnt) for r in wc]))
-    _MERGE_CACHE[key] = merges
-    return merges
+    return tuple(train_merges([(r.word, r.cnt) for r in wc]))
 
 
 @register("doc_bpe_tokens", oracle_sql=None)

@@ -245,9 +245,9 @@ def _centroid_partials(
 
 
 # Trained Lloyd centroids keyed by (applicationId, corpus dir, k,
-# iters) — the exact convention of similarity.py's _CENTROID_CACHE /
-# _PQ_CACHE (r5 ADVICE: app-id key so a regenerated fixture dir in a
-# NEW session never reuses a stale model). A trained clustering is
+# iters) — the key convention of sources.cache.session_memo (r5
+# ADVICE: app-id key so a regenerated fixture dir in a NEW session
+# never reuses a stale model). A trained clustering is
 # built once per corpus and consumed repeatedly (registered k-means
 # summary, SemDeDup verdicts); re-training per builder call re-ran
 # KM_ITERS distributed rounds for a deterministic result (r12).

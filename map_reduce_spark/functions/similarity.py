@@ -43,7 +43,12 @@ from pyspark.sql import functions as F
 
 from map_reduce_spark.plans.transient import ordered_result
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import load_spread, parquet_num_rows, session_cached
+from map_reduce_spark.sources import (
+    load_spread,
+    parquet_num_rows,
+    session_cached,
+    session_memo,
+)
 
 TOP_K = 10
 PROBE_MOD = 100  # probes = vec_id % PROBE_MOD == 0 → 1% of the corpus
@@ -820,20 +825,6 @@ def _with_nearest_cells(
     )
 
 
-# Trained coarse quantizers keyed by (applicationId, corpus dir) — the
-# same convention as sources.cache.session_cached, so a fixture dir
-# regenerated at the same path in a NEW session never reuses a stale
-# model (r5 ADVICE). An IVF index is built once and queried many
-# times; caching the (tiny) centroid table is the persistence a real
-# vector store gives it — queries then pay only the probe + rerank
-# cost, which is what the bench should measure.
-_CENTROID_CACHE: dict[tuple[str, str], list[list[float]]] = {}
-
-
-def _model_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
 def train_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> list[list[float]]:
     """Train the coarse quantizer over a ``(vec_id, embedding)`` frame:
     K-means with cosine assignment and a dimension-wise mean
@@ -874,13 +865,14 @@ def train_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> list[list[float]]
     return centroids
 
 
+@session_memo
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The corpus's coarse quantizer, trained once per (session,
-    corpus) by ``train_centroids``."""
-    key = _model_key(spark, sf_dir)
-    if key not in _CENTROID_CACHE:
-        _CENTROID_CACHE[key] = train_centroids(load_spread(spark, sf_dir, "embeddings"))
-    return _CENTROID_CACHE[key]
+    corpus) by ``train_centroids``. An IVF index is built once and
+    queried many times; memoizing the (tiny) centroid table is the
+    persistence a real vector store gives it — queries then pay only
+    the probe + rerank cost, which is what the bench should measure."""
+    return train_centroids(load_spread(spark, sf_dir, "embeddings"))
 
 
 def knn_ivf(
@@ -941,12 +933,6 @@ PQ_SUB = 8  # dims per subspace
 PQ_ITERS = 2
 PQ_RERANK = 8 * TOP_K  # ADC candidates exact-reranked per probe
 
-# Trained codebooks keyed by (applicationId, corpus dir) like the IVF
-# centroids and session_cached (r5 ADVICE) — model-sized driver state
-# (PQ_M x PQ_K x PQ_SUB doubles = 8 KiB); a PQ index is trained once
-# and queried many times.
-_PQ_CACHE: dict[tuple[str, str], object] = {}
-
 
 def _np_subs(pdf_dv) -> "object":
     """Stack a pandas Series of 64-float lists into (n, PQ_M, PQ_SUB)."""
@@ -965,6 +951,7 @@ def _np_codes(subs, books):
     return d.argmin(axis=-1)
 
 
+@session_memo
 def pq_codebooks(spark: SparkSession, sf_dir: str):
     """Train per-subspace codebooks: K-means in each of the PQ_M
     8-dim subspaces (Jegou et al.'s product quantizer).
@@ -975,13 +962,12 @@ def pq_codebooks(spark: SparkSession, sf_dir: str):
     partial sums, a decomposable aggregate combines them, and the
     driver fetches exactly PQ_M x PQ_K rows per iteration — the
     codebook itself, constant in corpus size. Init = the first PQ_K
-    vectors' subvectors by vec_id order (deterministic).
+    vectors' subvectors by vec_id order (deterministic). Memoized per
+    (session, corpus): model-sized driver state (PQ_M x PQ_K x PQ_SUB
+    doubles = 8 KiB), trained once and queried many times.
     """
     import numpy as np
 
-    key = _model_key(spark, sf_dir)
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
     emb = load_spread(spark, sf_dir, "embeddings").withColumn("dv", _dvec("embedding"))
     init = emb.select("vec_id", "dv").orderBy("vec_id").limit(PQ_K).collect()
     if len(init) < PQ_K:
@@ -1028,7 +1014,6 @@ def pq_codebooks(spark: SparkSession, sf_dir: str):
             if r.c:
                 new[r.m, r.k, :] = np.asarray(r.s) / r.c
         books = new
-    _PQ_CACHE[key] = books
     return books
 
 

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_spark.plans.transient import transient_persist
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import load_table, session_cached
+from map_reduce_spark.sources import load_table, session_cached, session_memo
 
 MIN_PAIR_ORDERS = 3  # a-priori support floor
 
@@ -424,20 +424,13 @@ BRAND_BITMASK_MAX_ITEMS = 60
 PART_BROADCAST_MAX_ROWS = 4_000_000
 
 
-# (applicationId, sf_dir) -> sorted brand vocabulary (bounded
-# dimension collect, the BPE-vocab/centroid sanction); memoized per
-# session so the distinct+collect does not re-run per builder call.
-_BRAND_VOCAB_CACHE: dict[tuple[str, str], list[str]] = {}
-
-
+# Sorted brand vocabulary (bounded dimension collect, the
+# BPE-vocab/centroid sanction); memoized per session so the
+# distinct+collect does not re-run per builder call.
+@session_memo
 def _brand_vocab(spark: SparkSession, sf_dir: str) -> list[str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BRAND_VOCAB_CACHE:
-        part = load_table(spark, sf_dir, "part").select("p_brand")
-        _BRAND_VOCAB_CACHE[key] = sorted(
-            r[0] for r in part.distinct().collect()
-        )
-    return _BRAND_VOCAB_CACHE[key]
+    part = load_table(spark, sf_dir, "part").select("p_brand")
+    return sorted(r[0] for r in part.distinct().collect())
 
 
 def _brand_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,8 +42,6 @@ from pyspark.sql import SparkSession
 # the directory holding the ``map_reduce_spark`` package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "map_reduce_spark",
@@ -55,10 +53,12 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a
     real cluster leave it unset and submit via spark-submit.
+    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_CPUS`` too, read
+    in the same call, so master and width always agree.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    nshuffle = shuffle_partitions or int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)

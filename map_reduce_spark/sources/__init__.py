@@ -1,4 +1,4 @@
-from map_reduce_spark.sources.cache import session_cached
+from map_reduce_spark.sources.cache import session_cached, session_memo
 from map_reduce_spark.sources.tables import (
     TABLES,
     load_spread,
@@ -14,4 +14,5 @@ __all__ = [
     "parquet_num_rows",
     "register_views",
     "session_cached",
+    "session_memo",
 ]

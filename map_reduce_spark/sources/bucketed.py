@@ -91,7 +91,7 @@ class BucketedState:
 
     def _remove_at_exit(self, table: str) -> None:
         """Remove ``table``'s warehouse directory when the interpreter
-        exits (the streams._fresh_replay_dirs discipline): the
+        exits (the streams._fresh_replay_dir discipline): the
         registered ingest entries name their tables after the
         applicationId, so no later bootstrap would ever drop them."""
         atexit.register(shutil.rmtree, self._dir(table), ignore_errors=True)

@@ -65,9 +65,12 @@ import functools
 import os
 from collections import OrderedDict
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
+
+_V = TypeVar("_V")
 
 # (applicationId, sf_dir, builder qualname) -> persisted frame, in
 # least-recently-used order (first = coldest).
@@ -224,4 +227,25 @@ def session_cached(
             _enforce_budget(spark, keep=key)
         return _LRU[key]
 
+    return wrapper
+
+
+def session_memo(fn: Callable[[SparkSession, str], _V]) -> Callable[[SparkSession, str], _V]:
+    """Memoize a driver-side ``(spark, sf_dir) -> value`` builder per
+    (applicationId, sf_dir), the key ``session_cached`` uses, so a
+    fixture dir regenerated at the same path in a NEW session never
+    reuses a stale value. For small plain-Python results (trained
+    models, vocabularies, fixture dimensions): nothing is persisted,
+    so the byte budget does not apply. ``cache_clear()`` forgets every
+    entry, as on ``functools.cache``."""
+    memo: dict[tuple[str, str], _V] = {}
+
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, sf_dir: str) -> _V:
+        key = (spark.sparkContext.applicationId, sf_dir)
+        if key not in memo:
+            memo[key] = fn(spark, sf_dir)
+        return memo[key]
+
+    wrapper.cache_clear = memo.clear
     return wrapper

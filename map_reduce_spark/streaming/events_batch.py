@@ -1,10 +1,13 @@
-"""Batch-mode event-stream analytics over the ``events`` table.
+"""Registered event-stream analytics over the ``events`` table.
 
-These are the *batch twins* of the Structured Streaming queries in
-``streaming/streams.py`` — same window semantics (tumbling/sliding),
-expressed over the static table so the DuckDB oracle can check them.
+Two kinds of entry. The ``events_*`` builders are the *batch twins*
+of the Structured Streaming queries in ``streaming/streams.py`` —
+same window semantics (tumbling/sliding), expressed over the static
+table. The ``streaming_*`` builders replay the fixture through a real
+streaming query (``streams.run_available_now`` or one of the two
+restart replays), drained on first action behind a deferred proxy.
 Structured Streaming guarantees batch/stream result parity for these
-plans, which the pytest suite exercises with Trigger.AvailableNow.
+plans, so the DuckDB oracle checks both kinds with batch SQL.
 
 Also covers the JSON scalar-function surface (the `props` column) —
 SURVEY.md §2.3 "Array / map / JSON fns".
@@ -15,39 +18,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from map_reduce_spark.plans.deferred import deferred
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import load_table, parquet_num_rows
-
-# Target buffered-state rows per state-store partition for the
-# stream-stream JOIN replays. A join commits FOUR state stores per
-# partition per microbatch (left/right x keyToNumValues/
-# keyWithIndexToValue), so each extra partition costs ~4 fixed
-# delta-commit fsyncs per batch while the per-row cost is tiny —
-# width should follow state volume, not a tuned constant. r13
-# (verdict item 5): the r12 literal ``state_partitions=4`` becomes
-# this formula — the available-now drain buffers O(filtered events)
-# per side in one microbatch, so events footer rows / 25k, capped at
-# cluster width. At the sf0.1 bench point (100k rows) this derives 4,
-# which a fresh alternating min-of-5 A/B re-confirmed against 8
-# (error_click 2.26 vs 2.80 s, left_outer 2.30 vs 2.77 s); the r12
-# driver measured the opposite sign (error_click 2.30@8 -> 2.67@4),
-# but its whole streaming family — including three UNTOUCHED
-# aggregate replays — drifted 0.85-0.92x that round, so the paired
-# local ladder is the better-controlled evidence. At sf10 (10M rows)
-# the formula saturates at cluster width. Rows are identical at any
-# width (state parallelism is start-time physical layout).
-_JOIN_STATE_ROWS_PER_PARTITION = 25_000
-
-
-def _join_state_width(spark: SparkSession, sf_dir: str) -> int:
-    rows = parquet_num_rows(f"{sf_dir}/events.parquet")
-    return max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism,
-            -(-rows // _JOIN_STATE_ROWS_PER_PARTITION),
-        ),
-    )
+from map_reduce_spark.sources import load_table
+from map_reduce_spark.streaming.stateful import user_running_totals
+from map_reduce_spark.streaming.streams import (
+    checkpoint_recovery_totals,
+    events_source_files,
+    events_state_dims,
+    idempotent_sink_replay,
+    left_outer_error_click_join,
+    read_events_stream,
+    run_available_now,
+    session_window_stats,
+    sliding_counts,
+    state_width,
+    stream_static_segment_counts,
+    stream_stream_error_click_join,
+    streaming_dedup,
+    tumbling_counts,
+)
 
 
 def events_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,7 +160,7 @@ def streaming_tumbling_type_counts(spark: SparkSession, sf_dir: str) -> DataFram
     The events fixture is replayed as a file-source stream
     (``readStream`` + ``Trigger.AvailableNow``) through the
     watermarked tumbling aggregate in ``streams.tumbling_counts`` and
-    materialized via a memory sink in complete mode; Structured
+    drained in complete mode through the replay sink; Structured
     Streaming's batch/stream parity guarantee makes the drained result
     equal the static GROUP BY, which is what the DuckDB oracle
     computes. This puts the streaming engine itself — source, state
@@ -189,23 +179,15 @@ def streaming_tumbling_type_counts(spark: SparkSession, sf_dir: str) -> DataFram
     deterministic replay check (a real 100 TB stream would use append
     mode on a durable sink).
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.streams import (
-        events_state_dims,
-        read_events_stream,
-        run_available_now,
-        tumbling_counts,
-    )
 
     def drain() -> DataFrame:
-        # run_available_now pins state-store parallelism to 8 around the
-        # stream start (see its doc) — the replay's state is tiny.
         # Declared state bound: one row per (1h window, event type).
         _, n_types, horizon_h = events_state_dims(spark, sf_dir)
         drained = run_available_now(
             tumbling_counts(read_events_stream(spark, sf_dir)),
             "streaming_tumbling_type_counts",
             output_mode="complete",
+            width=state_width(spark, sf_dir),
             state_rows_bound=(horizon_h + 1) * n_types,
         )
         return drained.orderBy("window_start", "event_type")
@@ -255,13 +237,6 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is O(open windows) = 2x tumbling, still bounded by the watermark
     horizon regardless of stream length.
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.streams import (
-        events_state_dims,
-        read_events_stream,
-        run_available_now,
-        sliding_counts,
-    )
 
     def drain() -> DataFrame:
         # Declared state bound: 1h windows every 30 min over the
@@ -271,6 +246,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             sliding_counts(read_events_stream(spark, sf_dir)),
             "streaming_sliding_counts",
             output_mode="complete",
+            width=state_width(spark, sf_dir),
             state_rows_bound=2 * (horizon_h + 1),
         )
         return drained.orderBy("window_start")
@@ -339,13 +315,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark; merges happen only within a user's shuffle partition —
     one key-partitioned exchange, same as the batch sessionizer.
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.streams import (
-        events_state_dims,
-        read_events_stream,
-        run_available_now,
-        session_window_stats,
-    )
 
     def drain() -> DataFrame:
         # Declared state bound: a user can open at most one session
@@ -358,6 +327,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             session_window_stats(read_events_stream(spark, sf_dir)),
             "streaming_session_windows",
             output_mode="complete",
+            width=state_width(spark, sf_dir),
             state_rows_bound=n_users * 2 * (horizon_h + 1),
         )
         return drained.orderBy("user_id", "session_start")
@@ -404,12 +374,6 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     (eviction pinned by tests/test_streaming.py); the state store is
     hash-partitioned on event_id, a uniform key.
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.streams import (
-        read_events_stream,
-        run_available_now,
-        streaming_dedup,
-    )
 
     def drain() -> DataFrame:
         ev = read_events_stream(spark, sf_dir)
@@ -418,6 +382,7 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             streaming_dedup(doubled),
             "streaming_dedup_exactly_once",
             output_mode="append",
+            width=state_width(spark, sf_dir),
         )
         return drained.select(
             "event_id",
@@ -519,24 +484,13 @@ def streaming_error_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     side regardless of stream length; the join itself shuffles both
     sides on user_id — the same uniform key the batch plan uses.
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.streams import (
-        read_events_stream,
-        run_available_now,
-        stream_stream_error_click_join,
-    )
 
     def drain() -> DataFrame:
         drained = run_available_now(
             stream_stream_error_click_join(read_events_stream(spark, sf_dir)),
             "streaming_error_click_join",
             output_mode="append",
-            # JOIN-replay state width derived from the buffered-state
-            # volume (events footer rows / _JOIN_STATE_ROWS_PER_
-            # PARTITION, capped at cluster width) — see the constant's
-            # comment for the commit-cost model and why the r12
-            # literal 4 was reverted (r13 verdict item 5).
-            state_partitions=_join_state_width(spark, sf_dir),
+            width=state_width(spark, sf_dir),
         )
         return drained.select(
             "error_id",
@@ -598,14 +552,6 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
     knife-edge today; if a future fixture trips it, accumulate in the
     UDF with math.fsum (exact) or compare on cents-as-integers.
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.stateful import user_running_totals
-    from map_reduce_spark.streaming.streams import (
-        events_source_files,
-        events_state_dims,
-        read_events_stream,
-        run_available_now,
-    )
 
     def drain() -> DataFrame:
         # Declared state bound: update mode emits at most one row per
@@ -620,6 +566,7 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
             user_running_totals(read_events_stream(spark, sf_dir)),
             "streaming_stateful_user_totals",
             output_mode="update",
+            width=state_width(spark, sf_dir),
             state_rows_bound=n_users * events_source_files(sf_dir),
         )
         return drained.select(
@@ -673,8 +620,6 @@ def streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
     adds only the checkpoint round-trip, which is O(state + offsets),
     not O(events).
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.streams import checkpoint_recovery_totals
 
     def drain() -> DataFrame:
         return checkpoint_recovery_totals(spark, sf_dir)
@@ -718,14 +663,6 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a Delta/compacted snapshot re-read per trigger — same plan
     shape.
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.sources import load_table
-    from map_reduce_spark.streaming.streams import (
-        events_state_dims,
-        read_events_stream,
-        run_available_now,
-        stream_static_segment_counts,
-    )
 
     def drain() -> DataFrame:
         # Declared state bound: one row per (1h window, market
@@ -738,6 +675,7 @@ def streaming_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "streaming_enrich_static",
             output_mode="complete",
+            width=state_width(spark, sf_dir),
             state_rows_bound=(horizon_h + 1) * 8,
         )
         return drained.orderBy("window_start", "c_mktsegment")
@@ -803,21 +741,13 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Builder-contract note: DEFERRED — the bounded replay drains on
     first action, not at build (see streaming_tumbling_type_counts).
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.streams import (
-        left_outer_error_click_join,
-        read_events_stream,
-        run_available_now,
-    )
 
     def drain() -> DataFrame:
         drained = run_available_now(
             left_outer_error_click_join(read_events_stream(spark, sf_dir)),
             "streaming_left_outer_join",
             output_mode="append",
-            # state width derived from buffered-state volume — see
-            # streaming_error_click_join / _JOIN_STATE_ROWS_PER_PARTITION
-            state_partitions=_join_state_width(spark, sf_dir),
+            width=state_width(spark, sf_dir),
         )
         return drained.select(
             "error_id",
@@ -866,8 +796,6 @@ def streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Builder-contract note: DEFERRED — the bounded two-run replay
     drains on first action, not at build.
     """
-    from map_reduce_spark.plans.deferred import deferred
-    from map_reduce_spark.streaming.streams import idempotent_sink_replay
 
     return deferred(
         spark,

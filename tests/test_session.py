@@ -111,3 +111,35 @@ def test_python_tasks_import_the_package_from_any_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.split()[0] == "True", out.stdout
+
+
+_CPUS_SCRIPT = """
+import os
+from map_reduce_spark import session
+
+os.environ["SPARK_GRAFT_CPUS"] = "2"
+spark = session.get_spark("cpus_after_import")
+print(spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions"))
+"""
+
+
+def test_cpus_set_after_import_size_master_and_shuffle_alike(tmp_path):
+    """SPARK_GRAFT_CPUS is read once, when get_spark is called: a caller
+    that sets it after importing the module gets the same width for
+    ``local[N]`` and for the shuffle partitions."""
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER")
+    }
+    env.update(PYTHONPATH=ROOT, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _CPUS_SCRIPT],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split() == ["local[2]", "2"], out.stdout

@@ -110,10 +110,9 @@ def test_pq_code_table_compression_invariants(spark, sf_dir):
     therefore asserts the *shape/validity* invariants on a fresh
     training rather than code equality."""
     from map_reduce_spark.functions.similarity import (
-        _PQ_CACHE,
-        _model_key,
         PQ_K,
         PQ_M,
+        pq_codebooks,
         pq_encode,
     )
 
@@ -134,14 +133,14 @@ def test_pq_code_table_compression_invariants(spark, sf_dir):
     # data, same deterministic init; only reduce-order ulps differ).
     import numpy as np
 
-    first_books = np.asarray(_PQ_CACHE[_model_key(spark, sf_dir)], dtype=np.float64)
-    del _PQ_CACHE[_model_key(spark, sf_dir)]
+    first_books = np.asarray(pq_codebooks(spark, sf_dir), dtype=np.float64)
+    pq_codebooks.cache_clear()
     retrained = pq_encode(spark, sf_dir).collect()
     assert len(retrained) == n_corpus
     for r in retrained:
         assert len(r.codes) == PQ_M
         assert all(0 <= c < PQ_K for c in r.codes)
-    second_books = np.asarray(_PQ_CACHE[_model_key(spark, sf_dir)], dtype=np.float64)
+    second_books = np.asarray(pq_codebooks(spark, sf_dir), dtype=np.float64)
     np.testing.assert_allclose(second_books, first_books, rtol=1e-9, atol=1e-12)
 
 

@@ -9,10 +9,12 @@ import pandas as pd
 from map_reduce_spark.registry import load_all
 from map_reduce_spark.streaming.events_batch import events_tumbling_1h
 from map_reduce_spark.streaming.streams import (
+    events_state_dims,
     read_events_stream,
     run_available_now,
     session_window_stats,
     sliding_counts,
+    state_width,
     stream_stream_error_click_join,
     streaming_dedup,
     tumbling_counts,
@@ -32,7 +34,11 @@ def test_tumbling_stream_equals_batch(spark, sf_dir):
     beyond watermark in a replay)."""
     stream = tumbling_counts(read_events_stream(spark, sf_dir))
     got = run_available_now(
-        stream, "t_tumbling", output_mode="complete", state_rows_bound=100_000
+        stream,
+        "t_tumbling",
+        width=state_width(spark, sf_dir),
+        output_mode="complete",
+        state_rows_bound=100_000,
     ).toPandas()
     batch = events_tumbling_1h(spark, sf_dir).drop("n_users").toPandas()
     pd.testing.assert_frame_equal(canon(got), canon(batch))
@@ -41,7 +47,11 @@ def test_tumbling_stream_equals_batch(spark, sf_dir):
 def test_sliding_stream_equals_batch(spark, sf_dir):
     stream = sliding_counts(read_events_stream(spark, sf_dir))
     got = run_available_now(
-        stream, "t_sliding", output_mode="complete", state_rows_bound=100_000
+        stream,
+        "t_sliding",
+        width=state_width(spark, sf_dir),
+        output_mode="complete",
+        state_rows_bound=100_000,
     ).toPandas()
     batch = load_all()["events_sliding_1h_30m"].builder(spark, sf_dir).toPandas()
     pd.testing.assert_frame_equal(canon(got), canon(batch))
@@ -50,7 +60,11 @@ def test_sliding_stream_equals_batch(spark, sf_dir):
 def test_session_windows(spark, sf_dir):
     stream = session_window_stats(read_events_stream(spark, sf_dir))
     got = run_available_now(
-        stream, "t_sessions", output_mode="complete", state_rows_bound=100_000
+        stream,
+        "t_sessions",
+        width=state_width(spark, sf_dir),
+        output_mode="complete",
+        state_rows_bound=100_000,
     ).toPandas()
     assert len(got) > 0
     # session bounds are ordered and grouped per user
@@ -60,24 +74,23 @@ def test_session_windows(spark, sf_dir):
 
 
 def test_memory_sink_requires_and_enforces_state_bound(spark, sf_dir):
-    """The memory-sink replay harness contract (r9 verdict item 6):
+    """The replay harness's state-bound contract (r9 verdict item 6):
     complete/update-mode replays must DECLARE a state-sized row bound,
-    and a replay whose materialized output exceeds its declared bound
-    raises instead of silently collecting stream-sized output into the
-    driver (the scale-killer class the append path eliminated in r9).
+    and a replay whose sunk output exceeds its declared bound raises
+    instead of silently tracking stream length.
     """
     import pytest
 
     # missing bound: rejected before the query even starts
     stream = tumbling_counts(read_events_stream(spark, sf_dir))
     with pytest.raises(ValueError, match="state_rows_bound"):
-        run_available_now(stream, "t_nobound", output_mode="complete")
+        run_available_now(stream, "t_nobound", width=1, output_mode="complete")
 
     # violated bound: the drain raises loudly
     stream = tumbling_counts(read_events_stream(spark, sf_dir))
     with pytest.raises(RuntimeError, match="state bound"):
         run_available_now(
-            stream, "t_tinybound", output_mode="complete", state_rows_bound=1
+            stream, "t_tinybound", width=1, output_mode="complete", state_rows_bound=1
         )
 
 
@@ -96,12 +109,13 @@ def test_replay_result_survives_rerun(spark, sf_dir):
     """ADVICE r9: a replay's returned DataFrame must stay collectable
     after a later replay of the SAME query name (each replay sinks to
     a fresh per-session directory; nothing rmtree's live data)."""
+    width = state_width(spark, sf_dir)
     first = run_available_now(
-        streaming_dedup(read_events_stream(spark, sf_dir)), "t_rerun"
+        streaming_dedup(read_events_stream(spark, sf_dir)), "t_rerun", width=width
     )
     n_first = first.count()
     second = run_available_now(
-        streaming_dedup(read_events_stream(spark, sf_dir)), "t_rerun"
+        streaming_dedup(read_events_stream(spark, sf_dir)), "t_rerun", width=width
     )
     assert second.count() == n_first
     # the first result is still fully readable — its files were not
@@ -109,9 +123,87 @@ def test_replay_result_survives_rerun(spark, sf_dir):
     assert first.count() == n_first
 
 
+def test_state_width_does_not_change_rows(spark, sf_dir):
+    """State-store width is physical layout only: the stream-stream
+    join and the stateful user-totals replay give the same sorted rows
+    at width 1 and at defaultParallelism."""
+    from map_reduce_spark.streaming.stateful import user_running_totals
+
+    wide = spark.sparkContext.defaultParallelism
+    assert wide > 1
+    n_users, _, _ = events_state_dims(spark, sf_dir)
+    for build, mode, bound in (
+        (stream_stream_error_click_join, "append", None),
+        (user_running_totals, "update", n_users),
+    ):
+        narrow_rows, wide_rows = (
+            sorted(
+                run_available_now(
+                    build(read_events_stream(spark, sf_dir)),
+                    f"t_width_{mode}_{w}",
+                    width=w,
+                    output_mode=mode,
+                    state_rows_bound=bound,
+                ).collect()
+            )
+            for w in (1, wide)
+        )
+        assert narrow_rows, mode
+        assert narrow_rows == wide_rows, mode
+
+
+_EXIT_SCRIPT = """
+import os
+import sys
+import tempfile
+
+from map_reduce_spark.registry import load_all
+from map_reduce_spark.session import get_spark
+
+spark = get_spark("replay_exit", master="local[2]", shuffle_partitions=2)
+reg = load_all()
+for name in (
+    "streaming_checkpoint_recovery",
+    "streaming_idempotent_sink",
+    "streaming_dedup_exactly_once",
+):
+    print(name, reg[name].builder(spark, sys.argv[1]).count())
+print(*sorted(os.listdir(tempfile.gettempdir())))
+"""
+
+
+def test_replay_scratch_removed_at_exit(sf_dir, tmp_path):
+    """Every replay's scratch state (source copies, checkpoints, sink
+    output) lives under one per-session root that is gone once the
+    process exits — the two restart replays included."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(
+        os.environ, PYTHONPATH=root, SPARK_GRAFT_DRIVER_MEM="1g", TMPDIR=str(tmp)
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _EXIT_SCRIPT, sf_dir],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    # the run really wrote its replays under the scratch dir
+    assert "mrs_replay_" in out.stdout.splitlines()[-1], out.stdout
+    left = [d for d in os.listdir(tmp) if d.startswith("mrs_")]
+    assert left == [], left
+
+
 def test_streaming_dedup_is_noop_on_unique_ids(spark, sf_dir):
     stream = streaming_dedup(read_events_stream(spark, sf_dir))
-    got = run_available_now(stream, "t_dedup", output_mode="append")
+    got = run_available_now(stream, "t_dedup", width=state_width(spark, sf_dir))
     assert got.count() == 1000  # event_ids are unique in the fixture
 
 
@@ -122,7 +214,9 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     stream = stream_stream_error_click_join(read_events_stream(spark, sf_dir))
-    got = run_available_now(stream, "t_ssjoin").toPandas()
+    got = run_available_now(
+        stream, "t_ssjoin", width=state_width(spark, sf_dir)
+    ).toPandas()
 
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -217,9 +311,7 @@ def test_watermark_drops_late_rows_across_microbatches(spark, tmp_path_factory):
     )
     got = {
         r.h: (r.n, r.total)
-        for r in run_available_now(
-            agg, "late_drop_test", output_mode="append"
-        ).collect()
+        for r in run_available_now(agg, "late_drop_test", width=1).collect()
     }
     # The late 10:15 row (value 100) must NOT be in the 10:00 window.
     assert got["10:00"] == (2, 3.0), got
