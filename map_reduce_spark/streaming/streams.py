@@ -20,6 +20,7 @@ length. That is the 100 TB-stream design constraint.
 from __future__ import annotations
 
 import atexit
+import glob
 import itertools
 import math
 import os
@@ -37,6 +38,7 @@ from map_reduce_spark.sources import (
     session_cached,
     session_memo,
 )
+from map_reduce_spark.sources.tables import load_events_raw, normalize_event_ts
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file-source stream with typed event time.
@@ -47,8 +49,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     generations (TIMESTAMP(NANOS)-as-long vs TIMESTAMP(MICROS)) with
     the exact same normalization as the batch path.
     """
-    from map_reduce_spark.sources.tables import load_events_raw, normalize_event_ts
-
     # load_events_raw sets nanosAsLong (required for a
     # TIMESTAMP(NANOS) fixture generation; no-op for MICROS) and
     # serves the raw scan from the session-scoped memo (r12: ~0.6 s
@@ -429,11 +429,9 @@ def events_source_files(sf_dir: str) -> int:
     ADVICE replaced a hard-coded 8-batch assumption with this).
     Handles both fixture shapes: ``events.parquet`` as a single file
     (the current generator) and as a directory of part files."""
-    import glob as _glob
-
     path = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(path):
-        return max(1, len(_glob.glob(os.path.join(path, "*.parquet"))))
+        return max(1, len(glob.glob(os.path.join(path, "*.parquet"))))
     return 1
 
 
