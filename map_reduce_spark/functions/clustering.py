@@ -1,12 +1,27 @@
-"""Distributed Lloyd's k-means over the embeddings corpus.
+"""Distributed Lloyd's training: the engine's one quantizer trainer.
 
-The IVF coarse quantizer (similarity.py) already trains k-means as an
-internal step; this module promotes clustering to a first-class
-registered operator with a factored core (``kmeans_assign`` /
-``lloyd_kmeans``) that runs on ANY (id, vector) frame — the pytest
-differential fuzzes it against a pure-numpy Lloyd's twin on random
-data (tests/test_clustering.py), the same strategy as the compat MR
-layer and the graph cores.
+Every trained quantizer in the engine is Lloyd's algorithm, and each
+Lloyd's round is one MapReduce job: a map that assigns every vector
+to its nearest centroid and a reduce that averages per centroid. This
+module writes that job once, as two kernels over ANY (id, vector)
+frame, both seeded by ``_seed`` (the k lowest-id vectors):
+
+- ``lloyd_kmeans`` — the expression kernel: ``assign`` (a JVM-side
+  zip_with fold per centroid) then ``posexplode`` + ``avg`` per
+  (centroid, dim). ``assign`` is the one step that differs between
+  users: ``kmeans_assign`` (squared L2) for the registered
+  ``ml_kmeans_embeddings`` and SemDeDup, nearest cosine cell for the
+  IVF coarse quantizer (``similarity.train_centroids``).
+- ``train_codebooks`` — the numpy kernel: Lloyd's in m equal
+  subspaces, each round one ``mapInPandas`` pass emitting a count and
+  a sum per (subspace, code). m = 1 is k-means above ``KM_EXPR_MAX``;
+  m = ``PQ_M`` is the product quantizer (``similarity.pq_codebooks``).
+
+``nearest_codes`` is the one numpy nearest-codeword function, shared
+by the numpy kernel, the large-K assignment and the PQ encode/lookup
+passes. The pytest differential fuzzes every trainer against a
+pure-numpy Lloyd's twin on random data (tests/test_clustering.py),
+the same strategy as the compat MR layer and the graph cores.
 
 Scale design (100 TB):
 - Each iteration is one map-only assignment pass (the K x D centroid
@@ -29,12 +44,14 @@ clusters keep their previous centroid.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce_spark.functions.similarity import _dbl_array_sql, _dvec
 from map_reduce_spark.registry import register
-from map_reduce_spark.sources import load_spread
+from map_reduce_spark.sources import load_spread, session_memo
 
 KM_K = 8
 KM_ITERS = 4
@@ -93,26 +110,45 @@ def kmeans_assign(
     )
 
 
+def _stack(dv, m: int = 1):
+    """A pandas Series of equal-length vectors -> float64 (n, m, dim/m):
+    each vector split into m equal subvectors."""
+    import numpy as np
+
+    x = np.stack([np.asarray(v, dtype=np.float64) for v in dv])
+    return x.reshape(len(x), m, -1)
+
+
+def nearest_codes(x, books):
+    """Nearest codeword per subspace: ``x`` is (n, m, s), ``books``
+    (m, k, s). Returns the (n, m) codes under squared L2, ties to the
+    lowest id (np.argmin, the struct-min convention of the expression
+    kernel), and the (n, m) winning squared distances."""
+    import numpy as np
+
+    d2 = ((x[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=-1)
+    codes = d2.argmin(axis=-1)
+    return codes, np.take_along_axis(d2, codes[..., None], axis=-1)[..., 0]
+
+
 def _kmeans_assign_np(
     df: DataFrame, dv_col: str, centroids: list[list[float]], out: str
 ) -> DataFrame:
-    """Large-K assignment kernel: per Arrow batch, the full (rows x K)
-    squared-distance matrix in float64 numpy, argmin per row. Distance
-    is computed as (x - c)^2 summed over dims — the same TERMS as the
-    fold path and the test twin, but NOT the same summation order:
-    numpy's ``.sum(axis=-1)`` reduces pairwise while the zip_with fold
-    is strict left-to-right, so the two kernels can disagree by an ulp
-    and flip an assignment exactly on a distance tie at the
-    K<=KM_EXPR_MAX boundary (ADVICE r7). Acceptable by design: ties in
-    CLUSTER ids still break deterministically within each kernel, and
-    no registered result crosses the boundary mid-query — the kernel
-    choice is a constant of K."""
+    """Large-K assignment kernel: per Arrow batch, ``nearest_codes``
+    with one subspace. Distance is (x - c)^2 summed over dims — the
+    same TERMS as the fold path and the test twin, but NOT the same
+    summation order: numpy's ``.sum(axis=-1)`` reduces pairwise while
+    the zip_with fold is strict left-to-right, so the two kernels can
+    disagree by an ulp and flip an assignment exactly on a distance
+    tie at the K<=KM_EXPR_MAX boundary (ADVICE r7). Acceptable by
+    design: ties in CLUSTER ids still break deterministically within
+    each kernel, and no registered result crosses the boundary
+    mid-query — the kernel choice is a constant of K."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
-    cents = np.asarray(centroids, dtype=np.float64)
+    books = np.asarray(centroids, dtype=np.float64)[None]
     schema = T.StructType(
         list(df.schema.fields)
         + [
@@ -125,17 +161,39 @@ def _kmeans_assign_np(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[dv_col]]
+            codes, d2 = nearest_codes(_stack(pdf[dv_col]), books)
+            yield pdf.assign(
+                **{out: codes[:, 0].astype("int32"), f"{out}_d2": d2[:, 0]}
             )
-            d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=-1)
-            lab = d2.argmin(axis=1)
-            outp = pdf.copy()
-            outp[out] = lab.astype("int32")
-            outp[f"{out}_d2"] = d2[np.arange(len(lab)), lab]
-            yield pd.DataFrame(outp)
 
     return df.mapInPandas(assign, schema=schema)
+
+
+@contextmanager
+def _persisted(df: DataFrame):
+    """Every training round re-reads the training frame; persist it so
+    the parquet scan + vector widening run once instead of once per
+    round — the standard cache-the-training-frame move, with
+    MEMORY_AND_DISK spill semantics by default. Scoped (ADVICE r7: the
+    cache used to outlive the call): training is the ONLY eager
+    consumer — the caller's final assignment pays one recompute of the
+    scan, a deliberate trade of one extra pass for a leak-free
+    session."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _seed(df: DataFrame, id_col: str, dv_col: str, k: int) -> list[list[float]]:
+    """The k lowest-id vectors — every trainer's deterministic init,
+    robust to offset/sparse id spaces. Raises rather than return a
+    short model, which would mis-assign every later vector."""
+    rows = df.select(id_col, dv_col).orderBy(id_col).limit(k).collect()
+    if len(rows) < k:
+        raise ValueError(f"corpus has only {len(rows)} vectors; need >= {k}")
+    return [[float(x) for x in r[dv_col]] for r in rows]
 
 
 def lloyd_kmeans(
@@ -144,129 +202,116 @@ def lloyd_kmeans(
     dv_col: str,
     k: int,
     iters: int,
+    assign=kmeans_assign,
 ) -> list[list[float]]:
-    """Exact Lloyd's: deterministic lowest-id init, ``iters`` rounds
-    of (assign, dimension-wise mean). Returns the trained centroids;
-    callers re-assign with ``kmeans_assign`` for the final labeling.
-    Per round: one distributed assign + one K x D-cell avg collect."""
-    # Every training iteration re-reads this frame; persist so the
-    # parquet scan + vector widening run once instead of iters times.
-    # The frame is the training set itself: at real scale this is the
-    # standard cache-the-training-frame move, with MEMORY_AND_DISK
-    # spill semantics by default. Scoped with try/finally (ADVICE r7:
-    # the cache used to outlive the call): training is the ONLY eager
-    # consumer — the caller's final assignment pays one recompute of
-    # the scan, a deliberate trade of one extra pass for a
-    # leak-free session.
-    df = df.persist()
-    try:
-        return _lloyd_rounds(df, id_col, dv_col, k, iters)
-    finally:
-        df.unpersist()
+    """Exact Lloyd's: ``_seed`` init, ``iters`` rounds of (assign,
+    dimension-wise mean). Returns the trained centroids; callers
+    re-assign for the final labeling. Per round: one distributed
+    ``assign(df, dv_col, centroids, out)`` + one K x D-cell avg
+    collect. Empty clusters keep their previous centroid.
 
-
-def _lloyd_rounds(
-    df: DataFrame, id_col: str, dv_col: str, k: int, iters: int
-) -> list[list[float]]:
-    init = df.select(id_col, dv_col).orderBy(id_col).limit(k).collect()
-    if len(init) < k:
-        raise ValueError(f"need >= {k} vectors, corpus has {len(init)}")
-    centroids = [[float(x) for x in r[dv_col]] for r in init]
-    for _ in range(iters):
-        if k > KM_EXPR_MAX:
-            # Large-K round: assignment + per-batch (K x D) partial
-            # sums fused in ONE mapInPandas pass — the shuffle then
-            # carries ~batches x K model-sized rows instead of the
-            # n x D posexplode stream (the PQ trainer's partial-sum
-            # shape; 12.8M shuffled rows/round -> ~160k at sf10).
-            part = _centroid_partials(df, dv_col, centroids)
+    With the default squared-L2 ``assign`` and k > KM_EXPR_MAX the
+    per-row fold stops being the right kernel, and training runs as
+    ``train_codebooks`` with one subspace: the shuffle then carries
+    ~batches x K model-sized rows instead of the n x D posexplode
+    stream (12.8M shuffled rows/round -> ~160k at sf10)."""
+    if assign is kmeans_assign and k > KM_EXPR_MAX:
+        return train_codebooks(df, id_col, dv_col, 1, k, iters)[0].tolist()
+    with _persisted(df) as df:
+        centroids = _seed(df, id_col, dv_col, k)
+        for _ in range(iters):
             rows = (
-                part.select(
-                    "cluster", "cnt", F.posexplode("sums").alias("pos", "s")
-                )
-                .groupBy("cluster", "pos")
-                .agg((F.sum("s") / F.sum("cnt")).alias("m"))
-                .collect()
-            )
-        else:
-            assigned = kmeans_assign(df, dv_col, centroids, "cluster")
-            rows = (
-                assigned.select(
-                    "cluster", F.posexplode(dv_col).alias("pos", "v")
-                )
+                assign(df, dv_col, centroids, "cluster")
+                .select("cluster", F.posexplode(dv_col).alias("pos", "v"))
                 .groupBy("cluster", "pos")
                 .agg(F.avg("v").alias("m"))
                 .collect()
             )
-        new = {r["cluster"]: centroids[r["cluster"]][:] for r in rows}
-        for r in rows:
-            new[r["cluster"]][r["pos"]] = float(r["m"])
-        centroids = [new.get(i, centroids[i]) for i in range(k)]
-    return centroids
+            new = {r["cluster"]: centroids[r["cluster"]][:] for r in rows}
+            for r in rows:
+                new[r["cluster"]][r["pos"]] = float(r["m"])
+            centroids = [new.get(i, centroids[i]) for i in range(k)]
+        return centroids
 
 
-def _centroid_partials(
-    df: DataFrame, dv_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """One fused pass for a large-K training round: per Arrow batch,
-    assign every vector (numpy distance matrix) and emit the batch's
-    per-cluster count + dimension-sum vector — at most K rows per
+def _code_sums(dv_col: str, books):
+    """``mapInPandas`` body of one numpy round: per Arrow batch, assign
+    every vector per subspace (``nearest_codes``) and emit a count and
+    a dimension-sum per live (subspace, code) — at most m x k rows per
     batch, whatever the batch size."""
-    import numpy as np
-    import pandas as pd
-
-    cents = np.asarray(centroids, dtype=np.float64)
-    k, d = cents.shape
+    m, k, _ = books.shape
 
     def part(batches):
+        import pandas as pd
+
         for pdf in batches:
-            if len(pdf) == 0:
+            if not len(pdf):
                 continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[dv_col]]
+            subs = _stack(pdf[dv_col], m)
+            codes, _ = nearest_codes(subs, books)
+            out = []
+            for j in range(m):
+                for c in range(k):
+                    mask = codes[:, j] == c
+                    n = int(mask.sum())
+                    if n:
+                        out.append((j, c, n, subs[mask, j, :].sum(axis=0).tolist()))
+            yield pd.DataFrame(out, columns=["m", "k", "c", "s"])
+
+    return part
+
+
+def train_codebooks(
+    df: DataFrame, id_col: str, dv_col: str, m: int, k: int, iters: int
+):
+    """Lloyd's in m equal subspaces at once: returns the (m, k, dim/m)
+    codebooks. Init = the ``_seed`` vectors' subvectors. Per round, one
+    ``_code_sums`` pass, one groupBy combining its per-batch partials,
+    and a division on the driver — which fetches exactly the model per
+    round, constant in corpus size. Empty codes keep their previous
+    codeword."""
+    import numpy as np
+
+    with _persisted(df.select(id_col, dv_col)) as df:
+        seed = np.asarray(_seed(df, id_col, dv_col, k))
+        books = seed.reshape(k, m, -1).transpose(1, 0, 2)  # (m, k, dim/m)
+        for _ in range(iters):
+            rows = (
+                df.select(dv_col)
+                .mapInPandas(
+                    _code_sums(dv_col, books),
+                    "m int, k int, c long, s array<double>",
+                )
+                .groupBy("m", "k")
+                .agg(
+                    F.sum("c").alias("c"),
+                    F.array(
+                        *[F.sum(F.col("s")[i]) for i in range(books.shape[2])]
+                    ).alias("s"),
+                )
+                .collect()
             )
-            d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=-1)
-            lab = d2.argmin(axis=1)
-            sums = np.zeros((k, d))
-            np.add.at(sums, lab, x)
-            cnt = np.bincount(lab, minlength=k)
-            live = np.flatnonzero(cnt)
-            yield pd.DataFrame(
-                {
-                    "cluster": live.astype("int32"),
-                    "cnt": cnt[live].astype("int64"),
-                    "sums": [sums[i].tolist() for i in live],
-                }
-            )
-
-    return df.mapInPandas(
-        part, "cluster int, cnt bigint, sums array<double>"
-    )
+            books = books.copy()
+            for r in rows:
+                books[r.m, r.k, :] = np.asarray(r.s) / r.c
+        return books
 
 
-# Trained Lloyd centroids keyed by (applicationId, corpus dir, k,
-# iters) — the key convention of sources.cache.session_memo (r5
-# ADVICE: app-id key so a regenerated fixture dir in a NEW session
-# never reuses a stale model). A trained clustering is
-# built once per corpus and consumed repeatedly (registered k-means
-# summary, SemDeDup verdicts); re-training per builder call re-ran
-# KM_ITERS distributed rounds for a deterministic result (r12).
-_TRAINED_CENTROIDS: dict[tuple[str, str, int, int], list[list[float]]] = {}
-
-
+# A trained clustering is built once per corpus and consumed
+# repeatedly (registered k-means summary, SemDeDup verdicts);
+# re-training per builder call re-ran KM_ITERS distributed rounds for
+# a deterministic result (r12).
+@session_memo
 def corpus_kmeans_centroids(
     spark: SparkSession, sf_dir: str, k: int, iters: int
 ) -> list[list[float]]:
     """Session-memoized ``lloyd_kmeans`` over the embeddings fixture.
     Pure function of (corpus, k, iters): deterministic lowest-id
     init, fixed round count."""
-    key = (spark.sparkContext.applicationId, sf_dir, k, iters)
-    if key not in _TRAINED_CENTROIDS:
-        emb = load_spread(spark, sf_dir, "embeddings").withColumn(
-            "dv", _dvec("embedding")
-        )
-        _TRAINED_CENTROIDS[key] = lloyd_kmeans(emb, "vec_id", "dv", k, iters)
-    return _TRAINED_CENTROIDS[key]
+    emb = load_spread(spark, sf_dir, "embeddings").withColumn(
+        "dv", _dvec("embedding")
+    )
+    return lloyd_kmeans(emb, "vec_id", "dv", k, iters)
 
 
 def kmeans_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

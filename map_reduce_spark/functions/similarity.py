@@ -28,9 +28,12 @@ blocked-GEMM tiles, sharing ``vector_blocks``/``make_unit_rows`` with
 
 Pair scores are built-in higher-order array functions
 (``zip_with``/``aggregate``). Dense numpy work runs in pandas UDFs:
-the LSH sketch, the PQ training/encode/lookup passes and the GEMM
-tiles. Embeddings stay 64-d float; they are cast to double only for
-the math.
+the LSH sketch, the PQ encode/lookup passes and the GEMM tiles.
+Embeddings stay 64-d float; they are cast to double only for the
+math. The two trained quantizers, the IVF cells (``train_centroids``)
+and the PQ codebooks (``pq_codebooks``), are trained by the engine's
+one Lloyd's trainer in ``clustering.py``; that module imports this
+one at top level, so it is imported here inside function bodies.
 """
 
 from __future__ import annotations
@@ -827,42 +830,30 @@ def _with_nearest_cells(
 
 def train_centroids(emb: DataFrame, n_cells: int = N_CELLS) -> list[list[float]]:
     """Train the coarse quantizer over a ``(vec_id, embedding)`` frame:
-    K-means with cosine assignment and a dimension-wise mean
-    recompute, ``KMEANS_ITERS`` rounds.
+    ``clustering.lloyd_kmeans`` for ``KMEANS_ITERS`` rounds, with the
+    nearest cosine cell (``_with_nearest_cells``) as its assignment
+    step — the engine's one Lloyd's loop, seed rule and short-corpus
+    ``ValueError``.
 
     The centroid table (n_cells x dim doubles) is the one structure
-    IVF *requires* on the driver — it is tiny by construction (the
-    whole point of a coarse quantizer), so collect() here is the
-    standard pattern, not a scale bug: each iteration is one
-    distributed assign (map-only, centroids broadcast as literals)
-    plus one decomposable avg shuffle. Init = first n_cells vectors
-    (deterministic; k-means++ would sharpen cells but adds passes).
+    IVF *requires* on the driver — tiny by construction (the whole
+    point of a coarse quantizer), so the per-round collect is the
+    standard pattern, not a scale bug.
     """
-    emb = with_norm(emb, "embedding", "dv", "norm")
-    # Seed from the first n_cells rows by vec_id order — robust to
-    # offset/sparse id spaces (filter(vec_id < n_cells) is not).
-    init = emb.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
-    centroids = [[float(x) for x in r.embedding] for r in init]
-    if len(centroids) != n_cells:
-        raise ValueError(
-            f"corpus has only {len(centroids)} vectors; "
-            f"need >= {n_cells} to seed the IVF quantizer"
-        )
-    for _ in range(KMEANS_ITERS):
-        assigned = _with_nearest_cells(
-            emb, "dv", "norm", centroids, 1, "cells"
-        ).withColumn("cell", F.col("cells")[0])
-        rows = (
-            assigned.select("cell", F.posexplode("dv").alias("pos", "v"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("v").alias("m"))
-            .collect()
-        )
-        new = {r.cell: centroids[r.cell][:] for r in rows}
-        for r in rows:
-            new[r.cell][r.pos] = float(r.m)
-        centroids = [new.get(i, centroids[i]) for i in range(n_cells)]
-    return centroids
+    from map_reduce_spark.functions.clustering import lloyd_kmeans
+
+    def nearest_cell(df, dv_col, centroids, out):
+        cells = _with_nearest_cells(df, dv_col, "norm", centroids, 1, "cells")
+        return cells.withColumn(out, F.col("cells")[0])
+
+    return lloyd_kmeans(
+        with_norm(emb, "embedding", "dv", "norm"),
+        "vec_id",
+        "dv",
+        n_cells,
+        KMEANS_ITERS,
+        assign=nearest_cell,
+    )
 
 
 @session_memo
@@ -929,92 +920,24 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PQ_M = 8  # subspaces (64 dims -> 8 subvectors of 8)
 PQ_K = 16  # centroids per subspace -> 4-bit codes
-PQ_SUB = 8  # dims per subspace
 PQ_ITERS = 2
 PQ_RERANK = 8 * TOP_K  # ADC candidates exact-reranked per probe
 
 
-def _np_subs(pdf_dv) -> "object":
-    """Stack a pandas Series of 64-float lists into (n, PQ_M, PQ_SUB)."""
-    import numpy as np
-
-    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf_dv]).reshape(
-        len(pdf_dv), PQ_M, PQ_SUB
-    )
-
-
-def _np_codes(subs, books):
-    """argmin-over-K squared L2 per subspace: (n, PQ_M) int codes.
-    Ties break to the lowest centroid id (np.argmin), matching the
-    deterministic struct-min convention used by the IVF path."""
-    d = ((subs[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=-1)
-    return d.argmin(axis=-1)
-
-
 @session_memo
 def pq_codebooks(spark: SparkSession, sf_dir: str):
-    """Train per-subspace codebooks: K-means in each of the PQ_M
-    8-dim subspaces (Jegou et al.'s product quantizer).
-
-    All per-vector math runs executor-side in Arrow-batched numpy
-    (``mapInPandas`` — the repo's pattern for dense vector kernels,
-    cf. the blocked-GEMM dedup): each batch emits per-(subspace, code)
-    partial sums, a decomposable aggregate combines them, and the
-    driver fetches exactly PQ_M x PQ_K rows per iteration — the
-    codebook itself, constant in corpus size. Init = the first PQ_K
-    vectors' subvectors by vec_id order (deterministic). Memoized per
-    (session, corpus): model-sized driver state (PQ_M x PQ_K x PQ_SUB
-    doubles = 8 KiB), trained once and queried many times.
+    """The corpus's (PQ_M, PQ_K, 64 / PQ_M) product quantizer (Jegou et
+    al.): ``clustering.train_codebooks`` — Lloyd's in each of the PQ_M
+    8-dim subspaces at once, per round one Arrow-batched numpy
+    partial-sum pass and a PQ_M x PQ_K-row collect, constant in corpus
+    size. Memoized per (session, corpus): model-sized driver state
+    (PQ_M x PQ_K x 8 doubles = 8 KiB), trained once and queried
+    many times.
     """
-    import numpy as np
+    from map_reduce_spark.functions.clustering import train_codebooks
 
     emb = load_spread(spark, sf_dir, "embeddings").withColumn("dv", _dvec("embedding"))
-    init = emb.select("vec_id", "dv").orderBy("vec_id").limit(PQ_K).collect()
-    if len(init) < PQ_K:
-        raise ValueError(f"corpus has only {len(init)} vectors; need >= {PQ_K} for PQ")
-    books = np.stack(
-        [np.asarray(r.dv, dtype=np.float64) for r in init]
-    ).reshape(PQ_K, PQ_M, PQ_SUB).transpose(1, 0, 2)  # (M, K, SUB)
-
-    for _ in range(PQ_ITERS):
-        b = books  # bind the current iteration's codebooks into the closure
-
-        def partials(it):
-            import pandas as pd
-
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                subs = _np_subs(pdf["dv"])
-                codes = _np_codes(subs, b)
-                out = []
-                for m in range(PQ_M):
-                    for k in range(PQ_K):
-                        mask = codes[:, m] == k
-                        c = int(mask.sum())
-                        if c:
-                            s = subs[mask, m, :].sum(axis=0)
-                            out.append((m, k, c, s.tolist()))
-                yield pd.DataFrame(out, columns=["m", "k", "c", "s"])
-
-        rows = (
-            emb.select("dv")
-            .mapInPandas(partials, "m int, k int, c long, s array<double>")
-            .groupBy("m", "k")
-            .agg(
-                F.sum("c").alias("c"),
-                F.array(
-                    *[F.sum(F.col("s")[i]).alias(f"s{i}") for i in range(PQ_SUB)]
-                ).alias("s"),
-            )
-            .collect()
-        )  # <= PQ_M x PQ_K rows at ANY corpus size
-        new = books.copy()
-        for r in rows:
-            if r.c:
-                new[r.m, r.k, :] = np.asarray(r.s) / r.c
-        books = new
-    return books
+    return train_codebooks(emb, "vec_id", "dv", PQ_M, PQ_K, PQ_ITERS)
 
 
 def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1023,6 +946,8 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs 64 raw floats — the ~30x memory cut that lets a 100 TB corpus's
     index fit a cluster's RAM. Encoding is a map-only Arrow batch pass;
     the codebook rides the closure (8 KiB, broadcast with the task)."""
+    from map_reduce_spark.functions.clustering import _stack, nearest_codes
+
     books = pq_codebooks(spark, sf_dir)
     emb = load_spread(spark, sf_dir, "embeddings").withColumn("dv", _dvec("embedding"))
 
@@ -1033,8 +958,8 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            subs = _np_subs(pdf["dv"])
-            codes = _np_codes(subs, books)
+            subs = _stack(pdf["dv"], PQ_M)
+            codes, _ = nearest_codes(subs, books)
             norms = np.sqrt((subs.reshape(len(pdf), -1) ** 2).sum(axis=1))
             yield pd.DataFrame(
                 {
@@ -1067,6 +992,8 @@ def _pq_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     <probe_sub_m, centroid_mk>, flattened to array<double>[M*K].
     Computed once per probe (probe cost, not pair cost) in one numpy
     einsum per Arrow batch."""
+    from map_reduce_spark.functions.clustering import _stack
+
     books = pq_codebooks(spark, sf_dir)
     emb = load_spread(spark, sf_dir, "embeddings").withColumn("dv", _dvec("embedding"))
     # Right-size the LUT pass to the PROBE count (r12, guide §4.5/§2.5
@@ -1088,7 +1015,7 @@ def _pq_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            subs = _np_subs(pdf["dv"])  # (n, M, SUB)
+            subs = _stack(pdf["dv"], PQ_M)  # (n, M, SUB)
             t = np.einsum("nms,mks->nmk", subs, books)  # (n, M, K)
             norms = np.sqrt((subs.reshape(len(pdf), -1) ** 2).sum(axis=1))
             yield pd.DataFrame(

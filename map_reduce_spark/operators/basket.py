@@ -209,28 +209,23 @@ def _pair_rules(baskets: DataFrame) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> (n_orders, n_freq_items): two corpus
-# constants consumed by the FP-growth regime gate and the rule
-# denominators. Memoized per session like the cached frames they
-# derive from — the pair of counting jobs otherwise re-ran on every
-# builder call (r12, guide §2.4).
-_BASKET_COUNTS: dict[tuple[str, str], tuple[int, int]] = {}
-
-
+# (n_orders, n_freq_items): two corpus constants consumed by the
+# FP-growth regime gate and the rule denominators. Memoized per
+# session like the cached frames they derive from — the pair of
+# counting jobs otherwise re-ran on every builder call (r12, guide
+# §2.4).
+@session_memo
 def _basket_counts(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BASKET_COUNTS:
-        baskets = _baskets(spark, sf_dir)
-        n_orders = baskets.count()
-        n_freq_items = (
-            baskets.select(F.explode("ps").alias("p"))
-            .groupBy("p")
-            .agg(F.count(F.lit(1)).alias("n_p"))
-            .filter(F.col("n_p") >= MIN_PAIR_ORDERS)
-            .count()
-        )
-        _BASKET_COUNTS[key] = (n_orders, n_freq_items)
-    return _BASKET_COUNTS[key]
+    baskets = _baskets(spark, sf_dir)
+    n_orders = baskets.count()
+    n_freq_items = (
+        baskets.select(F.explode("ps").alias("p"))
+        .groupBy("p")
+        .agg(F.count(F.lit(1)).alias("n_p"))
+        .filter(F.col("n_p") >= MIN_PAIR_ORDERS)
+        .count()
+    )
+    return n_orders, n_freq_items
 
 
 @session_cached

@@ -230,21 +230,22 @@ def session_cached(
     return wrapper
 
 
-def session_memo(fn: Callable[[SparkSession, str], _V]) -> Callable[[SparkSession, str], _V]:
-    """Memoize a driver-side ``(spark, sf_dir) -> value`` builder per
-    (applicationId, sf_dir), the key ``session_cached`` uses, so a
-    fixture dir regenerated at the same path in a NEW session never
-    reuses a stale value. For small plain-Python results (trained
-    models, vocabularies, fixture dimensions): nothing is persisted,
-    so the byte budget does not apply. ``cache_clear()`` forgets every
-    entry, as on ``functools.cache``."""
-    memo: dict[tuple[str, str], _V] = {}
+def session_memo(fn: Callable[..., _V]) -> Callable[..., _V]:
+    """Memoize a driver-side ``(spark, sf_dir, *args) -> value`` builder
+    per (applicationId, sf_dir, *args) — the key ``session_cached``
+    uses, plus any extra hashable arguments (a model's k and round
+    count) — so a fixture dir regenerated at the same path in a NEW
+    session never reuses a stale value. For small plain-Python results
+    (trained models, vocabularies, fixture dimensions, corpus counts):
+    nothing is persisted, so the byte budget does not apply.
+    ``cache_clear()`` forgets every entry, as on ``functools.cache``."""
+    memo: dict[tuple, _V] = {}
 
     @functools.wraps(fn)
-    def wrapper(spark: SparkSession, sf_dir: str) -> _V:
-        key = (spark.sparkContext.applicationId, sf_dir)
+    def wrapper(spark: SparkSession, sf_dir: str, *args) -> _V:
+        key = (spark.sparkContext.applicationId, sf_dir, *args)
         if key not in memo:
-            memo[key] = fn(spark, sf_dir)
+            memo[key] = fn(spark, sf_dir, *args)
         return memo[key]
 
     wrapper.cache_clear = memo.clear

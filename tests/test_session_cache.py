@@ -96,3 +96,26 @@ def test_protection_expires_at_query_boundary(spark, monkeypatch):
         assert live[0][2].endswith(f"budget_probe_{_KEEP_RECENT}")
     finally:
         _drop_probes("/bud3")
+
+
+def test_session_memo_keys_extra_args(spark):
+    """``session_memo`` keys on (applicationId, sf_dir, *args): a
+    repeated call is a hit, a different extra argument is a new entry,
+    and ``cache_clear()`` forgets every entry."""
+    from map_reduce_spark.sources.cache import session_memo
+
+    calls = []
+
+    @session_memo
+    def build(spark, sf_dir, k):
+        calls.append(k)
+        return k * 10
+
+    assert build(spark, "/memo", 1) == 10
+    assert build(spark, "/memo", 1) == 10
+    assert build(spark, "/memo", 2) == 20
+    assert calls == [1, 2]
+    build.cache_clear()
+    build(spark, "/memo", 1)
+    build(spark, "/memo", 2)
+    assert calls == [1, 2, 1, 2]
