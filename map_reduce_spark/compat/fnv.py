@@ -7,9 +7,9 @@ layer match the reference's *per-partition* file layout, not just the
 global multiset observable.
 
 Pure Python on purpose: it is the partitioner of the compat job's
-``groupByKey`` (driver-serialized, executed once per distinct key per
-map task, after the map-side list combine — the native engine never
-routes through it).
+``partitionBy`` (driver-serialized, executed once per distinct key per
+map task, after the map task groups its pairs per key — the native
+engine never routes through it).
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ def ihash(key: str) -> int:
 
 
 def make_partitioner(n_reduce: int):
-    """Partitioner fn for RDD.groupByKey — key -> reduce bucket."""
+    """Partitioner of the compat job's ``partitionBy`` — key -> reduce bucket."""
 
     def part(key: str) -> int:
         return ihash(key) % n_reduce

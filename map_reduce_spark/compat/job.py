@@ -7,50 +7,66 @@ Semantics reproduced (SURVEY.md §2.1 operator table):
   ``minPartitions=defaultParallelism``, so the map stage runs on
   every core rather than the default 2 tasks.
 - E2 map: ``map_fn(filename, contents) -> [(key, value)]``
-  (worker.go:87) -> ``flatMap``.
+  (worker.go:87), called per file inside ``_grouped``.
 - E3 hash partition: FNV-32a & 0x7fffffff mod n_reduce
-  (worker.go:32-44) -> ``groupByKey`` with the exact hash as its
-  partitioner. Values are first collected into per-key lists
-  map-side (PySpark's list combiner, spilling under
-  ``spark.python.worker.memory``), so the hash runs once per distinct
-  key per map task and one record per key crosses the shuffle.
+  (worker.go:32-44) -> ``partitionBy`` with the exact hash as its
+  partitioner. Each map task first groups its pairs into one plain
+  ``{key: [values]}`` dict (``_grouped``), as the reference's map
+  worker fills its nReduce buckets, so the hash runs once per distinct
+  key per map task and one ``(key, values)`` record per key crosses
+  the shuffle.
 - E6 per-partition ascending byte-wise key sort (worker.go:117) ->
-  sort of the partition's distinct keys.
+  the reduce task merges the map tasks' lists per key (``_merge``)
+  and sorts the partition's distinct keys.
 - E7 ``reduce_fn(key, [values]) -> value`` called once per distinct
   key with ALL values (worker.go:121-137); ``reduce_fn`` never runs
   map-side, so it sees the same value multiset as in the reference.
 - E8 text sink ``"<key> <value>\\n"`` per line, one file
-  ``mr-out-<r>`` per reduce partition (worker.go:118-138).
+  ``mr-out-<r>`` per reduce partition (worker.go:118-138): the reduce
+  task writes it to a temp file under ``out_dir/_mr_tmp/``, named by
+  its task attempt, then makes it visible with one ``os.replace`` —
+  the temp file + ``os.Rename`` of worker.go:66-69.
 
-Everything the reference implements as control-plane machinery —
-scheduling, phase barrier, 10s straggler re-execution, atomic output
-commit (coordinator.go:52-158, worker.go:47-70) — is inherited from
-Spark's DAG scheduler, task retry, and output committer; nothing to
-build (SURVEY.md §4.1).
+The rest of the reference's control plane — scheduling, phase
+barrier, 10s straggler re-execution (coordinator.go:52-158) — is
+Spark's DAG scheduler and task retry; nothing to build (SURVEY.md
+§4.1). A retried or speculative attempt writes its own temp file, and
+a rename of complete content is atomic, so a reader never sees a
+partial ``mr-out-<r>``.
 
 Scale note: ``reduce_fn`` receives the *complete* value list for a
 key, exactly like the reference, so the compat path holds unbounded
-per-key state. The map-side list combine cuts the shuffle's record
-count, not that state: a key's value list is as long as its number of
-emitted pairs. That is faithful but anti-scale; the native engine
-(operators/, functions/) uses decomposable aggregates instead. The
-compat layer is for running existing reference workloads unchanged.
+per-key state: a key's value list is as long as its number of emitted
+pairs, and each reduce task holds its whole partition in memory to
+sort it, as the reference does. Nothing spills to disk. The map side
+is bounded without spilling: once the Python worker's RSS reaches 0.9
+× ``spark.python.worker.memory`` (the bound ``RDD.groupByKey`` uses),
+``_grouped`` sends its groups on and starts a new dict. That is
+faithful but anti-scale; the native engine (operators/, functions/)
+uses decomposable aggregates instead. The compat layer is for running
+existing reference workloads unchanged.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable, Iterable
+from collections import defaultdict
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
-from operator import itemgetter
 
+from pyspark import TaskContext
+from pyspark.shuffle import get_used_memory
 from pyspark.sql import SparkSession
+from pyspark.util import _parse_memory
 
 from map_reduce_spark.compat.fnv import make_partitioner
 
 MapFn = Callable[[str, str], list[tuple[str, str]]]
 ReduceFn = Callable[[str, list[str]], str]
+
+# temp dir under out_dir for the reduce tasks' not-yet-renamed outputs
+_TMP = "_mr_tmp"
 
 
 def _sort_group_reduce(reduce_fn: ReduceFn):
@@ -72,13 +88,54 @@ def _sort_group_reduce(reduce_fn: ReduceFn):
     return run
 
 
-def _sorted_reduce(reduce_fn: ReduceFn):
-    """Per reduce partition of ``(key, values)`` groups: ascending key
-    order, one ``reduce_fn`` call per distinct key."""
+def _grouped(map_fn: MapFn, limit_mb: float):
+    """Map task body over ``(path, contents)`` records: ``map_fn`` on
+    each file, the pairs grouped into one ``{key: [values]}`` dict in
+    first-seen key order. Once the worker's RSS reaches ``limit_mb``
+    (checked after each file) the dict's groups are yielded and a new
+    dict starts, so a key may leave one map task in several pieces."""
 
-    def run(groups: Iterable[tuple[str, Iterable[str]]]) -> Iterable[str]:
-        for key, values in sorted(groups, key=itemgetter(0)):
-            yield f"{key} {reduce_fn(key, list(values))}"
+    def run(files: Iterable[tuple[str, str]]) -> Iterator[tuple[str, list[str]]]:
+        groups: defaultdict[str, list[str]] = defaultdict(list)
+        for path, contents in files:
+            for key, value in map_fn(os.path.basename(path), contents):
+                groups[key].append(value)
+            if get_used_memory() >= limit_mb:
+                yield from groups.items()
+                groups = defaultdict(list)
+        yield from groups.items()
+
+    return run
+
+
+def _merge(groups: Iterable[tuple[str, list[str]]]) -> dict[str, list[str]]:
+    """One reduce partition's value list per key: the map tasks' lists
+    joined in arrival order."""
+    merged: dict[str, list[str]] = {}
+    for key, values in groups:
+        acc = merged.get(key)
+        if acc is None:
+            merged[key] = values
+        else:
+            acc.extend(values)
+    return merged
+
+
+def _write_reduce(reduce_fn: ReduceFn, out_dir: str):
+    """Reduce task body for partition ``r``: ``reduce_fn`` once per key
+    in ascending order, each ``"<key> <value>\\n"`` line written to a
+    temp file under ``out_dir/_mr_tmp/`` named by the task attempt, then
+    one ``os.replace`` to ``out_dir/mr-out-<r>`` (worker.go:117-138).
+    A failed attempt's temp file goes when ``run()`` removes the dir."""
+
+    def run(r: int, groups: Iterable[tuple[str, list[str]]]) -> Iterator[None]:
+        merged = _merge(groups)
+        attempt = TaskContext.get().taskAttemptId()
+        tmp = os.path.join(out_dir, _TMP, f"mr-out-{r}.{attempt}")
+        with open(tmp, "w", encoding="utf-8", newline="\n") as f:
+            f.writelines(f"{key} {reduce_fn(key, merged[key])}\n" for key in sorted(merged))
+        os.replace(tmp, os.path.join(out_dir, f"mr-out-{r}"))
+        return iter(())
 
     return run
 
@@ -106,36 +163,33 @@ class MapReduceJob:
         """Distributed run; writes ``mr-out-<r>`` files, returns all
         output lines (unsorted across partitions, sorted within).
 
-        The write is a distributed text sink (saveAsTextFile — task
-        outputs commit atomically via the rename-based committer, the
-        same idempotence trick as worker.go:66-69); the part files are
-        then renamed to the reference's ``mr-out-<r>`` layout, a pure
-        metadata operation.
+        One Spark job: ``wholeTextFiles`` → ``_grouped`` (map, one dict
+        group per map task) → ``partitionBy(n_reduce, FNV)`` →
+        ``_write_reduce`` (merge, sort, reduce, temp file + atomic
+        rename per reduce task). The driver then reads the files back.
+        A relative ``out_dir`` is taken against the driver's cwd.
         """
         map_fn, reduce_fn, n_reduce = self.map_fn, self.reduce_fn, self.n_reduce
-        tmp_dir = os.path.join(out_dir, "_mr_tmp")
+        out_dir = os.path.abspath(out_dir)
+        tmp_dir = os.path.join(out_dir, _TMP)
         shutil.rmtree(tmp_dir, ignore_errors=True)
-        os.makedirs(out_dir, exist_ok=True)
+        os.makedirs(tmp_dir)
         sc = spark.sparkContext
+        # the map-side bound RDD.groupByKey applies to its list combiner
+        limit_mb = 0.9 * _parse_memory(sc._conf.get("spark.python.worker.memory", "512m"))
         (
             sc.wholeTextFiles(self._input_glob(), minPartitions=sc.defaultParallelism)
-            .flatMap(lambda fc: map_fn(os.path.basename(fc[0]), fc[1]))
-            .groupByKey(n_reduce, make_partitioner(n_reduce))
-            .mapPartitions(_sorted_reduce(reduce_fn))
-            .saveAsTextFile(tmp_dir)
+            .mapPartitions(_grouped(map_fn, limit_mb))
+            .partitionBy(n_reduce, make_partitioner(n_reduce))
+            .mapPartitionsWithIndex(_write_reduce(reduce_fn, out_dir))
+            .collect()
         )
+        shutil.rmtree(tmp_dir)
         all_lines: list[str] = []
         for r in range(n_reduce):
-            part = os.path.join(tmp_dir, f"part-{r:05d}")
-            dest = os.path.join(out_dir, f"mr-out-{r}")
-            if os.path.exists(part):
-                os.replace(part, dest)
-            else:  # empty partition still gets an (empty) output file
-                open(dest, "w").close()
             # every "%v %v\n" line, blank-looking or holding a "\r" too
-            with open(dest, encoding="utf-8", newline="\n") as f:
+            with open(os.path.join(out_dir, f"mr-out-{r}"), encoding="utf-8", newline="\n") as f:
                 all_lines.extend(line.removesuffix("\n") for line in f)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
         return all_lines
 
     def run_sequential(self) -> list[str]:

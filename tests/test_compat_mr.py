@@ -69,22 +69,53 @@ def test_distributed_equals_sequential(spark, corpus, tmp_path, app):
 
 
 def test_output_file_layout(spark, corpus, tmp_path):
-    """E8 parity: one mr-out-<r> file per reduce partition, lines
-    '<key> <value>', keys ascending within each partition, and each
-    key in its FNV-designated partition (worker.go:96-138)."""
+    """E8 parity, byte for byte: one mr-out-<r> file per reduce
+    partition, holding exactly the sequential oracle's lines whose key
+    the FNV hash sends to r (E3), in ascending key order (E6), each
+    ending in "\\n" (worker.go:96-138)."""
     map_fn, reduce_fn = APPS["wc"]
+    job = MapReduceJob(f"{corpus}/pg-*.txt", map_fn, reduce_fn, n_reduce=10)
     out = tmp_path / "wc_layout"
-    MapReduceJob(f"{corpus}/pg-*.txt", map_fn, reduce_fn, n_reduce=10).run(
-        spark, str(out)
-    )
-    files = sorted(os.listdir(out))
-    assert files == [f"mr-out-{r}" for r in range(10)]
+    job.run(spark, str(out))
+    assert sorted(os.listdir(out)) == [f"mr-out-{r}" for r in range(10)]
+    seq = job.run_sequential()  # every key once, ascending
     for r in range(10):
-        lines = (out / f"mr-out-{r}").read_text().splitlines()
-        keys = [line.split(" ")[0] for line in lines]
-        assert keys == sorted(keys)  # per-partition ascending sort (E6)
-        for k in keys:
-            assert ihash(k) % 10 == r  # exact FNV placement (E3)
+        want = "".join(
+            f"{line}\n" for line in seq if ihash(line.split(" ")[0]) % 10 == r
+        )
+        assert (out / f"mr-out-{r}").read_bytes() == want.encode("utf-8"), r
+
+
+def test_relative_out_dir(spark, corpus, tmp_path, monkeypatch):
+    """A relative out_dir is taken against the driver's cwd, not the
+    JVM's or a Python worker's: the output lands there, complete."""
+    monkeypatch.chdir(tmp_path)
+    map_fn, reduce_fn = APPS["wc"]
+    job = MapReduceJob(f"{corpus}/pg-*.txt", map_fn, reduce_fn, n_reduce=3)
+    got = job.run(spark, "out_rel")
+    assert sorted_output(got) == sorted_output(job.run_sequential())
+    assert sorted(os.listdir(tmp_path / "out_rel")) == ["mr-out-0", "mr-out-1", "mr-out-2"]
+
+
+def test_grouped_flush_then_merge_equals_sequential(corpus):
+    """With a 0 MiB limit the map side flushes its groups after every
+    file, so one map task sends a key in several pieces; the reduce
+    side's merge still gives each key all its values (no Spark)."""
+    from glob import glob
+
+    from map_reduce_spark.compat.job import _grouped, _merge
+
+    paths = sorted(glob(f"{corpus}/pg-*.txt"))
+    files = [(p, open(p, encoding="utf-8").read()) for p in paths]
+    for app in ("wc", "indexer", "concat"):
+        map_fn, reduce_fn = APPS[app]
+        pieces = list(_grouped(map_fn, 0)(iter(files)))
+        assert len(pieces) == sum(
+            len({k for k, _ in map_fn(os.path.basename(p), c)}) for p, c in files
+        )
+        merged = _merge(pieces)
+        lines = [f"{k} {reduce_fn(k, merged[k])}" for k in sorted(merged)]
+        assert lines == MapReduceJob(paths, map_fn, reduce_fn).run_sequential(), app
 
 
 def test_wc_counts_are_exact(spark, corpus, tmp_path):
@@ -170,13 +201,14 @@ def test_fault_tolerance_many_seeds(spark, corpus, tmp_path, seed):
         return reduce_fn(key, values)
 
     inputs = f"{corpus}/pg-*.txt"
+    out = tmp_path / f"crashy_{seed}"
     seq = sorted_output(MapReduceJob(inputs, map_fn, reduce_fn).run_sequential())
     got = sorted_output(
-        MapReduceJob(inputs, crashy_map, crashy_reduce, n_reduce=5).run(
-            spark, str(tmp_path / f"crashy_{seed}")
-        )
+        MapReduceJob(inputs, crashy_map, crashy_reduce, n_reduce=5).run(spark, str(out))
     )
     assert got == seq
+    # the crashed reduce attempts leave no temp file or temp dir behind
+    assert sorted(os.listdir(out)) == [f"mr-out-{r}" for r in range(5)]
 
 
 def test_early_exit_atomic_visibility(spark, corpus, tmp_path):
