@@ -13,36 +13,49 @@ from __future__ import annotations
 import itertools
 import re
 
-# runs of word characters that are neither digits nor "_": a superset of
-# the letters (every str.isalpha character is one), so each maximal
-# letter run lies inside one candidate run
-_CANDIDATE_RUNS = re.compile(r"[^\W\d_]+")
+
+def _letter_class() -> str:
+    """Regex class body of every ``str.isalpha`` character of the BMP,
+    as ranges, plus the whole astral range U+10000-U+10FFFF (its
+    letters and its non-letters alike)."""
+    flags = bytes(chr(c).isalpha() for c in range(0x10000))
+    spans = (m.span() for m in re.finditer(b"\x01+", flags))
+    bmp = "".join(f"{re.escape(chr(a))}-{re.escape(chr(b - 1))}" for a, b in spans)
+    return bmp + "\U00010000-\U0010ffff"
+
+
+# maximal runs of candidate characters, one bitmap lookup per BMP
+# character: a run holds only letters unless it holds an astral
+# non-letter, and each maximal letter run lies inside one run
+_CANDIDATE_RUNS = re.compile(f"[{_letter_class()}]+")
 
 
 def _words(text: str) -> list[str]:
     """Maximal runs of Unicode letters — strings.FieldsFunc(contents,
-    not unicode.IsLetter) (/root/reference/src/mrapps/wc.go:24-31).
+    not unicode.IsLetter) (reference src/mrapps/wc.go:24-31).
     Python str.isalpha matches Go unicode.IsLetter on the L* categories.
-    A candidate run that is all letters is one token; the rare one that
-    is not (e.g. "½", "Ⅻ", "²") is split character by character.
+    The candidate class is derived from ``str.isalpha`` at import, so it
+    tracks the same Unicode tables as ``run_sequential()``. When every
+    run is all letters the ``findall`` list is the answer; otherwise
+    each run is split character by character, dropping its astral
+    non-letters (e.g. "𝟏" in "𝐀𝐁c𝟏d").
     """
-    words = []
-    for run in _CANDIDATE_RUNS.findall(text):
-        if run.isalpha():
-            words.append(run)
-        else:
-            words.extend(
-                "".join(group)
-                for is_alpha, group in itertools.groupby(run, key=str.isalpha)
-                if is_alpha
-            )
-    return words
+    runs = _CANDIDATE_RUNS.findall(text)
+    if "".join(runs).isalpha():
+        return runs
+    return [
+        "".join(group)
+        for run in runs
+        for is_alpha, group in itertools.groupby(run, key=str.isalpha)
+        if is_alpha
+    ]
 
 
 # --- wc (A1, /root/reference/src/mrapps/wc.go:22-43) ----------------------
 
 def wc_map(filename: str, contents: str) -> list[tuple[str, str]]:
-    return [(w, "1") for w in _words(contents)]
+    words = _words(contents)
+    return list(zip(words, itertools.repeat("1", len(words))))
 
 
 def wc_reduce(key: str, values: list[str]) -> str:
@@ -53,7 +66,8 @@ def wc_reduce(key: str, values: list[str]) -> str:
 
 def indexer_map(filename: str, contents: str) -> list[tuple[str, str]]:
     # per-document distinct words (the map[string]bool dedup, :21-25)
-    return [(w, filename) for w in sorted(set(_words(contents)))]
+    words = sorted(set(_words(contents)))
+    return list(zip(words, itertools.repeat(filename, len(words))))
 
 
 def indexer_reduce(key: str, values: list[str]) -> str:

@@ -6,10 +6,12 @@ applied at worker.go:39-44). Reproducing it exactly lets the compat
 layer match the reference's *per-partition* file layout, not just the
 global multiset observable.
 
-Pure Python on purpose: it is the partitioner of the compat job's
-``partitionBy`` (driver-serialized, executed once per distinct key per
-map task, after the map task groups its pairs per key — the native
-engine never routes through it).
+Pure Python on purpose: it is the compat job's bucket function
+(driver-serialized). It runs once per distinct key per map task, as
+the ``partitionBy`` partitioner after the map task groups its pairs
+per key, and once more per distinct key on the reduce side, where a
+reduce task that owns several buckets splits its keys into their
+``mr-out-<r>`` files. The native engine never routes through it.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ def ihash(key: str) -> int:
 
 
 def make_partitioner(n_reduce: int):
-    """Partitioner of the compat job's ``partitionBy`` — key -> reduce bucket."""
+    """The compat job's bucket function — key -> reduce bucket ``r``."""
 
     def part(key: str) -> int:
         return ihash(key) % n_reduce

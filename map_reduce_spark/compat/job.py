@@ -9,42 +9,50 @@ Semantics reproduced (SURVEY.md §2.1 operator table):
 - E2 map: ``map_fn(filename, contents) -> [(key, value)]``
   (worker.go:87), called per file inside ``_grouped``.
 - E3 hash partition: FNV-32a & 0x7fffffff mod n_reduce
-  (worker.go:32-44) -> ``partitionBy`` with the exact hash as its
-  partitioner. Each map task first groups its pairs into one plain
+  (worker.go:32-44) picks a key's bucket ``r``, i.e. its output file.
+  Each map task first groups its pairs into one plain
   ``{key: [values]}`` dict (``_grouped``), as the reference's map
-  worker fills its nReduce buckets, so the hash runs once per distinct
-  key per map task and one ``(key, values)`` record per key crosses
-  the shuffle.
-- E6 per-partition ascending byte-wise key sort (worker.go:117) ->
-  the reduce task merges the map tasks' lists per key (``_merge``)
-  and sorts the partition's distinct keys.
+  worker fills its nReduce buckets, so one ``(key, values)`` record per
+  key crosses the shuffle. ``partitionBy`` sends bucket ``r`` to reduce
+  task ``r mod n_tasks``, where ``n_tasks = min(n_reduce,
+  defaultParallelism)``: one reduce task per core, each owning the
+  buckets ``r ≡ t (mod n_tasks)``, so the reduce stage runs in one wave
+  instead of paying per-task costs for ``n_reduce`` tiny tasks. On a
+  host with at least ``n_reduce`` cores it is one task per bucket, as
+  in the reference.
+- E6 per-bucket ascending byte-wise key sort (worker.go:117) -> the
+  reduce task merges the map tasks' lists per key (``_merge``), sorts
+  its distinct keys and splits them by bucket (the hash runs once more
+  per distinct key here).
 - E7 ``reduce_fn(key, [values]) -> value`` called once per distinct
   key with ALL values (worker.go:121-137); ``reduce_fn`` never runs
   map-side, so it sees the same value multiset as in the reference.
 - E8 text sink ``"<key> <value>\\n"`` per line, one file
-  ``mr-out-<r>`` per reduce partition (worker.go:118-138): the reduce
-  task writes it to a temp file under ``out_dir/_mr_tmp/``, named by
-  its task attempt, then makes it visible with one ``os.replace`` —
-  the temp file + ``os.Rename`` of worker.go:66-69.
+  ``mr-out-<r>`` per bucket, empty if no key hashes there
+  (worker.go:118-138): the reduce task writes each of its buckets to a
+  temp file under ``out_dir/_mr_tmp/``, named by bucket and task
+  attempt, then makes it visible with one ``os.replace`` — the temp
+  file + ``os.Rename`` of worker.go:66-69.
 
 The rest of the reference's control plane — scheduling, phase
 barrier, 10s straggler re-execution (coordinator.go:52-158) — is
 Spark's DAG scheduler and task retry; nothing to build (SURVEY.md
-§4.1). A retried or speculative attempt writes its own temp file, and
-a rename of complete content is atomic, so a reader never sees a
-partial ``mr-out-<r>``.
+§4.1). A retried or speculative attempt writes its own temp files and
+rewrites each of its task's files, and a rename of complete content is
+atomic, so a reader never sees a partial ``mr-out-<r>``. ``run()``
+removes ``_mr_tmp`` whether the job succeeds or raises.
 
 Scale note: ``reduce_fn`` receives the *complete* value list for a
 key, exactly like the reference, so the compat path holds unbounded
 per-key state: a key's value list is as long as its number of emitted
-pairs, and each reduce task holds its whole partition in memory to
-sort it, as the reference does. Nothing spills to disk. The map side
-is bounded without spilling: once the Python worker's RSS reaches 0.9
-× ``spark.python.worker.memory`` (the bound ``RDD.groupByKey`` uses),
-``_grouped`` sends its groups on and starts a new dict. That is
-faithful but anti-scale; the native engine (operators/, functions/)
-uses decomposable aggregates instead. The compat layer is for running
-existing reference workloads unchanged.
+pairs, and each reduce task holds all its buckets in memory to sort
+them, as the reference's worker holds its one bucket. Nothing spills
+to disk. The map side is bounded without spilling: once the Python
+worker's RSS reaches 0.9 × ``spark.python.worker.memory`` (the bound
+``RDD.groupByKey`` uses), ``_grouped`` sends its groups on and starts
+a new dict. That is faithful but anti-scale; the native engine
+(operators/, functions/) uses decomposable aggregates instead. The
+compat layer is for running existing reference workloads unchanged.
 """
 
 from __future__ import annotations
@@ -121,20 +129,28 @@ def _merge(groups: Iterable[tuple[str, list[str]]]) -> dict[str, list[str]]:
     return merged
 
 
-def _write_reduce(reduce_fn: ReduceFn, out_dir: str):
-    """Reduce task body for partition ``r``: ``reduce_fn`` once per key
-    in ascending order, each ``"<key> <value>\\n"`` line written to a
+def _write_reduce(reduce_fn: ReduceFn, out_dir: str, n_reduce: int, n_tasks: int):
+    """Reduce task body for task ``t``, which owns the buckets
+    ``r ≡ t (mod n_tasks)``: merge its records, split the keys by bucket
+    ``ihash(key) % n_reduce``, and call ``reduce_fn`` once per key in
+    ascending order. Each bucket's ``"<key> <value>\\n"`` lines go to a
     temp file under ``out_dir/_mr_tmp/`` named by the task attempt, then
-    one ``os.replace`` to ``out_dir/mr-out-<r>`` (worker.go:117-138).
-    A failed attempt's temp file goes when ``run()`` removes the dir."""
+    one ``os.replace`` to ``out_dir/mr-out-<r>`` (worker.go:117-138); an
+    empty bucket gives an empty file. A failed attempt's temp files go
+    when ``run()`` removes the dir."""
+    bucket = make_partitioner(n_reduce)
 
-    def run(r: int, groups: Iterable[tuple[str, list[str]]]) -> Iterator[None]:
+    def run(t: int, groups: Iterable[tuple[str, list[str]]]) -> Iterator[None]:
         merged = _merge(groups)
+        keys: dict[int, list[str]] = {r: [] for r in range(t, n_reduce, n_tasks)}
+        for key in sorted(merged):
+            keys[bucket(key)].append(key)
         attempt = TaskContext.get().taskAttemptId()
-        tmp = os.path.join(out_dir, _TMP, f"mr-out-{r}.{attempt}")
-        with open(tmp, "w", encoding="utf-8", newline="\n") as f:
-            f.writelines(f"{key} {reduce_fn(key, merged[key])}\n" for key in sorted(merged))
-        os.replace(tmp, os.path.join(out_dir, f"mr-out-{r}"))
+        for r, bucket_keys in keys.items():
+            tmp = os.path.join(out_dir, _TMP, f"mr-out-{r}.{attempt}")
+            with open(tmp, "w", encoding="utf-8", newline="\n") as f:
+                f.writelines(f"{key} {reduce_fn(key, merged[key])}\n" for key in bucket_keys)
+            os.replace(tmp, os.path.join(out_dir, f"mr-out-{r}"))
         return iter(())
 
     return run
@@ -164,10 +180,16 @@ class MapReduceJob:
         output lines (unsorted across partitions, sorted within).
 
         One Spark job: ``wholeTextFiles`` → ``_grouped`` (map, one dict
-        group per map task) → ``partitionBy(n_reduce, FNV)`` →
+        group per map task) → ``partitionBy(n_tasks, FNV)`` →
         ``_write_reduce`` (merge, sort, reduce, temp file + atomic
-        rename per reduce task). The driver then reads the files back.
-        A relative ``out_dir`` is taken against the driver's cwd.
+        rename per bucket). ``n_tasks = min(n_reduce,
+        defaultParallelism)``: one reduce task per core, task ``t``
+        owning buckets ``r ≡ t (mod n_tasks)``, so a host with fewer
+        cores than ``n_reduce`` runs one wave of reduce tasks, and one
+        with at least ``n_reduce`` runs one task per bucket. The driver
+        then reads the files back. ``out_dir/_mr_tmp`` is removed
+        whether or not the job succeeds. A relative ``out_dir`` is taken
+        against the driver's cwd.
         """
         map_fn, reduce_fn, n_reduce = self.map_fn, self.reduce_fn, self.n_reduce
         out_dir = os.path.abspath(out_dir)
@@ -175,16 +197,20 @@ class MapReduceJob:
         shutil.rmtree(tmp_dir, ignore_errors=True)
         os.makedirs(tmp_dir)
         sc = spark.sparkContext
+        n_tasks = min(n_reduce, sc.defaultParallelism)
+        bucket = make_partitioner(n_reduce)
         # the map-side bound RDD.groupByKey applies to its list combiner
         limit_mb = 0.9 * _parse_memory(sc._conf.get("spark.python.worker.memory", "512m"))
-        (
-            sc.wholeTextFiles(self._input_glob(), minPartitions=sc.defaultParallelism)
-            .mapPartitions(_grouped(map_fn, limit_mb))
-            .partitionBy(n_reduce, make_partitioner(n_reduce))
-            .mapPartitionsWithIndex(_write_reduce(reduce_fn, out_dir))
-            .collect()
-        )
-        shutil.rmtree(tmp_dir)
+        try:
+            (
+                sc.wholeTextFiles(self._input_glob(), minPartitions=sc.defaultParallelism)
+                .mapPartitions(_grouped(map_fn, limit_mb))
+                .partitionBy(n_tasks, lambda key: bucket(key) % n_tasks)
+                .mapPartitionsWithIndex(_write_reduce(reduce_fn, out_dir, n_reduce, n_tasks))
+                .collect()
+            )
+        finally:
+            shutil.rmtree(tmp_dir)
         all_lines: list[str] = []
         for r in range(n_reduce):
             # every "%v %v\n" line, blank-looking or holding a "\r" too

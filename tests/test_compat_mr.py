@@ -69,21 +69,42 @@ def test_distributed_equals_sequential(spark, corpus, tmp_path, app):
 
 
 def test_output_file_layout(spark, corpus, tmp_path):
-    """E8 parity, byte for byte: one mr-out-<r> file per reduce
-    partition, holding exactly the sequential oracle's lines whose key
-    the FNV hash sends to r (E3), in ascending key order (E6), each
-    ending in "\\n" (worker.go:96-138)."""
-    map_fn, reduce_fn = APPS["wc"]
-    job = MapReduceJob(f"{corpus}/pg-*.txt", map_fn, reduce_fn, n_reduce=10)
-    out = tmp_path / "wc_layout"
-    job.run(spark, str(out))
-    assert sorted(os.listdir(out)) == [f"mr-out-{r}" for r in range(10)]
-    seq = job.run_sequential()  # every key once, ascending
-    for r in range(10):
-        want = "".join(
-            f"{line}\n" for line in seq if ihash(line.split(" ")[0]) % 10 == r
-        )
-        assert (out / f"mr-out-{r}").read_bytes() == want.encode("utf-8"), r
+    """E8 parity, byte for byte: one mr-out-<r> file per bucket, holding
+    exactly the sequential oracle's lines whose key the FNV hash sends
+    to r (E3), in ascending key order (E6), each ending in "\\n"
+    (worker.go:96-138). concat has 4 keys, so at least 6 of its 10
+    buckets are empty files; wc at 7 buckets has more buckets than the
+    fixture's 4 cores, so reduce tasks own several buckets each."""
+    assert spark.sparkContext.defaultParallelism < 7
+    for app, n_reduce in (("wc", 10), ("concat", 10), ("wc", 7)):
+        map_fn, reduce_fn = APPS[app]
+        job = MapReduceJob(f"{corpus}/pg-*.txt", map_fn, reduce_fn, n_reduce=n_reduce)
+        out = tmp_path / f"{app}_{n_reduce}"
+        job.run(spark, str(out))
+        assert sorted(os.listdir(out)) == sorted(f"mr-out-{r}" for r in range(n_reduce))
+        seq = job.run_sequential()  # every key once, ascending
+        empty = 0
+        for r in range(n_reduce):
+            want = "".join(
+                f"{line}\n" for line in seq if ihash(line.split(" ")[0]) % n_reduce == r
+            )
+            assert (out / f"mr-out-{r}").read_bytes() == want.encode("utf-8"), (app, n_reduce, r)
+            empty += not want
+        assert empty >= n_reduce - len(seq), (app, n_reduce)
+
+
+def test_failed_job_removes_temp_dir(spark, corpus, tmp_path):
+    """A job whose map always raises makes run() raise, and leaves no
+    _mr_tmp (nor any partial temp file in it) under out_dir."""
+
+    def failing_map(filename: str, contents: str):
+        raise RuntimeError("injected map failure")
+
+    out = tmp_path / "failed"
+    job = MapReduceJob(f"{corpus}/pg-*.txt", failing_map, APPS["wc"][1], n_reduce=3)
+    with pytest.raises(Exception, match="injected map failure"):
+        job.run(spark, str(out))
+    assert "_mr_tmp" not in os.listdir(out)
 
 
 def test_relative_out_dir(spark, corpus, tmp_path, monkeypatch):
@@ -166,9 +187,10 @@ def test_fault_tolerance_reexecution(spark, corpus, tmp_path):
 @pytest.mark.parametrize("seed", range(5))
 def test_fault_tolerance_many_seeds(spark, corpus, tmp_path, seed):
     """test-mr-many.sh analogue (reference loops the crash suite to
-    catch retry races): vary WHICH maps and WHICH reduce partitions
-    crash on their first attempt across seeds; every variant must
-    still match the sequential oracle exactly."""
+    catch retry races): vary WHICH maps and WHICH reduce buckets crash
+    on their first attempt across seeds; every variant must still match
+    the sequential oracle exactly. The crash is keyed on the bucket,
+    not the task, since one reduce task may own several buckets."""
     import random
 
     from pyspark import TaskContext
@@ -195,8 +217,9 @@ def test_fault_tolerance_many_seeds(spark, corpus, tmp_path, seed):
         if (
             ctx is not None
             and ctx.attemptNumber() == 0
-            and ctx.partitionId() in crash_parts
+            and ihash(key) % 5 in crash_parts
         ):
+            (tmp_path / f"reduce-crash-{ihash(key) % 5}").touch()
             raise RuntimeError(f"injected reduce crash (seed={seed})")
         return reduce_fn(key, values)
 
@@ -207,6 +230,16 @@ def test_fault_tolerance_many_seeds(spark, corpus, tmp_path, seed):
         MapReduceJob(inputs, crashy_map, crashy_reduce, n_reduce=5).run(spark, str(out))
     )
     assert got == seq
+    # each chosen bucket crashed its reduce task's first attempt; a task
+    # that owns both stops at the first of them
+    crashed = {
+        int(name.rsplit("-", 1)[1])
+        for name in os.listdir(tmp_path)
+        if name.startswith("reduce-crash-")
+    }
+    n_tasks = min(5, spark.sparkContext.defaultParallelism)
+    assert crashed <= crash_parts
+    assert {b % n_tasks for b in crashed} == {b % n_tasks for b in crash_parts}
     # the crashed reduce attempts leave no temp file or temp dir behind
     assert sorted(os.listdir(out)) == [f"mr-out-{r}" for r in range(5)]
 

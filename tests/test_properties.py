@@ -90,11 +90,50 @@ def test_words_round_trips_space_joined_tokens(tokens: list[str]) -> None:
 
 def test_words_splits_candidate_runs_that_are_not_all_letters() -> None:
     """"½", "Ⅻ" and "²" are word characters, neither digits nor "_", but
-    not letters; they must split a run exactly as the per-character
-    groupby does."""
+    not letters (so a ``[^\\W\\d_]`` class would take them in); they
+    must split a run exactly as the per-character groupby does."""
     text = "ab½cd Ⅻx²y"
-    reference = ["".join(g) for alpha, g in itertools.groupby(text, key=str.isalpha) if alpha]
-    assert _words(text) == reference == ["ab", "cd", "x", "y"]
+    assert _words(text) == _letter_runs(text) == ["ab", "cd", "x", "y"]
+
+
+def _letter_runs(text: str) -> list[str]:
+    """The per-character definition: maximal runs of str.isalpha."""
+    return ["".join(g) for alpha, g in itertools.groupby(text, key=str.isalpha) if alpha]
+
+
+def test_words_equal_per_character_definition_on_every_code_point() -> None:
+    """Exhaustive over U+0000..U+10FFFF minus the surrogates: the
+    candidate class is exact on the BMP and admits the whole astral
+    range, so astral non-letters must still split runs. Checked on the
+    code points in order and with separators (BMP and astral
+    non-letters) interleaved at varying strides."""
+    every = "".join(chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF)
+    assert _words(every) == _letter_runs(every)
+    seps = itertools.cycle([" ", "1", "_", "½", "\n", "\U0001d7cf", "\U0001f600"])
+    strides = itertools.cycle(range(1, 10))
+    parts, i = [], 0
+    while i < len(every):
+        n = next(strides)
+        parts += [every[i : i + n], next(seps)]
+        i += n
+    interleaved = "".join(parts)
+    assert _words(interleaved) == _letter_runs(interleaved)
+
+
+def test_words_mixed_bmp_and_astral_runs() -> None:
+    """Astral letters join BMP letters in one run; astral non-letters
+    ("\U0001d7cf" MATHEMATICAL BOLD DIGIT ONE) and BMP non-letters
+    split runs."""
+    cases = {
+        "𝐀𝐁c1d": ["𝐀𝐁c", "d"],
+        "𝐀𝐁c\U0001d7cfd": ["𝐀𝐁c", "d"],
+        "ab½cd Ⅻx²y": ["ab", "cd", "x", "y"],
+        "x\U0001f600𝐀y": ["x", "𝐀y"],
+        "\U0001f600\U0001d7cf": [],
+        "": [],
+    }
+    for text, want in cases.items():
+        assert _words(text) == _letter_runs(text) == want, text
 
 
 # ---------------------------------------------------------------------------
