@@ -233,7 +233,9 @@ class MapReduceJob:
             paths = list(self.inputs)
         intermediate: list[tuple[str, str]] = []
         for path in paths:
-            with open(path, encoding="utf-8") as f:
+            # newline="": keep "\r" as the reference's raw-byte
+            # ReadFile and run()'s wholeTextFiles do
+            with open(path, encoding="utf-8", newline="") as f:
                 contents = f.read()
             intermediate.extend(self.map_fn(os.path.basename(path), contents))
         return list(_sort_group_reduce(self.reduce_fn)(intermediate))

@@ -3,18 +3,14 @@ columns with typed metadata, processed via Arrow-batched Pandas UDFs.
 
 The Spark-side machinery — schema contracts, ``mapInPandas`` batch
 iteration, partition sizing — is real and tested, and so is the
-decode for BMP/PPM/PGM/PCM-WAV (pure struct + numpy) and, as of r7,
-the compressed stills: zlib PNG (stdlib ``zlib`` + full scanline
-unfiltering; truecolor/gray/alpha, PALETTE with sub-byte depths,
-Adam7 INTERLACE) and BASELINE JPEG (jpeg.py: table-driven Huffman +
-DCT, 4:4:4/4:2:0, restart markers) — so image features come from
-actual decoded pixels and audio features from actual decoded samples.
-As of r11, video frames decode too for MJPEG-in-AVI containers (RIFF
-walker + per-frame baseline JPEG — encode_avi_mjpeg /
-MediaDecoder.decode_avi_mjpeg). The remaining regimes
-(progressive/arithmetic JPEG, 16-bit PNG, MP3, and non-MJPEG video —
-MP4/H.264) raise ``NotImplementedError`` exactly where a libav/PIL
-call would slot in — the container has no media libraries.
+decode for uncompressed 24-bit BMP and 16-bit PCM WAV (pure struct +
+numpy), so image features come from actual decoded pixels and audio
+features from actual decoded samples. Every other container
+(compressed stills, MP3, and all video — MP4/H.264) raises
+``NotImplementedError`` exactly where a PIL/libav call would slot in —
+the container has no media libraries, and no input of the engine
+holds media. Video payloads therefore stay opaque bytes; the frame
+sampler keeps its schedule on a byte-slice stand-in.
 
 Design for 100 TB of media:
 - media bytes travel as a ``binary`` column next to typed metadata,
@@ -94,175 +90,16 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 8000, n_channels: int = 1
     )
 
 
-def encode_avi_mjpeg(
-    frames: list[np.ndarray], fps: int = 4, quality: int = 85
-) -> bytes:
-    """Encode a list of (H, W, 3) uint8 RGB frames as MJPEG-in-AVI
-    (RIFF 'AVI ': hdrl with avih + one 'vids'/'MJPG' stream, movi with
-    one baseline-JPEG '00dc' chunk per frame). Minimal but standard —
-    the headers carry real scale/rate/length, so any RIFF-walking
-    reader gets the same schedule ours does. r10 verdict item 5: the
-    RIFF framing mirrors encode_wav, per-frame compression is
-    jpeg.encode_jpeg."""
-    from map_reduce_spark.functions.jpeg import encode_jpeg
-
-    assert frames and fps > 0
-    h, w = frames[0].shape[:2]
-    jpegs = [encode_jpeg(f, quality=quality) for f in frames]
-
-    def chunk(fourcc: bytes, body: bytes) -> bytes:
-        return fourcc + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    avih = struct.pack(
-        "<14I",
-        1_000_000 // fps,  # dwMicroSecPerFrame
-        0, 0, 0,  # maxbytes/sec, padding, dwFlags=0 (no idx1 chunk is
-        # written, so AVIF_HASINDEX must NOT be advertised — a strict
-        # RIFF reader would otherwise seek a nonexistent index;
-        # ADVICE r11)
-        len(jpegs), 0, 1, 0,  # totalframes, initial, streams, sugg buffer
-        w, h, 0, 0, 0, 0,  # width, height, reserved[4]
-    )
-    strh = struct.pack(
-        "<4s4sIHH8I4h",
-        b"vids", b"MJPG", 0, 0, 0,
-        0,  # dwInitialFrames
-        1, fps,  # dwScale / dwRate -> fps frames per second
-        0, len(jpegs),  # dwStart, dwLength (frames)
-        max(len(j) for j in jpegs),  # dwSuggestedBufferSize
-        0xFFFF, 0,  # dwQuality, dwSampleSize
-        0, 0, w, h,  # rcFrame
-    )
-    strf = struct.pack(
-        "<Iii2H4sIiiII", 40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", j) for j in jpegs))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _riff_chunks(buf: bytes, pos: int, end: int):
-    """Yield (fourcc, body_start, body_size) for the RIFF chunks in
-    buf[pos:end], honoring even padding — shared by the AVI walker
-    (decode_wav predates it and keeps its inline loop)."""
-    while pos + 8 <= end:
-        fcc = buf[pos : pos + 4]
-        size = int.from_bytes(buf[pos + 4 : pos + 8], "little")
-        yield fcc, pos + 8, size
-        pos += 8 + size + (size & 1)
-
-
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    """Encode an (H, W, 3) uint8 RGB array as a binary PPM (P6)."""
-    h, w, c = pixels.shape
-    assert c == 3 and pixels.dtype == np.uint8
-    return b"P6\n%d %d\n255\n" % (w, h) + pixels.tobytes()
-
-
-def encode_pgm(pixels: np.ndarray) -> bytes:
-    """Encode an (H, W) uint8 grayscale array as a binary PGM (P5)."""
-    h, w = pixels.shape
-    assert pixels.dtype == np.uint8
-    return b"P5\n%d %d\n255\n" % (w, h) + pixels.tobytes()
-
-
-def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    import zlib
-
-    return (
-        struct.pack(">I", len(body))
-        + ctype
-        + body
-        + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-    )
-
-
-def _adam7_passes(w: int, h: int):
-    """Adam7 pass grid (x0, y0, dx, dy) with empty passes skipped."""
-    for x0, y0, dx, dy in [
-        (0, 0, 8, 8),
-        (4, 0, 8, 8),
-        (0, 4, 4, 8),
-        (2, 0, 4, 4),
-        (0, 2, 2, 4),
-        (1, 0, 2, 2),
-        (0, 1, 1, 2),
-    ]:
-        pw = (w - x0 + dx - 1) // dx
-        ph = (h - y0 + dy - 1) // dy
-        if pw > 0 and ph > 0:
-            yield x0, y0, dx, dy
-
-
-def encode_png(pixels: np.ndarray, interlace: bool = False) -> bytes:
-    """Encode an (H, W, 3) uint8 RGB array as an 8-bit truecolor PNG
-    (color type 2, filter 0 scanlines, one zlib IDAT), sequential or
-    Adam7-interlaced (each pass's sub-image emitted as its own
-    filtered scanline run, spec pass order).
-
-    Spec: PNG (ISO/IEC 15948) — signature, IHDR, IDAT, IEND with
-    CRC-32 per chunk. Stdlib ``zlib`` is the whole compression story,
-    which is why PNG is the one compressed codec closable without
-    media libraries (r6 verdict item 7)."""
-    import zlib
-
-    h, w, c = pixels.shape
-    assert c == 3 and pixels.dtype == np.uint8
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 1 if interlace else 0)
-    if interlace:
-        raw = b"".join(
-            b"\x00" + row.tobytes()
-            for x0, y0, dx, dy in _adam7_passes(w, h)
-            for row in pixels[y0::dy, x0::dx]
-        )
-    else:
-        # filter byte 0 (None) before each scanline
-        raw = b"".join(b"\x00" + row.tobytes() for row in pixels)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def encode_png_palette(
-    indices: np.ndarray, palette: np.ndarray, depth: int = 8
-) -> bytes:
-    """Encode an (H, W) index array + (N, 3) palette as a color-type-3
-    PNG at bit depth 1/2/4/8 (indices packed big-endian within each
-    byte, filter 0 scanlines, PLTE chunk)."""
-    import zlib
-
-    h, w = indices.shape
-    assert indices.dtype == np.uint8 and palette.dtype == np.uint8
-    assert depth in (1, 2, 4, 8) and int(indices.max(initial=0)) < (1 << depth)
-    assert len(palette) <= 1 << depth
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 0)
-    lines = []
-    for row in indices:
-        if depth == 8:
-            packed = row.tobytes()
-        else:
-            bits = (
-                (row[:, None] >> np.arange(depth - 1, -1, -1)) & 1
-            ).astype(np.uint8).reshape(-1)
-            packed = np.packbits(bits).tobytes()
-        lines.append(b"\x00" + packed)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", palette.tobytes())
-        + _png_chunk(b"IDAT", zlib.compress(b"".join(lines)))
-        + _png_chunk(b"IEND", b"")
-    )
+def resize_nearest(px: np.ndarray, max_side: int) -> np.ndarray:
+    """Nearest-neighbor resample of an (H, W, 3) image so its longer
+    side is at most ``max_side`` (never upscales; deterministic,
+    numpy-only index maps)."""
+    h, w = px.shape[:2]
+    scale = min(1.0, max_side / max(w, h))
+    nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
+    yi = (np.arange(nh) * h // nh).clip(max=h - 1)
+    xi = (np.arange(nw) * w // nw).clip(max=w - 1)
+    return px[yi][:, xi]
 
 
 class MediaDecoder:
@@ -279,24 +116,11 @@ class MediaDecoder:
 
     @staticmethod
     def sniff(payload: bytes) -> str | None:
-        """Container format by magic bytes:
-        'bmp' | 'wav' | 'ppm' | 'pgm' | None."""
+        """Container format by magic bytes: 'bmp' | 'wav' | None."""
         if payload[:2] == b"BM" and len(payload) >= 54:
             return "bmp"
         if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
             return "wav"
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            return "avi"
-        if payload[:2] == b"P6":
-            return "ppm"
-        if payload[:2] == b"P5":
-            return "pgm"
-        if payload[:8] == b"\x89PNG\r\n\x1a\n":
-            return "png"
-        if payload[:3] == b"\xff\xd8\xff":
-            return "jpeg"
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            return "gif"
         return None
 
     @staticmethod
@@ -324,227 +148,13 @@ class MediaDecoder:
         return rgb if top_down else rgb[::-1]
 
     @staticmethod
-    def decode_pnm(payload: bytes) -> np.ndarray:
-        """Binary PPM (P6) -> (H, W, 3) or binary PGM (P5) -> (H, W, 3)
-        uint8 RGB (grayscale replicated across channels).
-
-        Netpbm header grammar: magic, then whitespace-separated width,
-        height, maxval, with '#' comments legal between tokens; pixel
-        data starts after the single whitespace byte following maxval.
-        Only maxval <= 255 (1-byte samples) is supported — the 2-byte
-        big-endian variant is the documented slot."""
-        magic = payload[:2]
-        if magic not in (b"P5", b"P6"):
-            raise NotImplementedError("not a binary PPM/PGM payload")
-        pos, tokens = 2, []
-        while len(tokens) < 3:
-            if pos >= len(payload):
-                raise NotImplementedError("truncated PNM header")
-            ch = payload[pos : pos + 1]
-            if ch == b"#":  # comment to end-of-line
-                while pos < len(payload) and payload[pos : pos + 1] != b"\n":
-                    pos += 1
-            elif ch.isspace():
-                pos += 1
-            else:
-                start = pos
-                while pos < len(payload) and not payload[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(int(payload[start:pos]))
-        pos += 1  # exactly one whitespace byte after maxval
-        w, h, maxval = tokens
-        if maxval > 255:
-            raise NotImplementedError(
-                f"PNM maxval={maxval}: only 1-byte samples supported by the "
-                "pure-Python decoder (PIL slot)"
-            )
-        ch_n = 3 if magic == b"P6" else 1
-        raw = np.frombuffer(payload, dtype=np.uint8, count=h * w * ch_n, offset=pos)
-        if magic == b"P6":
-            return raw.reshape(h, w, 3)
-        return np.repeat(raw.reshape(h, w, 1), 3, axis=2)
-
-    @staticmethod
-    def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int, offset: int):
-        """Unfilter ``h`` scanlines of ``stride`` bytes starting at
-        ``offset`` in the inflated IDAT stream (all five PNG filter
-        types: None, Sub, Up, Average, Paeth — an encoder may pick any
-        per row, so a conforming reader needs all of them even though
-        our own encoders emit only type 0). Returns the (h, stride)
-        uint8 array and the offset past the consumed bytes."""
-        if offset + h * (1 + stride) > len(raw):
-            raise NotImplementedError("PNG IDAT length mismatch")
-        out = np.zeros((h, stride), dtype=np.uint8)
-        for y in range(h):
-            base = offset + y * (1 + stride)
-            ftype = raw[base]
-            line = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=base + 1).astype(
-                np.int32
-            )
-            prev = out[y - 1].astype(np.int32) if y > 0 else np.zeros(stride, np.int32)
-            if ftype == 0:  # None
-                cur = line
-            elif ftype == 2:  # Up
-                cur = (line + prev) & 0xFF
-            else:
-                # Sub/Average/Paeth have an intra-row recurrence on the
-                # pixel bpp bytes to the left — sequential per pixel.
-                cur = np.zeros(stride, np.int32)
-                for x in range(stride):
-                    a = cur[x - bpp] if x >= bpp else 0
-                    b = prev[x]
-                    if ftype == 1:  # Sub
-                        cur[x] = (line[x] + a) & 0xFF
-                    elif ftype == 3:  # Average
-                        cur[x] = (line[x] + ((a + b) >> 1)) & 0xFF
-                    elif ftype == 4:  # Paeth
-                        c = prev[x - bpp] if x >= bpp else 0
-                        p = a + b - c
-                        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                        pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                        cur[x] = (line[x] + pred) & 0xFF
-                    else:
-                        raise NotImplementedError(f"PNG filter type {ftype}")
-            out[y] = cur.astype(np.uint8)
-        return out, offset + h * (1 + stride)
-
-    @staticmethod
-    def _png_subimage(
-        raw: bytes,
-        offset: int,
-        pw: int,
-        ph: int,
-        depth: int,
-        ctype_n: int,
-        channels: int,
-        palette: np.ndarray | None,
-    ):
-        """Decode one (sub)image's filtered scanlines -> ((ph, pw, 3)
-        uint8 RGB, new offset). Shared by the sequential path and each
-        Adam7 pass (a pass is an independently-filtered sub-image)."""
-        bits_pp = depth * channels
-        stride = (pw * bits_pp + 7) // 8
-        bpp = max(1, bits_pp // 8)
-        out, offset = MediaDecoder._png_unfilter(raw, ph, stride, bpp, offset)
-        if depth == 8:
-            px = out[:, : pw * channels].reshape(ph, pw, channels)
-        else:
-            # sub-byte samples (gray or palette indices): unpack bits
-            # big-endian within each byte, regroup into depth-bit values
-            bits = np.unpackbits(out, axis=1)[:, : pw * depth].reshape(ph, pw, depth)
-            weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.uint8)
-            px = (bits * weights).sum(axis=2, dtype=np.int32)[:, :, None]
-        if ctype_n == 3:
-            idx = px[:, :, 0]
-            if int(idx.max(initial=0)) >= len(palette):
-                raise NotImplementedError("PNG palette index out of range")
-            return palette[idx], offset
-        if ctype_n == 0:
-            if depth < 8:  # scale 0..2^d-1 to full 0..255
-                px = (px * (255 // ((1 << depth) - 1))).astype(np.uint8)
-            return np.repeat(px.astype(np.uint8), 3, axis=2), offset
-        if ctype_n == 2:
-            return px, offset
-        if ctype_n == 6:
-            return px[:, :, :3], offset
-        return np.repeat(px[:, :, :1], 3, axis=2), offset  # gray+alpha
-
-    # Adam7 pass grid: (x0, y0, dx, dy) per pass, spec order.
-    _ADAM7 = [
-        (0, 0, 8, 8),
-        (4, 0, 8, 8),
-        (0, 4, 4, 8),
-        (2, 0, 4, 4),
-        (0, 2, 2, 4),
-        (1, 0, 2, 2),
-        (0, 1, 1, 2),
-    ]
-
-    @staticmethod
-    def decode_png(payload: bytes) -> np.ndarray:
-        """PNG -> (H, W, 3) uint8 RGB. Real decode, stdlib only (r6
-        verdict item 7 closed the base slot; r7 closed palette and
-        Adam7): chunk walk -> concatenated-IDAT ``zlib.decompress`` ->
-        per-(sub)image scanline unfiltering -> sample unpack ->
-        color-map. Supported: 8-bit gray/RGB/gray+alpha/RGBA, palette
-        (color type 3, PLTE) and grayscale at depths 1/2/4/8, and
-        Adam7 interlace for all of those (each pass decodes as an
-        independent sub-image scattered into the output grid). Alpha
-        is dropped, gray replicated — everything normalizes to RGB.
-        16-bit samples remain the documented slot (tRNS alpha is
-        ignored like every other alpha channel here).
-        """
-        import zlib
-
-        if payload[:8] != b"\x89PNG\r\n\x1a\n":
-            raise NotImplementedError("not a PNG payload")
-        pos, ihdr, idat, plte = 8, None, bytearray(), None
-        while pos + 8 <= len(payload):
-            (size,) = struct.unpack_from(">I", payload, pos)
-            ctype = payload[pos + 4 : pos + 8]
-            body = payload[pos + 8 : pos + 8 + size]
-            pos += 12 + size  # len + type + body + crc
-            if ctype == b"IHDR":
-                ihdr = struct.unpack(">IIBBBBB", body)
-            elif ctype == b"PLTE":
-                plte = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
-            elif ctype == b"IDAT":
-                idat += body
-            elif ctype == b"IEND":
-                break
-        if ihdr is None or not idat:
-            raise NotImplementedError("PNG missing IHDR/IDAT chunk")
-        w, h, depth, ctype_n, comp, filt, interlace = ihdr
-        channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype_n)
-        depth_ok = depth == 8 or (depth in (1, 2, 4) and ctype_n in (0, 3))
-        if channels is None or not depth_ok or comp != 0 or filt != 0 or interlace > 1:
-            raise NotImplementedError(
-                f"PNG depth={depth} color={ctype_n} interlace={interlace}: "
-                "only 8-bit gray/RGB/GA/RGBA + 1/2/4-bit gray/palette, "
-                "sequential or Adam7, supported by the stdlib decoder "
-                "(PIL slot: 16-bit)"
-            )
-        if ctype_n == 3 and plte is None:
-            raise NotImplementedError("palette PNG missing PLTE chunk")
-        raw = zlib.decompress(bytes(idat))
-        args = (depth, ctype_n, channels, plte)
-        if interlace == 0:
-            rgb, off = MediaDecoder._png_subimage(raw, 0, w, h, *args)
-        else:
-            rgb = np.zeros((h, w, 3), dtype=np.uint8)
-            off = 0
-            for x0, y0, dx, dy in MediaDecoder._ADAM7:
-                pw = (w - x0 + dx - 1) // dx
-                ph = (h - y0 + dy - 1) // dy
-                if pw <= 0 or ph <= 0:
-                    continue
-                sub, off = MediaDecoder._png_subimage(raw, off, pw, ph, *args)
-                rgb[y0::dy, x0::dx] = sub
-        if off != len(raw):
-            raise NotImplementedError("PNG IDAT length mismatch")
-        return rgb
-
-    @staticmethod
     def decode_image(payload: bytes) -> np.ndarray:
-        """Any supported still-image container -> (H, W, 3) uint8 RGB.
-        Dispatches on magic bytes; the remaining compressed regimes
-        (progressive/arithmetic JPEG, 16-bit PNG) raise the documented
-        NotImplementedError inside their decoders."""
+        """Still image -> (H, W, 3) uint8 RGB. BMP is the one
+        container decoded here; any other raises the documented
+        NotImplementedError."""
         container = MediaDecoder.sniff(payload)
         if container == "bmp":
             return MediaDecoder.decode_bmp(payload)
-        if container in ("ppm", "pgm"):
-            return MediaDecoder.decode_pnm(payload)
-        if container == "png":
-            return MediaDecoder.decode_png(payload)
-        if container == "jpeg":
-            from map_reduce_spark.functions.jpeg import decode_jpeg
-
-            return decode_jpeg(payload)
-        if container == "gif":
-            from map_reduce_spark.functions.gif import decode_gif
-
-            return decode_gif(payload)
         raise NotImplementedError(
             f"image container {container!r} requires a media library not "
             "in this image (PIL slot)"
@@ -577,70 +187,6 @@ class MediaDecoder:
         return sample_rate, n_channels, samples
 
     @staticmethod
-    def decode_avi_mjpeg(payload: bytes) -> tuple[int, list[bytes]]:
-        """MJPEG-in-AVI -> (fps, [per-frame JPEG bytes]) — r10 verdict
-        item 5: real video-frame access via the in-house RIFF walker
-        (the WAV decoder's framing) + per-frame jpeg.decode_jpeg.
-
-        Returns the frame PAYLOADS, not decoded pixels: a frame
-        sampler must be able to pick its schedule and decode ONLY the
-        sampled frames (the libav seek-then-decode shape). Any
-        non-MJPG video stream (MP4/H.264 territory) raises
-        NotImplementedError — the documented codec boundary."""
-        if not (payload[:4] == b"RIFF" and payload[8:12] == b"AVI "):
-            raise NotImplementedError("not a RIFF/AVI payload")
-        # Stream-aware walk (ADVICE r11): AVI numbers streams by strl
-        # order, frame chunks carry that number as a 2-digit ASCII
-        # prefix ('00dc'), and each strl's strf describes ONLY its own
-        # strh. A multi-stream file (audio strl first, or two video
-        # streams) must not leak another stream's format or frames
-        # into the video decode, so we bind strf to the strl whose
-        # strh said 'vids' and filter frame chunks by the vids stream
-        # number at the end.
-        fps, compression, vids_stream = None, None, None
-        stream_no = -1
-        raw_frames: list[tuple[bytes, bytes]] = []
-
-        def walk(pos: int, end: int, in_strl: bool = False) -> None:
-            nonlocal fps, compression, vids_stream, stream_no
-            strl_is_vids = False
-            for fcc, body, size in _riff_chunks(payload, pos, end):
-                if fcc == b"LIST":
-                    kind = payload[body : body + 4]
-                    if kind == b"strl":
-                        stream_no += 1
-                    walk(body + 4, body + size, in_strl=kind == b"strl")
-                elif (
-                    fcc == b"strh"
-                    and in_strl
-                    and size >= 32
-                    and payload[body : body + 4] == b"vids"
-                    and vids_stream is None  # first video stream wins
-                ):
-                    strl_is_vids = True
-                    vids_stream = stream_no
-                    scale, rate = struct.unpack_from("<II", payload, body + 20)
-                    if scale > 0 and rate > 0:
-                        fps = max(1, round(rate / scale))
-                elif fcc == b"strf" and in_strl and strl_is_vids and size >= 20:
-                    compression = payload[body + 16 : body + 20]
-                    strl_is_vids = False  # one strf per strh
-                elif fcc[2:4] in (b"dc", b"db"):
-                    raw_frames.append((bytes(fcc[:2]), bytes(payload[body : body + size])))
-
-        walk(12, len(payload))
-        want = b"%02d" % vids_stream if vids_stream is not None else None
-        frames = [f for pre, f in raw_frames if pre == want]
-        if compression is not None and compression != b"MJPG":
-            raise NotImplementedError(
-                f"AVI video stream compression {compression!r}: only MJPG is "
-                "supported by the pure-Python decoder (libav slot)"
-            )
-        if fps is None or not frames:
-            raise NotImplementedError("AVI missing vids stream header or frames")
-        return fps, frames
-
-    @staticmethod
     def features(payload: bytes, kind: str) -> np.ndarray:
         """FEATURE_DIM-dim feature vector from decoded content.
 
@@ -650,8 +196,8 @@ class MediaDecoder:
         rate, peak, 10-bin |amplitude| histogram]. Both L2-normalized.
         """
         container = MediaDecoder.sniff(payload)
-        if kind == "image" and container in ("bmp", "ppm", "pgm", "png", "jpeg", "gif"):
-            px = MediaDecoder.decode_image(payload).astype(np.float64) / 255.0
+        if kind == "image" and container == "bmp":
+            px = MediaDecoder.decode_bmp(payload).astype(np.float64) / 255.0
             h, w = px.shape[:2]
             lum = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
             hist, _ = np.histogram(lum, bins=7, range=(0.0, 1.0))
@@ -687,17 +233,8 @@ class MediaDecoder:
         return (v / norm if norm > 0 else v).astype(np.float32)
 
 
-# Backwards-compat alias (r2-r4 name; decode is no longer fake for
-# BMP/WAV, the name survives only for external references).
-FakeDecoder = MediaDecoder
-
-# synthetic_media row lists by n — deterministic (seeded), so caching
-# is purely an encode-cost memoization (see the function docstring).
-_MEDIA_ROWS_CACHE: dict[int, list] = {}
-
-
 def _media_df(spark: SparkSession, rows: list) -> DataFrame:
-    """Arrow-native DataFrame over a memoized media row list.
+    """Arrow-native DataFrame over a media row list.
 
     r13 (guide §4.1 — every Python hop counts workers, and Spark's
     PythonWorkerFactory kills idle workers after a hardcoded 1 minute):
@@ -717,7 +254,7 @@ def _media_df(spark: SparkSession, rows: list) -> DataFrame:
         {
             "media_id": pd.Series([r[0] for r in rows], dtype="int64"),
             "kind": pd.Series([r[1] for r in rows], dtype="object"),
-            "payload": pd.Series([bytes(r[2]) for r in rows], dtype="object"),
+            "payload": pd.Series([r[2] for r in rows], dtype="object"),
             "width": pd.Series([r[3] for r in rows], dtype="object"),
             "height": pd.Series([r[4] for r in rows], dtype="object"),
             "duration_ms": pd.Series([r[5] for r in rows], dtype="object"),
@@ -729,29 +266,16 @@ def _media_df(spark: SparkSession, rows: list) -> DataFrame:
 
 
 def synthetic_media(spark: SparkSession, n: int = 64) -> DataFrame:
-    """Deterministic synthetic media table for tests (seeded).
+    """Deterministic synthetic media table (seeded), rotating image,
+    audio and video rows by ``i % 3``.
 
-    Image rows carry REAL containers — rotating through 24-bit BMP,
-    binary PPM (P6), binary PGM (P5), zlib-compressed PNG in
-    truecolor, Adam7-INTERLACED truecolor, and 4-bit PALETTE variants,
-    baseline JPEG at 4:4:4 and restart-marked 4:2:0, and LZW GIF in
-    sequential and interlaced row order (r7: the compressed-container
-    family) so every decoder in ``MediaDecoder``
-    runs on genuine payloads — audio rows REAL
-    16-bit PCM WAVs (all encoded by this module's own encoders), and,
-    as of r11, most video rows REAL MJPEG-in-AVI containers (this
-    module's encode_avi_mjpeg over per-frame jpeg.encode_jpeg) whose
-    sampled frames decode to actual pixels; every third video row
-    stays opaque random bytes — the MP4/H.264 stand-in exercising the
-    documented codec-boundary path.
-
-    The row list is memoized per ``n`` (deterministic by seed): the
-    driver-side encode cost — ~1 s of pure-Python JPEG/AVI/PNG work at
-    n=96 — is paid once per process, not once per builder call (the
-    bench harness builds each media entry three times).
+    Image rows are REAL 24-bit BMPs of random pixels and audio rows
+    REAL 16-bit PCM WAVs of Gaussian noise (both encoded by this
+    module, so ``MediaDecoder`` decodes genuine payloads); video rows
+    are opaque random bytes — the MP4/H.264 stand-in, whose decode is
+    the documented media-library slot. Building the rows is cheap
+    (tens of ms at n=96), so nothing is memoized.
     """
-    if n in _MEDIA_ROWS_CACHE:
-        return _media_df(spark, _MEDIA_ROWS_CACHE[n])
     rng = np.random.default_rng(42)
     rows = []
     for i in range(n):
@@ -760,69 +284,16 @@ def synthetic_media(spark: SparkSession, n: int = 64) -> DataFrame:
         h = 64 + i % 16 if kind == "image" else None
         dur = 1000 * (i % 30) if kind != "image" else None
         if kind == "image":
-            px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-            container = [
-                "bmp", "ppm", "pgm", "png", "png_i", "png_pal", "jpeg", "jpeg420",
-                "gif", "gif_i",
-            ][(i // 3) % 10]
-            if container == "bmp":
-                payload = encode_bmp(px)
-            elif container == "ppm":
-                payload = encode_ppm(px)
-            elif container == "png":
-                payload = encode_png(px)
-            elif container == "png_i":
-                payload = encode_png(px, interlace=True)
-            elif container == "jpeg":
-                from map_reduce_spark.functions.jpeg import encode_jpeg
-
-                payload = encode_jpeg(px, quality=90)
-            elif container == "jpeg420":
-                from map_reduce_spark.functions.jpeg import encode_jpeg
-
-                payload = encode_jpeg(
-                    px, quality=90, subsampling="420", restart_interval=2
-                )
-            elif container == "png_pal":
-                # 16-color palette image at bit depth 4 (the sub-byte
-                # packing + PLTE path)
-                palette = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-                idx = rng.integers(0, 16, size=(h, w), dtype=np.uint8)
-                payload = encode_png_palette(idx, palette, depth=4)
-            elif container in ("gif", "gif_i"):
-                # few-color source so the GIF palette is exact and the
-                # feature path sees lossless pixels (the 332-quantized
-                # regime is covered by tests/test_gif.py)
-                from map_reduce_spark.functions.gif import encode_gif
-
-                few = (
-                    rng.integers(0, 8, size=(h, w, 3), dtype=np.uint8) * 36
-                ).astype(np.uint8)
-                payload = encode_gif(few, interlace=(container == "gif_i"))
-            else:
-                # grayscale source: luminance of the random pixels
-                payload = encode_pgm(px.mean(axis=2).astype(np.uint8))
+            payload = encode_bmp(rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8))
         elif kind == "audio":
             rate = 1000  # low rate keeps fixtures small; real-world rates parse the same
             n_samp = dur * rate // 1000
             payload = encode_wav(
                 (rng.standard_normal(n_samp) * 8000).astype(np.int16), rate
             )
-        elif (i // 3) % 3 == 2:
-            # opaque container (the MP4/H.264 boundary stand-in)
-            payload = bytes(rng.integers(0, 256, size=128 + (i % 5) * 64, dtype=np.uint8))
         else:
-            # real MJPEG-in-AVI at VIDEO_FPS; zero-duration videos get
-            # the mandatory single frame (samplers skip them anyway)
-            n_frames = max(1, int(dur) * VIDEO_FPS // 1000)
-            w, h = 8, 8
-            frames = [
-                rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-                for _ in range(n_frames)
-            ]
-            payload = encode_avi_mjpeg(frames, fps=VIDEO_FPS)
-        rows.append((i, kind, bytearray(payload), w, h, dur))
-    _MEDIA_ROWS_CACHE[n] = rows
+            payload = bytes(rng.integers(0, 256, size=128 + (i % 5) * 64, dtype=np.uint8))
+        rows.append((i, kind, payload, w, h, dur))
     return _media_df(spark, rows)
 
 
@@ -865,77 +336,20 @@ def extract_features(media: DataFrame, skip_unsupported: bool = True) -> DataFra
     return media.mapInPandas(batches, FEATURES_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def resize_images(media: DataFrame, max_side: int = 32) -> DataFrame:
-    """Resize the image subset so the longer side is ``max_side``.
-
-    Metadata filter prunes non-images BEFORE payload bytes move;
-    Arrow-batched ``mapInPandas``. Decodable payloads (BMP/PPM/PGM)
-    get a REAL nearest-neighbor resample on decoded pixels and are
-    re-encoded as BMP (the pipeline's canonical uncompressed output
-    container); undecodable payloads (compressed formats — the PIL
-    slot) are dropped, mirroring extract_features' skip path.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {"media_id": [], "width": [], "height": [], "payload": []}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    continue
-                try:
-                    px = MediaDecoder.decode_image(p)
-                except NotImplementedError:
-                    continue  # compressed/corrupt: one bad row must not kill the job
-                h, w = px.shape[:2]
-                scale = min(1.0, max_side / max(w, h))
-                nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-                # nearest-neighbor index maps (deterministic, numpy-only)
-                yi = (np.arange(nh) * h // nh).clip(max=h - 1)
-                xi = (np.arange(nw) * w // nw).clip(max=w - 1)
-                resized = px[yi][:, xi]
-                out["media_id"].append(mid)
-                out["width"].append(nw)
-                out["height"].append(nh)
-                out["payload"].append(encode_bmp(resized))
-            if out["media_id"]:
-                yield pd.DataFrame(
-                    {
-                        "media_id": out["media_id"],
-                        "width": pd.Series(out["width"], dtype="int32"),
-                        "height": pd.Series(out["height"], dtype="int32"),
-                        "payload": out["payload"],
-                    }
-                )
-
-    return media.filter(media.kind == "image").mapInPandas(batches, RESIZED_SCHEMA)
-
-
 FRAMES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
         T.StructField("frame_idx", T.LongType(), False),
         T.StructField("frame_ts_ms", T.LongType(), False),
         T.StructField("frame_payload", T.BinaryType(), True),
-        # decoded dimensions of the SAMPLED frame (MJPEG-AVI payloads
-        # only — the bounded-decode proof; null for the undecodable-
-        # container stand-in path)
+        # decoded dimensions of the sampled frame: always null, since
+        # no video container decodes here (the libav slot)
         T.StructField("frame_w", T.IntegerType(), True),
         T.StructField("frame_h", T.IntegerType(), True),
     ]
 )
 
 FPS = 25  # stand-in model rate for undecodable video containers
-VIDEO_FPS = 2  # fixture MJPEG-AVI frame rate (the container carries it)
 
 
 def sample_frames(media: DataFrame, every_ms: int = 5000) -> DataFrame:
@@ -945,37 +359,15 @@ def sample_frames(media: DataFrame, every_ms: int = 5000) -> DataFrame:
     ceil(duration/every_ms) frame rows, so output size is bounded by
     sampling rate, not by source frame count.
 
-    MJPEG-in-AVI payloads get REAL decode (r10 verdict item 5): the
-    container's own frame rate drives the index schedule, the sampled
-    frame's JPEG chunk is emitted as ``frame_payload``, and ONLY the
-    sampled frames are pixel-decoded (the libav seek-then-decode
-    shape) to report ``frame_w``/``frame_h`` from actual image
-    content. Other containers (MP4/H.264 — the documented codec
-    boundary) keep the deterministic byte-slice stand-in at the FPS
-    model rate with null dimensions, so the schedule invariants stay
-    testable on opaque payloads.
+    Video payloads are opaque (their decode is the documented libav
+    slot), so each sampled frame is a deterministic byte slice at the
+    FPS model rate with null ``frame_w``/``frame_h``; the schedule
+    invariants stay testable on opaque payloads.
     """
-    from map_reduce_spark.functions.jpeg import decode_jpeg
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out: dict[str, list] = {
-                "media_id": [],
-                "frame_idx": [],
-                "frame_ts_ms": [],
-                "frame_payload": [],
-                "frame_w": [],
-                "frame_h": [],
-            }
-
-            def emit(mid, fi, ts, payload, w, h):
-                out["media_id"].append(mid)
-                out["frame_idx"].append(fi)
-                out["frame_ts_ms"].append(ts)
-                out["frame_payload"].append(payload)
-                out["frame_w"].append(w)
-                out["frame_h"].append(h)
-
+            rows = []
             for mid, dur, payload in zip(
                 pdf["media_id"], pdf["duration_ms"], pdf["payload"]
             ):
@@ -983,13 +375,6 @@ def sample_frames(media: DataFrame, every_ms: int = 5000) -> DataFrame:
                 if pd.isna(dur) or payload is None or len(payload) == 0:
                     continue
                 payload = bytes(payload)
-                if MediaDecoder.sniff(payload) == "avi":
-                    fps_v, jpegs = MediaDecoder.decode_avi_mjpeg(payload)
-                    for ts in range(0, int(dur), every_ms):
-                        fi = min(ts * fps_v // 1000, len(jpegs) - 1)
-                        px = decode_jpeg(jpegs[fi])  # sampled frames only
-                        emit(mid, fi, ts, jpegs[fi], px.shape[1], px.shape[0])
-                    continue
                 n_frames = max(1, int(dur) * FPS // 1000)
                 frame_size = max(1, len(payload) // n_frames)
                 for ts in range(0, int(dur), every_ms):
@@ -997,11 +382,14 @@ def sample_frames(media: DataFrame, every_ms: int = 5000) -> DataFrame:
                     # the byte-slice stand-in caps at the payload tail
                     # (a real decoder seeks by timestamp, not offset)
                     start = min(fi * frame_size, len(payload) - frame_size)
-                    emit(
-                        mid, fi, ts, payload[start : start + frame_size], None, None
-                    )
-            if out["media_id"]:
-                yield pd.DataFrame(out)
+                    rows.append((mid, fi, ts, payload[start : start + frame_size]))
+            if rows:
+                out = pd.DataFrame(
+                    rows, columns=["media_id", "frame_idx", "frame_ts_ms", "frame_payload"]
+                )
+                out["frame_w"] = None
+                out["frame_h"] = None
+                yield out
 
     return media.filter(media.kind == "video").mapInPandas(batches, FRAMES_SCHEMA)
 
@@ -1015,10 +403,10 @@ def media_feature_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic seeded ``synthetic_media`` corpus stands in. Its
     image rows are real BMPs and audio rows real PCM WAVs, decoded by
     the pure-Python codecs in ``MediaDecoder`` — features come from
-    actual pixels/samples, not payload bytes; only compressed formats
-    and video remain NotImplementedError stubs. Rows-only driver
-    check (no SQL oracle: the table is generated in-session, not a
-    registered parquet view).
+    actual pixels/samples, not payload bytes; the opaque video rows
+    are skipped as unsupported. Rows-only driver check (no SQL
+    oracle: the table is generated in-session, not a registered
+    parquet view).
     """
     media = synthetic_media(spark, 96)
     feats = extract_features(media, skip_unsupported=True)
@@ -1043,34 +431,29 @@ def media_feature_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("media_resize_images", oracle_sql=None)
 def media_resize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rows-only driver entry for the image-resize transform
-    (r5 verdict item: ``resize_images`` previously had no
-    driver-visible row).
+    """Rows-only driver entry for the image-resize transform: every
+    decodable image is resampled by ``resize_nearest`` so its longer
+    side is at most 32 and re-encoded as BMP (the pipeline's canonical
+    uncompressed output container); undecodable payloads are skipped.
 
     Decoded-dimension bounds are asserted IN THE RESULT SCHEMA: each
-    row carries the original and resized dimensions read back by
-    DECODING the re-encoded output payload (not trusting the metadata
-    columns), plus ``bounds_ok`` = (decoded == reported) AND
-    (max(decoded side) <= max_side) AND aspect preserved within
-    1 px of nearest-neighbor truncation. A wrong resample or a broken
-    re-encode flips ``bounds_ok`` to false and changes driver-visible
-    rows. ``sf_dir`` is unused (in-session synthetic corpus, like
+    row carries the resized dimensions read back by DECODING the
+    re-encoded output payload (not trusting the metadata columns),
+    plus ``bounds_ok`` = (decoded == reported) AND (max(decoded side)
+    <= max_side). A wrong resample or a broken re-encode flips
+    ``bounds_ok`` to false and changes driver-visible rows.
+    ``sf_dir`` is unused (in-session synthetic corpus, like
     media_feature_stats).
 
     Scale: metadata prunes non-images before payload bytes move; the
-    resample is Arrow-batched numpy per partition — zero shuffles.
+    resample is Arrow-batched numpy per partition — zero shuffles, and
+    ONE fused mapInPandas for resize + re-decode verification: two
+    chained mapInPandas stages would run TWO Python workers per task
+    (the fork+import storm analyzed in _media_df).
     """
     MAX_SIDE = 32
     media = synthetic_media(spark, 96)
 
-    # ONE fused mapInPandas for resize + re-decode verification (r13,
-    # guide §4.1): as two chained mapInPandas stages each task ran TWO
-    # Python workers, doubling the query's simultaneous-worker demand
-    # (the fork+import storm analyzed in _media_df) and Arrow-hopping
-    # every resized payload an extra round trip. Same resample, same
-    # re-encode, same verification ops row for row — the fusion only
-    # removes the intermediate boundary. ``resize_images`` remains the
-    # standalone operator (tests drive it directly).
     def resize_verify(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out: dict[str, list] = {k: [] for k in (
@@ -1082,15 +465,11 @@ def media_resize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
                 try:
                     px = MediaDecoder.decode_image(p)
                 except NotImplementedError:
-                    continue  # compressed/corrupt: skip, like resize_images
-                h, w = px.shape[:2]
-                scale = min(1.0, MAX_SIDE / max(w, h))
-                nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-                yi = (np.arange(nh) * h // nh).clip(max=h - 1)
-                xi = (np.arange(nw) * w // nw).clip(max=w - 1)
-                payload = encode_bmp(px[yi][:, xi])
-                dpx = MediaDecoder.decode_image(payload)
-                dh, dw = dpx.shape[:2]
+                    continue  # one undecodable row must not kill the job
+                resized = resize_nearest(px, MAX_SIDE)
+                nh, nw = resized.shape[:2]
+                payload = encode_bmp(resized)
+                dh, dw = MediaDecoder.decode_image(payload).shape[:2]
                 out["media_id"].append(mid)
                 out["width"].append(nw)
                 out["height"].append(nh)
@@ -1127,30 +506,23 @@ def media_resize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("media_sample_frames", oracle_sql=None)
 def media_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only driver entry for the video frame sampler
-    (r5 verdict item: ``sample_frames`` previously had no
-    driver-visible row; r10 verdict item 5: MJPEG-in-AVI payloads now
-    REALLY decode).
+    (``sample_frames``).
 
     Per-video summary of the 1->N frame explosion with the schedule
     invariants surfaced as columns: ``schedule_ok`` checks the sampled
     timestamps are exactly 0, every_ms, 2*every_ms, ... < duration_ms
     (count and extremes pin both endpoints), frame indices are
     monotone within the frame-rate model, and every frame payload is
-    non-empty. ``decode_ok`` is the decoded-content evidence:
-    MJPEG-AVI videos must have EVERY sampled frame pixel-decoded with
-    dimensions equal to the row's width/height metadata, and
-    opaque-container videos (the MP4/H.264 boundary stand-in) exactly
-    zero — a broken AVI walker, JPEG decode, or boundary leak flips
-    driver-visible rows. The explosion stays bounded by sampling
-    rate — the property that matters at 100 TB of video. ``sf_dir``
-    is unused (in-session synthetic corpus).
+    non-empty. ``decode_ok`` pins the codec boundary: the opaque video
+    payloads must decode exactly zero frames (``n_decoded == 0``). The
+    explosion stays bounded by sampling rate — the property that
+    matters at 100 TB of video. ``sf_dir`` is unused (in-session
+    synthetic corpus).
     """
     EVERY_MS = 5000
     media = synthetic_media(spark, 96)
     frames = sample_frames(media, every_ms=EVERY_MS)
-    videos = media.filter(F.col("kind") == "video").select(
-        "media_id", "duration_ms", "width", "height"
-    )
+    videos = media.filter(F.col("kind") == "video").select("media_id", "duration_ms")
     per_video = (
         frames.groupBy("media_id")
         .agg(
@@ -1161,10 +533,6 @@ def media_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("frame_payload")).alias("total_bytes"),
             F.min(F.length("frame_payload")).alias("min_frame_bytes"),
             F.count("frame_w").alias("n_decoded"),
-            F.min("frame_w").alias("min_frame_w"),
-            F.max("frame_w").alias("max_frame_w"),
-            F.min("frame_h").alias("min_frame_h"),
-            F.max("frame_h").alias("max_frame_h"),
         )
         .join(F.broadcast(videos), "media_id")
     )
@@ -1177,14 +545,6 @@ def media_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("min_frame_bytes") > 0)
         & (F.col("max_frame_idx") <= F.col("duration_ms") * FPS / 1000)
     )
-    decode_ok = F.when(
-        F.col("width").isNotNull(),  # MJPEG-AVI rows carry dimensions
-        (F.col("n_decoded") == F.col("n_frames"))
-        & (F.col("min_frame_w") == F.col("width"))
-        & (F.col("max_frame_w") == F.col("width"))
-        & (F.col("min_frame_h") == F.col("height"))
-        & (F.col("max_frame_h") == F.col("height")),
-    ).otherwise(F.col("n_decoded") == 0)
     return (
         per_video.select(
             "media_id",
@@ -1196,7 +556,7 @@ def media_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_bytes",
             F.col("n_decoded").cast("long").alias("n_decoded"),
             schedule_ok.alias("schedule_ok"),
-            decode_ok.alias("decode_ok"),
+            (F.col("n_decoded") == 0).alias("decode_ok"),
         )
         .transform(ordered_result, "media_id")
     )

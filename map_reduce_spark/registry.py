@@ -133,7 +133,7 @@ _CHECK_FIRST = [
     "dedup_jaccard_df_capped",  # r12: same, via _verify_jaccard
     "dedup_duplicate_clusters",  # capacity-amendment promotion (r11 wait)
     "dedup_cluster_keep_best",  # capacity-amendment promotion (r11 wait)
-    "media_feature_stats",  # r12: AVI dwFlags=0 shifts payload bytes
+    "media_feature_stats",  # media corpus now BMP/WAV/opaque video: rows change
     "media_resize_images",
     "media_sample_frames",
     # ADVICE r11: append-mode replays on the rewritten sink layout

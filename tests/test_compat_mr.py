@@ -324,15 +324,18 @@ def test_parallelism_probe(spark, tmp_path):
 
 def test_output_keeps_blank_and_cr_lines(spark, tmp_path):
     """run() returns every "%v %v\\n" line run_sequential() does: an
-    empty key and value give the line " ", and a "\\r" inside a value
-    does not split its line."""
+    empty key and value give the line " ", a "\\r" inside a value
+    does not split its line, and both paths hand map_fn a "\\r\\n"
+    input's bytes unchanged (the reference's ReadFile is raw bytes)."""
     (tmp_path / "in.txt").write_text("abc", encoding="utf-8")
+    (tmp_path / "crlf.txt").write_bytes(b"ab\r\ncd\r\n")
     cases = {
-        "empty": (lambda fn, c: [("", "")], [" "]),
-        "cr": (lambda fn, c: [("a", "x\ry"), ("b", "z")], ["a x\ry", "b z"]),
+        "empty": ("in.txt", lambda fn, c: [("", "")], [" "]),
+        "cr": ("in.txt", lambda fn, c: [("a", "x\ry"), ("b", "z")], ["a x\ry", "b z"]),
+        "crlf_input": ("crlf.txt", lambda fn, c: [("n", str(len(c)))], ["n 8"]),
     }
-    for name, (map_fn, want) in cases.items():
-        job = MapReduceJob(f"{tmp_path}/in.txt", map_fn, lambda k, vs: vs[0], n_reduce=3)
+    for name, (src, map_fn, want) in cases.items():
+        job = MapReduceJob(f"{tmp_path}/{src}", map_fn, lambda k, vs: vs[0], n_reduce=3)
         assert sorted_output(job.run_sequential()) == want
         assert sorted_output(job.run(spark, str(tmp_path / name))) == want
 
