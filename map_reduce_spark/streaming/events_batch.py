@@ -541,7 +541,11 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale: state is two scalars per user — O(distinct users) total
     regardless of stream length; each microbatch shuffles only its own
-    rows on user_id (the state store is partitioned by the same key).
+    rows on user_id (the state store is partitioned by the same key),
+    projected to ``user_id`` and ``value`` before the UDF, so the
+    shuffle and the Arrow batches sent to Python carry two of the six
+    ``events`` columns. The state bound is checked from the sink's
+    parquet footers, so the drain runs no extra count job.
 
     FP-boundary note (same class as sim_pairwise_label_affinity's):
     the UDF accumulates total_value via pandas' pairwise summation

@@ -1,18 +1,21 @@
 """Custom stateful streaming operator via ``applyInPandasWithState``.
 
 The reference engine's reduce phase sees the complete value list for a
-key exactly once (/root/reference/src/mr/worker.go:121-137). The
-streaming generalization — a reducer whose per-key state survives
-across micro-batches — is not expressible with built-in windowed aggs
-when the update logic is arbitrary Python, so this is the one place
-the engine drops to the Arrow-batched stateful UDF surface.
+key exactly once (worker.go:121-137). The streaming generalization — a
+reducer whose per-key state survives across micro-batches — is not
+expressible with built-in windowed aggs when the update logic is
+arbitrary Python, so this is the one place the engine drops to the
+Arrow-batched stateful UDF surface.
 
 Scale notes: state lives in the state store partitioned by the group
 key (one shuffle per micro-batch, same hash partitioning as a batch
 groupBy); per-key state here is O(1) (two scalars), so total state is
 O(distinct users) regardless of stream length — the bounded-state
 requirement for a 100 TB stream. Arrow moves rows to Python in
-columnar batches, never row-at-a-time.
+columnar batches, never row-at-a-time, and only the two columns the
+reducer reads (the key and ``value``) cross the shuffle and the
+JVM-to-Python boundary: Catalyst cannot see which columns a Python
+function reads, so the projection is made before the UDF.
 """
 
 from __future__ import annotations
@@ -52,9 +55,15 @@ def user_running_totals(events: DataFrame) -> DataFrame:
     After draining a replayed stream, the latest emission per user
     must equal the batch ``groupBy(user_id).agg(count, sum)`` — the
     parity property the tests assert.
+
+    Only ``user_id`` and ``value`` reach Python. The UDF is opaque to
+    Catalyst's column pruning: without the ``select`` every column of
+    ``events`` is shuffled, converted to Arrow and pandas per group,
+    and dropped unread by ``_running_totals_fn``.
     """
     return (
-        events.groupBy("user_id")
+        events.select("user_id", "value")
+        .groupBy("user_id")
         .applyInPandasWithState(
             _running_totals_fn,
             outputStructType=RUNNING_OUTPUT_SCHEMA,

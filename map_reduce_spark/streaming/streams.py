@@ -398,6 +398,9 @@ def run_available_now(
     rows there, state-sized but not driver-sized. The bound stays the
     loud assertion that the output tracks STATE, so an unbounded-key
     complete-mode query cannot silently regrow the scale-killer class.
+    The sunk row count is summed from the sink's parquet footers
+    (``parquet_num_rows``, nested ``b<id>`` dirs included): a
+    driver-side metadata read that runs no Spark job.
     """
     if output_mode != "append" and state_rows_bound is None:
         raise ValueError(
@@ -408,16 +411,15 @@ def run_available_now(
     spark = stream_df.sparkSession
     base = _fresh_replay_dir(spark, query_name)
     _drain(stream_df, query_name, output_mode, f"{base}/out", f"{base}/cp", width)
-    got = _read_back(spark, stream_df.schema, f"{base}/out")
     if state_rows_bound is not None:
-        n = got.count()  # parquet-footer-cheap, executor-side
+        n = parquet_num_rows(f"{base}/out")
         if n > state_rows_bound:
             raise RuntimeError(
                 f"replay {query_name!r} sank {n} rows > declared state "
                 f"bound {state_rows_bound} — output is not tracking "
                 "state; the query contract or the declared bound is wrong"
             )
-    return got
+    return _read_back(spark, stream_df.schema, f"{base}/out")
 
 
 def events_source_files(sf_dir: str) -> int:

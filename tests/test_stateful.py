@@ -75,3 +75,22 @@ def test_running_totals_accumulate_across_microbatches(spark, sf_dir, tmp_path):
     for r in rows:
         assert r.fn == r.bn, (r.user_id, r.fn, r.bn)
         assert abs(r.ft - r.bt) < 1e-6, (r.user_id, r.ft, r.bt)
+
+
+def test_only_key_and_value_reach_the_python_reducer(spark, sf_dir):
+    """The reducer reads only ``value`` and the group size, and Catalyst
+    cannot prune columns through a Python UDF: the stateful node's
+    child must already be projected to the key and ``value``."""
+    from map_reduce_spark.streaming.streams import read_events_stream
+
+    node = (
+        user_running_totals(read_events_stream(spark, sf_dir))
+        ._jdf.queryExecution()
+        .analyzed()
+    )
+    while node.nodeName() != "FlatMapGroupsInPandasWithState":
+        children = node.children()
+        assert children.size() == 1, node.nodeName()
+        node = children.apply(0)
+    out = node.child().output()
+    assert [out.apply(i).name() for i in range(out.size())] == ["user_id", "value"]

@@ -73,13 +73,20 @@ def test_session_windows(spark, sf_dir):
     assert got["n_events"].sum() == 1000 * (0.001 / 0.001)  # sf0.001: 1000 events
 
 
-def test_memory_sink_requires_and_enforces_state_bound(spark, sf_dir):
+def test_memory_sink_requires_and_enforces_state_bound(spark, sf_dir, tmp_path):
     """The replay harness's state-bound contract (r9 verdict item 6):
     complete/update-mode replays must DECLARE a state-sized row bound,
     and a replay whose sunk output exceeds its declared bound raises
-    instead of silently tracking stream length.
+    instead of silently tracking stream length. The sunk count is
+    summed from the sink's parquet footers, so it must be exact across
+    an update-mode replay's ``b<id>`` batch dirs.
     """
+    import os
+
     import pytest
+
+    from map_reduce_spark.sources import load_table
+    from map_reduce_spark.streaming.stateful import user_running_totals
 
     # missing bound: rejected before the query even starts
     stream = tumbling_counts(read_events_stream(spark, sf_dir))
@@ -92,6 +99,34 @@ def test_memory_sink_requires_and_enforces_state_bound(spark, sf_dir):
         run_available_now(
             stream, "t_tinybound", width=1, output_mode="complete", state_rows_bound=1
         )
+
+    # update mode over 3 micro-batches (3 source files, 1 per trigger):
+    # the bound holds at exactly the read-back's row count and fails
+    # one below it
+    src = str(tmp_path / "events_split")
+    load_table(spark, sf_dir, "events").repartition(3).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+
+    def replay(name, bound):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        return run_available_now(
+            user_running_totals(stream),
+            name,
+            width=1,
+            output_mode="update",
+            state_rows_bound=bound,
+        )
+
+    got = replay("t_multibatch_loose", 10**9)
+    assert len({os.path.dirname(f) for f in got.inputFiles()}) == 3
+    n = got.count()
+    assert replay("t_multibatch_exact", n).count() == n
+    with pytest.raises(RuntimeError, match="state bound"):
+        replay("t_multibatch_tight", n - 1)
 
 
 def test_registered_memory_sink_replays_fit_declared_bounds(spark, sf_dir):
