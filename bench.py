@@ -6,7 +6,7 @@ window); the complete per-query map is written to
 ``BENCH_FULL_local.json`` next to this file.
 
 Data dir: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-Parallelism: local[$SPARK_GRAFT_CPUS] (default 32)
+Parallelism: local[$SPARK_GRAFT_CPUS] (default: the cores this process may use)
 
 Each query executes fully through the noop sink (no driver-side
 result materialization cost) after a warm-up query primes the JVM.

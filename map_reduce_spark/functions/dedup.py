@@ -20,6 +20,12 @@ the shingle-set machinery used here.
 Scale design: every pairwise operator avoids the O(n^2) cross join —
 pairs are generated only through shared shingles (inverted index) or
 shared LSH buckets, which is the only strategy that survives 100 TB.
+Each mechanism is written once: ``band_array``/``bit_bands``/
+``band_rows`` build every LSH band frame (MinHash, SimHash, the
+embedding sign sketch and ``similarity.sim_knn_lsh``),
+``_jaccard_pairs`` counts every all-pairs exact Jaccard, and the
+``_exact_matches`` ... ``_verdicts`` chain gives every incremental
+verdict (here and in ``dedup_ingest``).
 """
 
 from __future__ import annotations
@@ -28,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from map_reduce_spark.operators.text_rel import doc_toks, tokens_col
+from map_reduce_spark.operators.text_rel import doc_toks, normalized_text, tokens_col
 from map_reduce_spark.plans.transient import ordered_result, transient_persist
 from map_reduce_spark.registry import register
 from map_reduce_spark.sources import (
@@ -135,6 +141,12 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact dedup
 # ---------------------------------------------------------------------------
 
+def _doc_fp(docs: DataFrame) -> DataFrame:
+    """(doc_id, f) md5 fingerprints of a (doc_id, text) frame's
+    normalized text — the key of every exact-dedup index."""
+    return docs.select("doc_id", F.md5(normalized_text()).alias("f"))
+
+
 @session_cached
 def exact_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, f) normalized-md5 fingerprint index, persisted per
@@ -144,9 +156,7 @@ def exact_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a real pipeline and probed by every ingest batch. The
     ``dedup_exact`` QUERY keeps computing it inline (it IS the
     index-builder contract); batch-shaped consumers probe this."""
-    docs = load_spread(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    return docs.select("doc_id", F.md5(norm).alias("f"))
+    return _doc_fp(load_spread(spark, sf_dir, "documents"))
 
 
 @register(
@@ -170,12 +180,11 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     no skew); the window degenerates to a per-group min scan.
     """
     docs = load_spread(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     from pyspark.sql import Window as W
 
     w = W.partitionBy("fingerprint").orderBy("doc_id")
     return (
-        docs.select("doc_id", F.md5(norm).alias("fingerprint"))
+        docs.select("doc_id", F.md5(normalized_text()).alias("fingerprint"))
         .withColumn(
             "is_duplicate",
             F.when(F.row_number().over(w) > 1, F.lit(1)).otherwise(F.lit(0)),
@@ -198,9 +207,14 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     No cross join at any scale; worst case is a hot shingle, which
     AQE skew-split handles (and a frequency cap would bound).
     """
+    return _jaccard_pairs(doc_shingles(spark, sf_dir), spark, sf_dir)
+
+
+def _jaccard_pairs(sh: DataFrame, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Verified Jaccard pairs over a (doc_id, sh) shingle table — the
+    one pair count behind the uncapped and the DF-capped queries."""
     from map_reduce_spark.plans.hints import merge_when_big_bytes
 
-    sh = doc_shingles(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -349,20 +363,7 @@ def dedup_jaccard_df_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_dedup.py``); the oracle replicates the capped
     semantics so the equality here is exact by construction.
     """
-    from map_reduce_spark.plans.hints import merge_when_big_bytes
-
-    rare = capped_shingles(spark, sf_dir)
-    sizes = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = rare.alias("a"), rare.alias("b")
-    common = (
-        # size-gated merge hint: corpus-sized self-join (r12; see
-        # dedup_ngram_jaccard_pairs)
-        merge_when_big_bytes(a, spark, sf_dir, "documents", ("text",))
-        .join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return _verify_jaccard(common, sizes, spark, sf_dir)
+    return _jaccard_pairs(capped_shingles(spark, sf_dir), spark, sf_dir)
 
 
 @session_cached
@@ -388,6 +389,107 @@ def jaccard_pair_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_ngram_jaccard_pairs).
     """
     return dedup_jaccard_df_capped(spark, sf_dir).select("doc_a", "doc_b")
+
+
+# ---------------------------------------------------------------------------
+# Banded LSH: one band generator for MinHash, SimHash and the sign sketch
+# ---------------------------------------------------------------------------
+
+def band_array(vals) -> Column:
+    """``array<struct<band, val>>`` of ``(band id, SQL value)`` pairs.
+
+    One ``F.expr`` over the whole array (r12, guide §1.2 step 2/§7.3):
+    the Column-DSL spelling built 16-80 structs x ~8 py4j round-trips
+    each — measured 3.4 s of sim_knn_lsh's 4.3 s plan construction
+    and ~0.55 s per MinHash plan. The SQL string is the same
+    expression tree, parsed JVM-side in one call; band values
+    verified bit-identical by A/B collect in r12."""
+    return F.expr(
+        "array("
+        + ", ".join(f"named_struct('band', {b}, 'val', {v})" for b, v in vals)
+        + ")"
+    )
+
+
+def bit_bands(col: str, n_bands: int, probe_radius: int = 0) -> Column:
+    """``band_array`` of a NAMED 64-bit column cut into ``n_bands``
+    contiguous bit slices; when 64 does not divide evenly the first
+    ``64 % n_bands`` slices are one bit wider (SimHash's 7 bands are
+    10+6x9 bits; the sign sketch's 16x4 and 4x16 are even).
+
+    ``probe_radius=1`` adds every single-bit perturbation of each band
+    value (multi-probe LSH): a pair whose band values differ by one
+    bit still meets in a bucket. Only the probe/query side pays the
+    (1 + band_bits)x fan-out; the indexed side stays at one row per
+    band — the asymmetry that makes multi-probe affordable at 10^9
+    vectors.
+
+    Band geometry is a TUNABLE per target similarity: many short
+    bands (16x4) maximize recall near the random regime (bit-differ
+    prob approaching 0.5) at the price of selectivity; few long bands
+    (4x16) give ~1000x candidate pruning in the real near-dup regime
+    (cosine >= 0.9, bit-differ prob < 0.1) while keeping per-pair miss
+    probability negligible."""
+    base, rem = divmod(64, n_bands)
+    vals, start = [], 0
+    for b in range(n_bands):
+        width = base + (b < rem)
+        val = (
+            f"(shiftrightunsigned(`{col}`, {start})"
+            f" & CAST({(1 << width) - 1} AS BIGINT))"
+        )
+        flips = [0] + ([1 << j for j in range(width)] if probe_radius >= 1 else [])
+        vals += [(b, f"({val} ^ CAST({m} AS BIGINT))") for m in flips]
+        start += width
+    return band_array(vals)
+
+
+def band_rows(df: DataFrame, bands: Column, *carry) -> DataFrame:
+    """(carried columns..., band, val): one row per element of
+    ``bands``. A carried column is a name or a ``(source, name)``
+    rename."""
+    pairs = [(c, c) if isinstance(c, str) else c for c in carry]
+    return df.select(
+        *[src if src == name else F.col(src).alias(name) for src, name in pairs],
+        F.explode(bands).alias("bs"),
+    ).select(
+        *[name for _, name in pairs],
+        F.col("bs.band").alias("band"),
+        F.col("bs.val").alias("val"),
+    )
+
+
+def _bucket_pairs(
+    banded: DataFrame, spark: SparkSession, sf_dir: str, n_bands: int
+) -> DataFrame:
+    """The ``x``/``y`` bucket self-join of a (doc_id, ..., band, val)
+    frame on (band, val), smaller doc_id on the ``x`` side.
+
+    SIZE-GATED merge hint (r11 unconditional, gated r12): both sides
+    are corpus-sized (docs x n_bands rows), so past the threshold a
+    broadcast is categorically the wrong plan — yet AQE promoted it
+    at sf10 whenever the banded side's compressed shuffle stats dipped
+    under the 64 MB threshold, and the 5M-row driver-side hash build
+    OOM'd a loaded 16 GB heap mid-sweep (it only ever succeeded by
+    heap luck). Sort-merge on (band, val) is the plan a 100 TB corpus
+    runs: zero driver memory, AQE skew-split still applies. The gate
+    (plans/hints.py) prices the banded frame from footer rows x
+    n_bands — honest uncompressed arithmetic, immune to cache-stat
+    underpricing — and leaves genuinely-small corpora to AQE. Pinned
+    by tests/test_plans.py::test_minhash_band_join_never_broadcasts."""
+    from map_reduce_spark.plans.hints import BYTES_PER_LONG_COL, merge_when_big
+
+    x, y = banded.alias("x"), banded.alias("y")
+    return merge_when_big(
+        x, spark, sf_dir, "documents",
+        bytes_per_row=len(banded.columns) * BYTES_PER_LONG_COL,
+        rows_per_table_row=n_bands,
+    ).join(
+        y,
+        (F.col("x.band") == F.col("y.band"))
+        & (F.col("x.val") == F.col("y.val"))
+        & (F.col("x.doc_id") < F.col("y.doc_id")),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -433,58 +535,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring); at true 100 TB scale this is the only affordable path
     and the recall bound is the contract.
     """
-    sigs = minhash_signatures(spark, sf_dir)
-    # One F.expr over the whole band array (r12, guide §1.2 step
-    # 2/§7.3 — the _sketch_bands/_dbl_array_sql convention): the
-    # Column-DSL spelling (16 structs x xxhash64 over 4 cols) cost
-    # ~0.55 s of py4j round-trips per plan construction, measured;
-    # the SQL string is the identical expression tree (same int band
-    # literal, same default-seed xxhash64 over the same columns),
-    # parsed JVM-side in one call. Band signatures verified
-    # bit-identical by A/B collect in r12; oracle green.
-    band_structs = F.expr(
-        "array(" + ", ".join(
-            f"named_struct('band', {b}, 'sig', xxhash64("
-            + ", ".join(f"h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
-            + "))"
-            for b in range(N_BANDS)
-        ) + ")"
+    # band b's value: default-seed xxhash64 over its 4 minhashes
+    rows = range(ROWS_PER_BAND)
+    bands = band_array(
+        (b, "xxhash64(" + ", ".join(f"h{b * ROWS_PER_BAND + r}" for r in rows) + ")")
+        for b in range(N_BANDS)
     )
-    banded = sigs.select("doc_id", F.explode(band_structs).alias("bs")).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    from map_reduce_spark.plans.hints import BYTES_PER_LONG_COL, merge_when_big, merge_when_big_bytes
-
-    x, y = banded.alias("x"), banded.alias("y")
+    banded = band_rows(minhash_signatures(spark, sf_dir), bands, "doc_id")
     candidates = (
-        # SIZE-GATED merge hint (r11 unconditional, gated r12): both
-        # sides of the bucket self-join are corpus-sized (docs x
-        # N_BANDS rows), so past the threshold a broadcast is
-        # categorically the wrong plan — yet AQE promoted it at sf10
-        # whenever the banded side's compressed shuffle stats dipped
-        # under the 64 MB threshold, and the 5M-row driver-side hash
-        # build OOM'd a loaded 16 GB heap mid-sweep (it only ever
-        # succeeded by heap luck). Sort-merge on (band, sig) is the
-        # plan a 100 TB corpus runs: zero driver memory, AQE
-        # skew-split still applies. The gate (plans/hints.py) prices
-        # the banded frame from footer rows x N_BANDS — honest
-        # uncompressed arithmetic, immune to cache-stat underpricing
-        # — and leaves genuinely-small corpora to AQE. Pinned by
-        # tests/test_plans.py::test_minhash_band_join_never_broadcasts.
-        merge_when_big(
-            x, spark, sf_dir, "documents",
-            bytes_per_row=3 * BYTES_PER_LONG_COL,  # (doc_id, band, sig)
-            rows_per_table_row=N_BANDS,
-        )
-        .join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
+        _bucket_pairs(banded, spark, sf_dir, N_BANDS)
         .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
+    from map_reduce_spark.plans.hints import merge_when_big_bytes
 
     # Exact verification of candidates only (candidate set is tiny
     # relative to n^2, so this join is cheap). The shingle sides are
@@ -569,17 +632,6 @@ SIMHASH_HAMMING_MAX = 6
 _SIMHASH_N_BANDS = SIMHASH_HAMMING_MAX + 1
 
 
-def _simhash_band_bounds() -> list[tuple[int, int]]:
-    """(start_bit, width) for each of the 7 bands covering 64 bits."""
-    base, rem = divmod(64, _SIMHASH_N_BANDS)
-    bounds, start = [], 0
-    for b in range(_SIMHASH_N_BANDS):
-        width = base + (1 if b < rem else 0)
-        bounds.append((start, width))
-        start += width
-    return bounds
-
-
 @register("dedup_simhash_pairs", oracle_sql=None)
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: ALL pairs at hamming distance <= 6.
@@ -592,44 +644,15 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently dropping hamming-4..6 pairs). Exact hamming verification
     filters the candidates; never a cross join.
     """
-    fps = simhash_fingerprints(spark, sf_dir)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), start)
-                .bitwiseAND(F.lit((1 << width) - 1).cast("long"))
-                .alias("val"),
-            )
-            for b, (start, width) in enumerate(_simhash_band_bounds())
-        ]
-    )
-    banded = fps.select("doc_id", "simhash", F.explode(bands).alias("bs")).select(
+    banded = band_rows(
+        simhash_fingerprints(spark, sf_dir),
+        bit_bands("simhash", _SIMHASH_N_BANDS),
         "doc_id",
         "simhash",
-        F.col("bs.band").alias("band"),
-        F.col("bs.val").alias("val"),
     )
-    from map_reduce_spark.plans.hints import BYTES_PER_LONG_COL, merge_when_big
-
-    x, y = banded.alias("x"), banded.alias("y")
     hamming = F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash")))
     return (
-        # size-gated merge hint: same corpus-sized bucket self-join as
-        # the minhash band join (docs x 7 band rows) — broadcast is
-        # never the right side past the threshold (r12; see
-        # dedup_minhash_lsh).
-        merge_when_big(
-            x, spark, sf_dir, "documents",
-            bytes_per_row=4 * BYTES_PER_LONG_COL,  # (doc_id, simhash, band, val)
-            rows_per_table_row=_SIMHASH_N_BANDS,
-        )
-        .join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.val") == F.col("y.val"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
+        _bucket_pairs(banded, spark, sf_dir, _SIMHASH_N_BANDS)
         .select(
             F.col("x.doc_id").alias("doc_a"),
             F.col("y.doc_id").alias("doc_b"),
@@ -695,6 +718,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cos", dot_nc("dva", "dvb") / (F.col("na") * F.col("nb")))
         .filter(F.col("cos") >= COSINE_DUP_TAU)
     )
+    return _keepers(pairs)
+
+
+def _keepers(pairs: DataFrame) -> DataFrame:
+    """(dup_id, keeper_id, keeper_score, n_near_dups) from verified
+    (ia < ib, cos) pairs: each ``ib`` is a duplicate of its lowest-id
+    near neighbor — the keeper rule of every embedding dedup entry."""
     return (
         pairs.groupBy(F.col("ib").alias("dup_id"))
         .agg(
@@ -764,19 +794,24 @@ def _cc_labels_cte() -> tuple[str, str]:
     l0 AS MATERIALIZED (SELECT DISTINCT u AS doc_id, u AS lbl FROM edges)
 """
     )
-    prev = "l0"
+    return sql + _label_rounds("doc_id"), f"l{CC_MAX_ITERS}"
+
+
+def _label_rounds(id_col: str) -> str:
+    """CTEs ``l1``..``l{CC_MAX_ITERS}``: the unrolled min-label rounds
+    over ``edges`` (u, v) from ``l0`` (id_col, lbl)."""
+    sql = ""
     for i in range(1, CC_MAX_ITERS + 1):
         sql += f""",
     l{i} AS MATERIALIZED (
-        SELECT n.doc_id,
+        SELECT n.{id_col},
                least(n.lbl, coalesce(min(l.lbl), n.lbl)) AS lbl
-        FROM {prev} n
-        LEFT JOIN edges e ON e.u = n.doc_id
-        LEFT JOIN {prev} l ON l.doc_id = e.v
-        GROUP BY n.doc_id, n.lbl)
+        FROM l{i - 1} n
+        LEFT JOIN edges e ON e.u = n.{id_col}
+        LEFT JOIN l{i - 1} l ON l.{id_col} = e.v
+        GROUP BY n.{id_col}, n.lbl)
 """
-        prev = f"l{i}"
-    return sql, prev
+    return sql
 
 
 def _cc_oracle_sql() -> str:
@@ -921,9 +956,7 @@ def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quadratic bound is exactly the point — and the oracle states
     the same union, so the gate certifies the contract, not an
     approximation of the uncapped one."""
-    docs = load_spread(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    fp = docs.select("doc_id", F.md5(norm).alias("f"))
+    fp = _doc_fp(load_spread(spark, sf_dir, "documents"))
     groups = (
         fp.groupBy("f")
         .agg(F.min("doc_id").alias("root"), F.count(F.lit(1)).alias("c"))
@@ -1066,8 +1099,7 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 HI_TAU = 0.95  # real-corpus near-dup threshold (fixture planting below)
 _PLANT_OFFSET = 1_000_000
 _PLANT_EPS = 0.01
-_HI_N_BANDS = 4
-_HI_BAND_BITS = 16
+_HI_N_BANDS = 4  # x 16 bits
 
 @session_cached(level=StorageLevel.DISK_ONLY)
 def _augmented_sketched_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1120,21 +1152,13 @@ def embedding_hi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components query both consume it, so the band join runs
     once per (session, corpus). Plan-shape notes on
     ``dedup_embedding_lsh_hi``."""
-    from map_reduce_spark.functions.similarity import _sketch_bands, dot_nc
+    from map_reduce_spark.functions.similarity import dot_nc
 
     aug = _augmented_sketched_embeddings(spark, sf_dir)
-    index_bands = aug.select(
-        F.col("vec_id").alias("ib"),
-        F.explode(
-            _sketch_bands("sketch", 0, _HI_N_BANDS, _HI_BAND_BITS)
-        ).alias("bs"),
-    ).select("ib", F.col("bs.band").alias("band"), F.col("bs.val").alias("val"))
-    probe_bands = aug.select(
-        F.col("vec_id").alias("ia"),
-        F.explode(
-            _sketch_bands("sketch", 1, _HI_N_BANDS, _HI_BAND_BITS)
-        ).alias("bs"),
-    ).select("ia", F.col("bs.band").alias("band"), F.col("bs.val").alias("val"))
+    index_bands = band_rows(aug, bit_bands("sketch", _HI_N_BANDS), ("vec_id", "ib"))
+    probe_bands = band_rows(
+        aug, bit_bands("sketch", _HI_N_BANDS, probe_radius=1), ("vec_id", "ia")
+    )
     from map_reduce_spark.plans.hints import BYTES_PER_LONG_COL, merge_when_big
 
     cand = (
@@ -1210,7 +1234,7 @@ def dedup_embedding_lsh_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune (a cosine-0.4 pair's sketch bits differ with p~0.37, barely
     below random's 0.5 — the banding degenerates to all-pairs). THIS
     query shows the same pipeline where real dedup lives (cosine >=
-    0.9): with {_HI_N_BANDS} bands x {_HI_BAND_BITS} bits and
+    0.9): with {_HI_N_BANDS} bands x 16 bits and
     radius-1 multi-probe, a random pair collides with p ~1e-3 (a
     ~1000x candidate cut) while a planted pair (bit-differ p~0.006)
     is missed with p ~3e-10 — so the verified output still equals the
@@ -1219,16 +1243,7 @@ def dedup_embedding_lsh_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shape (sketch -> band equi-join -> verify -> keeper
     reduction) is identical and 10^9-vector-partitionable.
     """
-    pairs = embedding_hi_pairs(spark, sf_dir)
-    return (
-        pairs.groupBy(F.col("ib").alias("dup_id"))
-        .agg(
-            F.min("ia").alias("keeper_id"),
-            F.round(F.min_by("cos", "ia"), 6).alias("keeper_score"),
-            F.count(F.lit(1)).alias("n_near_dups"),
-        )
-        .orderBy("dup_id")
-    )
+    return _keepers(embedding_hi_pairs(spark, sf_dir))
 
 
 def _semantic_cc_oracle_sql() -> str:
@@ -1252,26 +1267,15 @@ def _semantic_cc_oracle_sql() -> str:
         SELECT vb AS u, va AS v FROM pairs),
     l0 AS MATERIALIZED (SELECT DISTINCT u AS vec_id, u AS lbl FROM edges)
 """
-    prev = "l0"
-    for i in range(1, CC_MAX_ITERS + 1):
-        sql += f""",
-    l{i} AS MATERIALIZED (
-        SELECT n.vec_id,
-               least(n.lbl, coalesce(min(l.lbl), n.lbl)) AS lbl
-        FROM {prev} n
-        LEFT JOIN edges e ON e.u = n.vec_id
-        LEFT JOIN {prev} l ON l.vec_id = e.v
-        GROUP BY n.vec_id, n.lbl)
-"""
-        prev = f"l{i}"
     return (
         sql
+        + _label_rounds("vec_id")
         + f"""
     SELECT lbl AS component_id,
            count(*) AS n_members,
            min(vec_id) AS keeper_vec,
            max(vec_id) AS max_vec
-    FROM {prev}
+    FROM l{CC_MAX_ITERS}
     GROUP BY lbl
     ORDER BY component_id
     """
@@ -1440,16 +1444,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    pairs = cand.mapInPandas(gemm, "ia long, ib long, cos double")
-    return (
-        pairs.groupBy(F.col("ib").alias("dup_id"))
-        .agg(
-            F.min("ia").alias("keeper_id"),
-            F.round(F.min_by("cos", "ia"), 6).alias("keeper_score"),
-            F.count(F.lit(1)).alias("n_near_dups"),
-        )
-        .orderBy("dup_id")
-    )
+    return _keepers(cand.mapInPandas(gemm, "ia long, ib long, cos double"))
 
 
 # Exact-substring dedup window length, in tokens. Real pipelines use
@@ -1646,6 +1641,88 @@ _INCREMENTAL_SQL = (
 )
 
 
+# The verdict chain below is shared by ``dedup_incremental_batch``,
+# ``dedup_ingest.incremental_verdicts`` (the from-scratch reference)
+# and ``dedup_ingest.DedupIngestIndex.probe`` (the maintained index),
+# so the three paths cannot drift. Each caller keeps its own ordering.
+
+def _exact_matches(fp_inc: DataFrame, fp_ex: DataFrame) -> DataFrame:
+    """(doc_id, exact_match): the lowest existing doc_id sharing each
+    incoming doc's fingerprint."""
+    return (
+        fp_inc.alias("i")
+        .join(fp_ex.alias("e"), F.col("i.f") == F.col("e.f"))
+        .groupBy(F.col("i.doc_id").alias("doc_id"))
+        .agg(F.min(F.col("e.doc_id")).alias("exact_match"))
+    )
+
+
+def _hot_shingles(sh_ex: DataFrame) -> DataFrame:
+    """(sh): shingles of the EXISTING side above SHINGLE_DF_CAP."""
+    return (
+        sh_ex.groupBy("sh")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > SHINGLE_DF_CAP)
+        .select("sh")
+    )
+
+
+def _pair_common(rare_inc: DataFrame, rare_ex: DataFrame) -> DataFrame:
+    """(inc_doc, ex_doc, n_common): shared rare shingles of every
+    incoming x existing pair — never existing x existing."""
+    return (
+        rare_inc.alias("i")
+        .join(rare_ex.alias("e"), F.col("i.sh") == F.col("e.sh"))
+        .groupBy(
+            F.col("i.doc_id").alias("inc_doc"), F.col("e.doc_id").alias("ex_doc")
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
+def _best_match(common: DataFrame, ni: DataFrame, ne: DataFrame) -> DataFrame:
+    """(inc_doc, ex_doc, jaccard): threshold, round, then the
+    jaccard-DESC, doc-ASC best match per incoming doc. ``ni``/``ne``
+    are the (inc_doc, ni)/(ex_doc, ne) capped shingle counts."""
+    from pyspark.sql import Window as W
+
+    jac = F.col("n_common") * 1.0 / (F.col("ni") + F.col("ne") - F.col("n_common"))
+    return (
+        common.join(ni, "inc_doc")
+        .join(ne, "ex_doc")
+        .filter(jac >= JACCARD_THRESHOLD)
+        .select("inc_doc", "ex_doc", F.round(jac, 6).alias("jaccard"))
+        .withColumn(
+            "pos",
+            F.row_number().over(
+                W.partitionBy("inc_doc").orderBy(
+                    F.col("jaccard").desc(), F.col("ex_doc").asc()
+                )
+            ),
+        )
+        .filter(F.col("pos") == 1)
+        .drop("pos")
+    )
+
+
+def _verdicts(batch_ids: DataFrame, exact: DataFrame, best: DataFrame) -> DataFrame:
+    """(doc_id, verdict, match_doc, jaccard), unordered: an exact match
+    wins over a near match, which wins over 'keep'."""
+    return (
+        batch_ids.join(exact, "doc_id", "left")
+        .join(best.withColumnRenamed("inc_doc", "doc_id"), "doc_id", "left")
+        .select(
+            "doc_id",
+            F.when(F.col("exact_match").isNotNull(), "exact_dup")
+            .when(F.col("ex_doc").isNotNull(), "near_dup")
+            .otherwise("keep")
+            .alias("verdict"),
+            F.coalesce("exact_match", "ex_doc").alias("match_doc"),
+            F.when(F.col("exact_match").isNull(), F.col("jaccard")).alias("jaccard"),
+        )
+    )
+
+
 @register("dedup_incremental_batch", oracle_sql=_INCREMENTAL_SQL)
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingest dedup: each INCOMING document (doc_id %
@@ -1678,85 +1755,32 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stores. Same expression, same rows (exact_fingerprints is the
     # dedup_exact normalization over the same spread frame).
     fp = exact_fingerprints(spark, sf_dir)
-    exact = (
-        fp.filter(is_inc)
-        .alias("i")
-        .join(fp.filter(~is_inc).alias("e"), F.col("i.f") == F.col("e.f"))
-        .groupBy(F.col("i.doc_id").alias("doc_id"))
-        .agg(F.min(F.col("e.doc_id")).alias("exact_match"))
-    )
-
+    exact = _exact_matches(fp.filter(is_inc), fp.filter(~is_inc))
     sh = doc_shingles(spark, sf_dir)
-    hot = (
-        sh.filter(~is_inc)
-        .groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > SHINGLE_DF_CAP)
-        .select("sh")
-    )
     # r12 (guide §2.4 — shared subplans): ``rare`` feeds THREE
     # consumers (sizes, both arms of the incoming x existing join);
     # un-persisted, each consumer re-ran the hot-shingle anti-join
     # over the cached shingle table and re-wrote its own exchange —
     # profiled as four near-identical 32-task stages per run. One
     # transient cache runs that subplan once.
-    rare = transient_persist(sh.join(hot, "sh", "left_anti"))
+    rare = transient_persist(sh.join(_hot_shingles(sh.filter(~is_inc)), "sh", "left_anti"))
     sizes = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     from map_reduce_spark.plans.hints import merge_when_big_bytes
 
-    common = (
-        # size-gated merge hint on the existing-corpus side: rare
-        # derives from the session-cached shingle table whose
-        # compressed cache stats can dip under the broadcast
-        # threshold (r12; see dedup_minhash_lsh) — the existing side
-        # is corpus-sized, never broadcastable past the threshold
-        rare.filter(is_inc)
-        .alias("i")
-        .join(
-            merge_when_big_bytes(
-                rare.filter(~is_inc), spark, sf_dir, "documents", ("text",)
-            ).alias("e"),
-            F.col("i.sh") == F.col("e.sh"),
-        )
-        .groupBy(
-            F.col("i.doc_id").alias("inc_doc"), F.col("e.doc_id").alias("ex_doc")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    # size-gated merge hint on the existing-corpus side: rare derives
+    # from the session-cached shingle table whose compressed cache
+    # stats can dip under the broadcast threshold (r12; see
+    # dedup_minhash_lsh) — the existing side is corpus-sized, never
+    # broadcastable past the threshold
+    common = _pair_common(
+        rare.filter(is_inc),
+        merge_when_big_bytes(rare.filter(~is_inc), spark, sf_dir, "documents", ("text",)),
     )
-    si = sizes.select(F.col("doc_id").alias("inc_doc"), F.col("n").alias("ni"))
-    se = sizes.select(F.col("doc_id").alias("ex_doc"), F.col("n").alias("ne"))
-    jac = F.col("n_common") * 1.0 / (F.col("ni") + F.col("ne") - F.col("n_common"))
-    from pyspark.sql import Window as W
-
-    best = (
-        common.join(si, "inc_doc")
-        .join(se, "ex_doc")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("inc_doc", "ex_doc", F.round(jac, 6).alias("jaccard"))
-        .withColumn(
-            "pos",
-            F.row_number().over(
-                W.partitionBy("inc_doc").orderBy(
-                    F.col("jaccard").desc(), F.col("ex_doc").asc()
-                )
-            ),
-        )
-        .filter(F.col("pos") == 1)
-        .drop("pos")
+    best = _best_match(
+        common,
+        sizes.select(F.col("doc_id").alias("inc_doc"), F.col("n").alias("ni")),
+        sizes.select(F.col("doc_id").alias("ex_doc"), F.col("n").alias("ne")),
     )
-    return (
-        docs.filter(is_inc)
-        .select("doc_id")
-        .join(exact, "doc_id", "left")
-        .join(best.withColumnRenamed("inc_doc", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("exact_match").isNotNull(), "exact_dup")
-            .when(F.col("ex_doc").isNotNull(), "near_dup")
-            .otherwise("keep")
-            .alias("verdict"),
-            F.coalesce("exact_match", "ex_doc").alias("match_doc"),
-            F.when(F.col("exact_match").isNull(), F.col("jaccard")).alias("jaccard"),
-        )
-        .transform(ordered_result, "doc_id")
+    return _verdicts(docs.filter(is_inc).select("doc_id"), exact, best).transform(
+        ordered_result, "doc_id"
     )

@@ -40,11 +40,15 @@ INGEST_LADDER_r09.json):
   non-batch-proportional term; eliminating it takes a point-lookup
   store, which is outside Spark's storage model.
 
-Verdict semantics are IDENTICAL to ``dedup_incremental_batch`` (same
-constants, same tiebreaks, same rounding): pytest runs a multi-batch
-differential against ``incremental_verdicts`` — the from-scratch
-reference factored here — and ties that reference back to the
-registered builder on its own MOD split.
+Verdict semantics are IDENTICAL to ``dedup_incremental_batch``: the
+exact-match, pair-count, best-match and verdict steps are dedup.py's
+``_exact_matches``/``_pair_common``/``_best_match``/``_verdicts``,
+called by the registered builder, by ``incremental_verdicts`` (the
+from-scratch reference kept here) and by ``DedupIngestIndex.probe``.
+pytest runs a multi-batch differential of the maintained index
+against that reference and ties the reference back to the registered
+builder on its own MOD split; the DuckDB oracle checks the registered
+builder independently.
 
 Eagerness contract: ``ingest`` is necessarily EAGER (it materializes
 the verdicts BEFORE appending the batch to the index — laziness would
@@ -56,12 +60,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from map_reduce_spark.functions.dedup import (
     _SHINGLE_PREFIX_SQL,
     JACCARD_THRESHOLD,
     SHINGLE_DF_CAP,
+    _best_match,
+    _doc_fp,
+    _exact_matches,
+    _hot_shingles,
+    _pair_common,
+    _verdicts,
     shingles_col,
 )
 from map_reduce_spark.operators.text_rel import tokens_col
@@ -78,65 +87,6 @@ def _doc_sh(docs: DataFrame) -> DataFrame:
     )
 
 
-def _doc_fp(docs: DataFrame) -> DataFrame:
-    """(doc_id, f) normalized-text md5 fingerprints (the dedup_exact
-    normalization: lower, whitespace-collapse, trim)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    return docs.select("doc_id", F.md5(norm).alias("f"))
-
-
-def _verdicts(
-    batch_ids: DataFrame,
-    exact: DataFrame,
-    best: DataFrame,
-) -> DataFrame:
-    """Assemble the (doc_id, verdict, match_doc, jaccard) result —
-    the exact select of dedup_incremental_batch."""
-    return (
-        batch_ids.join(exact, "doc_id", "left")
-        .join(best.withColumnRenamed("inc_doc", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("exact_match").isNotNull(), "exact_dup")
-            .when(F.col("ex_doc").isNotNull(), "near_dup")
-            .otherwise("keep")
-            .alias("verdict"),
-            F.coalesce("exact_match", "ex_doc").alias("match_doc"),
-            F.when(F.col("exact_match").isNull(), F.col("jaccard")).alias(
-                "jaccard"
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _best_match(
-    common: DataFrame, ni: DataFrame, ne: DataFrame
-) -> DataFrame:
-    """(inc_doc, ex_doc, jaccard): threshold + round + the
-    jaccard-DESC, doc-ASC best-match rule, shared verbatim with the
-    registered builder so the two paths cannot drift."""
-    jac = F.col("n_common") * 1.0 / (
-        F.col("ni") + F.col("ne") - F.col("n_common")
-    )
-    return (
-        common.join(ni, "inc_doc")
-        .join(ne, "ex_doc")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("inc_doc", "ex_doc", F.round(jac, 6).alias("jaccard"))
-        .withColumn(
-            "pos",
-            F.row_number().over(
-                W.partitionBy("inc_doc").orderBy(
-                    F.col("jaccard").desc(), F.col("ex_doc").asc()
-                )
-            ),
-        )
-        .filter(F.col("pos") == 1)
-        .drop("pos")
-    )
-
-
 def incremental_verdicts(existing: DataFrame, batch: DataFrame) -> DataFrame:
     """From-scratch reference: the dedup_incremental_batch semantics
     over ARBITRARY (doc_id, text) frames instead of the registered
@@ -144,20 +94,9 @@ def incremental_verdicts(existing: DataFrame, batch: DataFrame) -> DataFrame:
     The maintained index's pytest differential runs against this, and
     a second test ties this back to the registered builder on the MOD
     split, so all three paths pin one contract."""
-    fp_e, fp_b = _doc_fp(existing), _doc_fp(batch)
-    exact = (
-        fp_b.alias("i")
-        .join(fp_e.alias("e"), F.col("i.f") == F.col("e.f"))
-        .groupBy(F.col("i.doc_id").alias("doc_id"))
-        .agg(F.min(F.col("e.doc_id")).alias("exact_match"))
-    )
+    exact = _exact_matches(_doc_fp(batch), _doc_fp(existing))
     sh_e, sh_b = _doc_sh(existing), _doc_sh(batch)
-    hot = (
-        sh_e.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > SHINGLE_DF_CAP)
-        .select("sh")
-    )
+    hot = _hot_shingles(sh_e)
     rare_e = sh_e.join(hot, "sh", "left_anti")
     rare_b = sh_b.join(hot, "sh", "left_anti")
     ni = rare_b.groupBy(F.col("doc_id").alias("inc_doc")).agg(
@@ -166,17 +105,8 @@ def incremental_verdicts(existing: DataFrame, batch: DataFrame) -> DataFrame:
     ne = rare_e.groupBy(F.col("doc_id").alias("ex_doc")).agg(
         F.count(F.lit(1)).alias("ne")
     )
-    common = (
-        rare_b.alias("i")
-        .join(rare_e.alias("e"), F.col("i.sh") == F.col("e.sh"))
-        .groupBy(
-            F.col("i.doc_id").alias("inc_doc"),
-            F.col("e.doc_id").alias("ex_doc"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    best = _best_match(common, ni, ne)
-    return _verdicts(batch.select("doc_id"), exact, best)
+    best = _best_match(_pair_common(rare_b, rare_e), ni, ne)
+    return _verdicts(batch.select("doc_id"), exact, best).orderBy("doc_id")
 
 
 class DedupIngestIndex(BucketedState):
@@ -300,13 +230,7 @@ class DedupIngestIndex(BucketedState):
             .filter(F.col("df") > SHINGLE_DF_CAP)
             .select("sh")
         )
-        exact = (
-            _doc_fp(batch)
-            .alias("i")
-            .join(fp_e.alias("e"), F.col("i.f") == F.col("e.f"))
-            .groupBy(F.col("i.doc_id").alias("doc_id"))
-            .agg(F.min(F.col("e.doc_id")).alias("exact_match"))
-        )
+        exact = _exact_matches(_doc_fp(batch), fp_e)
         sh_b = _doc_sh(batch)
         rare_b = sh_b.join(hot, "sh", "left_anti")
         ni = rare_b.groupBy(F.col("doc_id").alias("inc_doc")).agg(
@@ -315,16 +239,7 @@ class DedupIngestIndex(BucketedState):
         # Candidate generation: batch shingles probe the bucketed
         # postings — the index side reads in bucket layout (no
         # Exchange, pinned), only the batch side shuffles.
-        rare_e = post.join(hot, "sh", "left_anti")
-        common = (
-            rare_b.alias("i")
-            .join(rare_e.alias("e"), F.col("i.sh") == F.col("e.sh"))
-            .groupBy(
-                F.col("i.doc_id").alias("inc_doc"),
-                F.col("e.doc_id").alias("ex_doc"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
+        common = _pair_common(rare_b, post.join(hot, "sh", "left_anti"))
         # Candidate sizes: ne is needed only for docs that share a
         # rare shingle with the batch (bounded by batch posting mass x
         # SHINGLE_DF_CAP) — a broadcast semi-join restricts the
@@ -338,7 +253,7 @@ class DedupIngestIndex(BucketedState):
             .agg(F.count(F.lit(1)).alias("ne"))
         )
         best = _best_match(common, ni, ne)
-        return _verdicts(batch.select("doc_id"), exact, best)
+        return _verdicts(batch.select("doc_id"), exact, best).orderBy("doc_id")
 
     def ingest(self, batch: DataFrame) -> DataFrame:
         """Probe + maintain: materializes the batch's verdicts to the

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from map_reduce_spark.operators.text_rel import TOKEN_SPLIT_RE, doc_toks, tokens_col
+from map_reduce_spark.operators.text_rel import TOKEN_SPLIT_RE, doc_toks, normalized_text, tokens_col
 from map_reduce_spark.plans.transient import ordered_result
 from map_reduce_spark.registry import register
 from map_reduce_spark.sources import load_spread, load_table
@@ -638,13 +638,12 @@ def doc_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_spark.functions.text import split_bucket_col
 
     docs = doc_toks(spark, sf_dir)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     w = W.partitionBy("fingerprint").orderBy("doc_id")
     base = docs.select(
         "doc_id",
         F.size("toks").alias("n_tokens"),
         split_bucket_col().alias("bucket"),
-        F.md5(norm).alias("fingerprint"),
+        F.md5(normalized_text()).alias("fingerprint"),
     ).withColumn(
         "exact_dup", F.when(F.row_number().over(w) > 1, F.lit(1)).otherwise(F.lit(0))
     )

@@ -380,8 +380,6 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_PLANES = 64  # sign-sketch width in bits
 N_SKETCH_BANDS = 16  # 16 bands x 4 bits
-SKETCH_BAND_BITS = N_PLANES // N_SKETCH_BANDS
-SKETCH_BAND_MASK = (1 << SKETCH_BAND_BITS) - 1
 HAMMING_MAX = 29  # full-sketch prefilter on candidate pairs (cheap bit_count)
 DIM = 64
 
@@ -408,55 +406,6 @@ def _sketch(dv_col: str) -> Column:
     from map_reduce_spark.functions.vector_udfs import make_sign_sketch_udf
 
     return make_sign_sketch_udf(_hyperplanes(), N_PLANES)(F.col(dv_col))
-
-
-def _sketch_bands(
-    sketch: str,
-    probe_radius: int = 0,
-    n_bands: int = N_SKETCH_BANDS,
-    band_bits: int = SKETCH_BAND_BITS,
-) -> Column:
-    """``array<struct<band,val>>`` of a NAMED sketch column's band
-    values (``sketch`` is the column name — the expression renders as
-    one SQL string, see the return comment).
-
-    ``probe_radius=1`` adds every single-bit perturbation of each band
-    value (multi-probe LSH): a pair whose band values differ by one
-    bit still meets in a bucket. Only the probe/query side pays the
-    (1 + band_bits)x fan-out; the indexed side stays at one row per
-    band — the asymmetry that makes multi-probe affordable at 10^9
-    vectors.
-
-    Band geometry is a TUNABLE per target similarity: many short
-    bands (16x4) maximize recall near the random regime (bit-differ
-    prob approaching 0.5) at the price of selectivity; few long bands
-    (4x16) give ~1000x candidate pruning in the real near-dup regime
-    (cosine >= 0.9, bit-differ prob < 0.1) while keeping per-pair miss
-    probability negligible.
-    """
-    mask = (1 << band_bits) - 1
-    structs = []
-    for b in range(n_bands):
-        val = (
-            f"(shiftrightunsigned(`{sketch}`, {b * band_bits})"
-            f" & CAST({mask} AS BIGINT))"
-        )
-        masks = [0]
-        if probe_radius >= 1:
-            masks += [1 << j for j in range(band_bits)]
-        for m in masks:
-            structs.append(
-                f"named_struct('band', {b}, 'val',"
-                f" ({val} ^ CAST({m} AS BIGINT)))"
-            )
-    # One F.expr over the whole band array (r12, guide §1.2 step
-    # 2/§7.3): the Column-DSL spelling built 16-80 structs x ~8 py4j
-    # round-trips each — measured 3.4 s of sim_knn_lsh's 4.3 s plan
-    # construction. The SQL string is the identical expression tree
-    # (same int band literal, same BIGINT shifts/masks/xor), parsed
-    # JVM-side in one call; band values verified bit-identical by
-    # A/B collect in r12.
-    return F.expr("array(" + ", ".join(structs) + ")")
 
 
 @session_cached
@@ -506,6 +455,8 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-vector path is sim_knn_ivf / sim_knn_ivfpq, whose coarse
     cells decouple per-probe work from corpus size.
     """
+    from map_reduce_spark.functions.dedup import band_rows, bit_bands
+
     sk = sketched_embeddings(spark, sf_dir)
     probes = probe_side(sk.filter(is_probe()), F.col("sketch").alias("probe_sketch"))
     # Band rows carry the 8-byte full sketch alongside the ids so the
@@ -514,21 +465,14 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Filtering after the distinct (the previous shape) shuffled every
     # banded candidate and rejoined payloads for the ~70% of them the
     # prefilter was about to discard.
-    probe_bands = probes.select(
+    probe_bands = band_rows(
+        probes,
+        bit_bands("probe_sketch", N_SKETCH_BANDS, probe_radius=1),
         "probe_id",
         "probe_sketch",
-        F.explode(_sketch_bands("probe_sketch", probe_radius=1)).alias("bs"),
-    ).select(
-        "probe_id", "probe_sketch",
-        F.col("bs.band").alias("band"), F.col("bs.val").alias("val"),
     )
-    corpus_bands = sk.select(
-        F.col("vec_id").alias("neighbor_id"),
-        "sketch",
-        F.explode(_sketch_bands("sketch")).alias("bs"),
-    ).select(
-        "neighbor_id", "sketch",
-        F.col("bs.band").alias("band"), F.col("bs.val").alias("val"),
+    corpus_bands = band_rows(
+        sk, bit_bands("sketch", N_SKETCH_BANDS), ("vec_id", "neighbor_id"), "sketch"
     )
     cand = (
         corpus_bands.join(F.broadcast(probe_bands), ["band", "val"])

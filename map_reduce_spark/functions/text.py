@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map_reduce_spark.operators.text_rel import doc_toks
+from map_reduce_spark.operators.text_rel import doc_toks, normalized_text
 from map_reduce_spark.plans.transient import ordered_result, transient_persist
 from map_reduce_spark.registry import register
 from map_reduce_spark.sources import load_spread, load_table, session_cached
@@ -181,7 +181,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, usable as a shuffle/bucketing key at any scale.
     """
     docs = load_spread(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalized_text()
     return docs.select(
         "doc_id",
         F.md5(norm).alias("fingerprint"),

@@ -295,7 +295,7 @@ def stats_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread is a near-no-op. Aggregation contents are unchanged.
     """
     # Aggs and report-row structs render as F.expr SQL strings (r12,
-    # guide §1.2 step 2/§7.3 — the _sketch_bands/_dbl_array_sql
+    # guide §1.2 step 2/§7.3 — the dedup.band_array/_dbl_array_sql
     # convention): the Column-DSL spelling cost ~1 s of py4j
     # round-trips per call (~200 calls: 5 agg expressions x ~40
     # columns + 8-field structs), near half this query's warm cost.

@@ -37,6 +37,13 @@ def tokens_col(col: str = "text"):
     )
 
 
+def normalized_text(col: str = "text"):
+    """Lowercased text with whitespace runs collapsed to one space and
+    trimmed — the key under every content fingerprint (each caller
+    puts its own ``md5``/``length`` on top)."""
+    return F.trim(F.regexp_replace(F.lower(F.col(col)), r"\s+", " "))
+
+
 @session_cached
 def doc_toks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table with its token array materialized — the

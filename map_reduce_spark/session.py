@@ -54,9 +54,10 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a
     real cluster leave it unset and submit via spark-submit.
     ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_CPUS`` too, read
-    in the same call, so master and width always agree.
+    in the same call, so master and width always agree. Unset, the
+    variable means the cores this process may run on.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     nshuffle = shuffle_partitions or int(cpus)
 

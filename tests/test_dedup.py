@@ -9,6 +9,7 @@ import pytest
 
 from map_reduce_spark.functions.dedup import (
     JACCARD_THRESHOLD,
+    SIMHASH_HAMMING_MAX,
     dedup_minhash_lsh,
     dedup_ngram_jaccard_pairs,
     dedup_simhash_pairs,
@@ -99,6 +100,28 @@ def test_simhash_recall_on_near_dups(spark, sf_dir, true_pairs):
     }
     found = len(true_pairs & sim_pairs)
     assert found / max(len(true_pairs), 1) >= 0.8
+
+
+def test_simhash_banding_is_complete(spark, sf_dir):
+    """The 7-band join must return EVERY pair at hamming <= 6 (the
+    pigeonhole guarantee), with its exact hamming distance: brute
+    force over all fingerprint pairs is the reference."""
+    fps = sorted(
+        (r.doc_id, r.simhash & (2**64 - 1))
+        for r in simhash_fingerprints(spark, sf_dir).collect()
+    )
+    want = {}
+    for i, (a, fa) in enumerate(fps):
+        for b, fb in fps[i + 1:]:
+            d = (fa ^ fb).bit_count()
+            if d <= SIMHASH_HAMMING_MAX:
+                want[(a, b)] = d
+    got = {
+        (r.doc_a, r.doc_b): r.hamming
+        for r in dedup_simhash_pairs(spark, sf_dir).collect()
+    }
+    assert want
+    assert got == want
 
 
 def test_embedding_lsh_hi_finds_exactly_planted_pairs(spark, sf_dir):

@@ -117,6 +117,9 @@ _CPUS_SCRIPT = """
 import os
 from map_reduce_spark import session
 
+spark = session.get_spark("cpus_unset")
+print(spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions"))
+spark.stop()
 os.environ["SPARK_GRAFT_CPUS"] = "2"
 spark = session.get_spark("cpus_after_import")
 print(spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions"))
@@ -126,7 +129,8 @@ print(spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions"))
 def test_cpus_set_after_import_size_master_and_shuffle_alike(tmp_path):
     """SPARK_GRAFT_CPUS is read once, when get_spark is called: a caller
     that sets it after importing the module gets the same width for
-    ``local[N]`` and for the shuffle partitions."""
+    ``local[N]`` and for the shuffle partitions. Unset, both are the
+    number of cores the process may run on, not a fixed host size."""
     env = {
         k: v
         for k, v in os.environ.items()
@@ -142,4 +146,5 @@ def test_cpus_set_after_import_size_master_and_shuffle_alike(tmp_path):
         timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    assert out.stdout.split() == ["local[2]", "2"], out.stdout
+    n = len(os.sched_getaffinity(0))
+    assert out.stdout.split() == [f"local[{n}]", str(n), "local[2]", "2"], out.stdout

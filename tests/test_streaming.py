@@ -5,6 +5,7 @@ streaming dedup — SURVEY.md §7 Step 4."""
 from __future__ import annotations
 
 import pandas as pd
+from check_oracle import canon
 
 from map_reduce_spark.registry import load_all
 from map_reduce_spark.streaming.events_batch import events_tumbling_1h
@@ -19,13 +20,6 @@ from map_reduce_spark.streaming.streams import (
     streaming_dedup,
     tumbling_counts,
 )
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    if len(df):
-        df = df.sort_values(by=list(df.columns), ignore_index=True)
-    return df.reset_index(drop=True)
 
 
 def test_tumbling_stream_equals_batch(spark, sf_dir):
